@@ -256,15 +256,9 @@ object Bench {
       // labels) are never reused across queries — release them so query
       // N+1 (and run 2 of this query) isn't timed under run 1's cache
       // memory/GC pressure. The deliberately-shared Domain.silverFlat
-      // frame is NOT released (p02/p03/p04 sharing one scan is the
-      // engine's design).
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Sampling.releaseCaches()
-      graft.operators.Quality.releaseCaches()
-      graft.operators.Unigram.releaseCaches()
-      graft.operators.WordPiece.releaseCaches()
-      graft.operators.Graph.releaseCaches()
-      graft.queries.Text.releaseCaches()
+      // frame is a session memo and is NOT released (p02/p03/p04
+      // sharing one scan is the engine's design).
+      graft.util.CacheRegistry.releaseQuery(spark)
       Run(elapsed, ok, withProbe, counts.keySet, gcSec, heapMb)
     }
     val allRuns = scala.collection.mutable.Map.empty[String, Seq[Run]]

@@ -89,7 +89,7 @@ package graft
   * The other exclusion: t24's BENCH_r06 reading of 1.57 s. The
   * r13 repair telemetry confirmed t24's ~3.5 s as genuine (repair ≈
   * suite min across rounds), and the cause is the reference itself:
-  * 1.57 predates the per-query `releaseCaches` calls (landed round 7,
+  * 1.57 predates the per-query cache release (landed round 7,
   * commit 45884eb), so that t24 rode t13's still-cached minhash/shingle
   * frames — t24 REUSES t13's entire pipeline (minhashNearDups →
   * dupClusters) before its own signals join + keep-one window, and its
@@ -119,8 +119,9 @@ object BenchReference {
     "m13" -> 0.76, "p01" -> 0.98, "p02" -> 0.44, "p03" -> 0.13,
     "p04" -> 0.29, "p05" -> 6.6, "p06" -> 1.45, "p07" -> 2.44,
     "p08" -> 1.05, "p09" -> 1.37, "p10" -> 1.04, "p11" -> 1.11,
-    // p15 re-seeded in r19 (the r17 #2 adjudication, P15AB numbers in
-    // OPTIMIZATION_r19.md): 0.73 was a BENCH_r12 artifact of the
+    // p15 re-seeded in r19 (the r17 #2 adjudication, P15AB readings in
+    // plans/r19/p15ab_readings.txt and OPTIMIZATION_r19.md): 0.73 was
+    // a BENCH_r12 artifact of the
     // pre-bucketing whole-table copy-on-write plan; the bucketed CDC
     // upsert's interleaved A/B floor is ~1.4 s steady with the best
     // post-r12 suite reading 1.05 — the plan that exists.
@@ -176,7 +177,7 @@ object BenchReference {
     // r17 first seeds (full-suite warm-protocol sitting, zero flags:
     // 220.15 s / 190 queries, median ratio 1.13); p07b RE-seeded to the
     // same sitting's 5.38 — the gold fan-out persist removal
-    // (GoldFanoutAB A/B) made the old write-bound floor beatable
+    // (gold fan-out A/B, SURVEY.md) made the old write-bound floor beatable
     "t77" -> 1.04, "t78" -> 0.37,
     // r17 shingle-expression re-seeds (codegen'd graft_shingles
     // replaced the interpreted four-HOF construction chain — the

@@ -60,18 +60,19 @@ object GraftSession {
 
   /** Session-close backstop for the engine's memoized/persisted frames
     * (ADVICE r14): a long-lived driver that never calls
-    * `Domain.clearCache` itself would otherwise keep the operator cache
-    * registries (e.g. triangleCounts' DISK_ONLY edge persist) and the
-    * memoization maps pinned for the JVM lifetime after the session
-    * stops. Frames that can no longer be unpersisted post-stop are
-    * skipped by the release hooks; the maps still drop their session
-    * keys. Sessions built directly from [[configure]] should call this
-    * once after `getOrCreate()` (or call `Domain.clearCache` on their
-    * own schedule). */
+    * `CacheRegistry.release` itself would otherwise keep its sessions'
+    * tracked frames (e.g. triangleCounts' DISK_ONLY edge persist) and
+    * memos pinned for the JVM lifetime after the context stops. At
+    * application end this releases every session of a stopped context;
+    * frames that can no longer be unpersisted post-stop are skipped,
+    * and the registry still drops their sessions. Sessions built
+    * directly from [[configure]] should call this once after
+    * `getOrCreate()` (or call `CacheRegistry.release` on their own
+    * schedule). */
   def installCacheBackstop(spark: SparkSession): Unit =
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onApplicationEnd(
           e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-        try graft.queries.Domain.clearCache() catch { case _: Throwable => () }
+        graft.util.CacheRegistry.releaseStopped()
     })
 }

@@ -166,7 +166,8 @@ object Pipeline {
     // silver → gold: the silver scan fans out to 7 outputs UNCACHED —
     // each gold table re-reads the parquet with its OWN pruned column
     // subset, which beats materializing the full-width frame once
-    // (r17 A/B, tools/GoldFanoutAB: at 100× sf0.1 no-persist reads
+    // (r17 A/B, SURVEY.md; the GoldFanoutAB harness is at commit
+    // 1451c40: at 100× sf0.1 no-persist reads
     // 17.9–23.9 s / GC 0.2–0.5 s vs MEMORY_AND_DISK 41.8–49.4 s /
     // GC 1.3–2.1 s and ~33 GB transient residency; DISK_ONLY sits
     // between at 33–44 s. At sf0.1 all three tie at 2.2–2.5 s — the

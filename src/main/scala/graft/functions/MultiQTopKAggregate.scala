@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * before the dot ever runs, and that per-pair row assembly is
   * dimension-INDEPENDENT overhead — measured at d=512/Q=100/128k
   * vectors it dominated the flops so thoroughly that an 8× flop cut
-  * bought only ~2× wall (tools/WideEmb, SURVEY §8.-9). Here no joined
+  * bought only ~2× wall (SURVEY §8.-9, WideEmb at commit 1451c40). Here no joined
   * row ever exists: the aggregate reads each corpus row once, runs the
   * Q dot products over primitive arrays, and only Q·k-element heap
   * buffers cross the shuffle (ObjectHashAggregate partial → final, the

@@ -29,17 +29,6 @@ object Corpus {
     "supplier" -> "s_suppkey", "documents" -> "doc_id",
     "embeddings" -> "vec_id", "events" -> "user_id")
 
-  // one planning pass per (session, dir, table) to learn the scan's split
-  // count; the decision is memoized so later queries skip it
-  private val splitCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Boolean]
-
-  /** Drops the memoized split decisions — for long-lived drivers that
-    * stop/replace sessions (a stopped session's map keys would otherwise
-    * pin it for the JVM lifetime). [[graft.queries.Domain.clearCache]]
-    * calls through here. */
-  def clearCache(): Unit = splitCache.clear()
-
   /** A scan over one small single-row-group file yields ONE split — and no
     * scan-time knob can split it further, so every per-row-heavy stage
     * (decimal aggregation, JSON extraction, shingling) would run on one
@@ -54,8 +43,11 @@ object Corpus {
     rebalanceKey.get(name) match {
       case Some(k) =>
         val p = spark.sparkContext.defaultParallelism
-        val need = splitCache.getOrElseUpdate((spark, dir, name),
-          df.rdd.getNumPartitions < p)
+        // one planning pass per (session, dir, table) to learn the scan's
+        // split count; the decision is a session memo so later queries
+        // skip it
+        val need = graft.util.CacheRegistry.memo(spark, ("split", dir, name))(
+          df.rdd.getNumPartitions < p)(_ => ())
         if (need) df.repartition(p, col(k)) else df
       case None => df
     }

@@ -25,14 +25,9 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  // Persisted intermediates are created per call (no memoization); see
-  // graft.util.CacheRegistry for the lifecycle.
-  private val caches = new graft.util.CacheRegistry
-  private def tracked(df: DataFrame): DataFrame = caches.track(df)
-
-
-  /** Unpersists every cache created by the near-dup operators. */
-  def releaseCaches(): Unit = caches.releaseAll()
+  // Persisted intermediates are created per call (no memoization) and
+  // owned by the session's query scope; see graft.util.CacheRegistry.
+  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
 
   /** One row per doc_id with a DETERMINISTIC text pick (min). Replaces
     * `dropDuplicates("doc_id")` in the index write/probe paths:
@@ -814,7 +809,7 @@ object Dedup {
     // cacheIntermediates=false for callers that probe repeatedly in one
     // JVM (a streaming micro-batch sink): the batch-side explode is cheap
     // to recompute and per-epoch persists would accumulate in the
-    // registry until releaseCaches
+    // registry until the session's next releaseQuery
     // uniqueById: an at-least-once source can replay a record INTO
     // one batch (same doc_id twice); per-doc shingles are unique by
     // construction, but a duplicated probe row would double every

@@ -9,14 +9,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Graph {
 
-  private val caches = new graft.util.CacheRegistry
-
-  /** Releases the edge-sized persists registered by [[triangleCounts]]
-    * — wired into the Bench per-query cleanup and
-    * [[graft.queries.Domain.clearCache]]. Callers must materialize the
-    * returned frame before releasing (Verify/Bench always do). */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** PageRank (Brin & Page 1998) over a directed edge list, a FIXED
     * number of power iterations from the uniform start:
     *
@@ -186,8 +178,8 @@ object Graph {
       .select(col("src").as("x"), col("v"), col("w"))
     val tri = wedges.join(
       oriented.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
-    // oriented is RELEASED through the registry (releaseCaches, wired
-    // into the Bench per-query cleanup and Domain.clearCache), not by an
+    // oriented is RELEASED through the registry (the session's
+    // releaseQuery: the Bench per-query cleanup), not by an
     // eager cut here: the first ADVICE-leak fix localCheckpoint'd the
     // counts inside the query so oriented could unpersist before
     // returning — an eager materialization the caller never asked for,
@@ -197,7 +189,7 @@ object Graph {
     // 1.4–2.4 s at sf0.1), so the lazy form is kept on design: the
     // caller's action decides when work happens, and the leak closes at
     // the session boundary.
-    caches.register(oriented)
+    graft.util.CacheRegistry.register(oriented)
     tri.select(explode(array(col("x"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
       .orderBy(col("node"))

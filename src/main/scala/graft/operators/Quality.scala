@@ -34,11 +34,7 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Quality {
 
-  private val caches = new graft.util.CacheRegistry
-  private def tracked(df: DataFrame): DataFrame = caches.track(df)
-
-  /** Unpersists every cache created by the quality operators. */
-  def releaseCaches(): Unit = caches.releaseAll()
+  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
 
   /** Whitespace unigrams ++ adjacent bigrams of a token-array column —
     * the hashed n-gram feature set of DSIR/CCNet-style bucket LMs (the
@@ -532,10 +528,10 @@ object Quality {
     * patterns in ONE automaton pass (O(|text| + matches),
     * dictionary-suffix links materialized at build, raw-UTF-8-byte fast
     * path), inside whole-stage codegen. Zero shuffles: one scan, one
-    * projection, the output sort. MEASURED crossover (tools/BlocklistAB,
-    * 500k docs, min-of-3): at P = 8 a short-circuiting contains-OR
-    * FILTER is still faster (1.24 s vs 1.47 s — it exits on the first
-    * hit and computes no counts/positions, the automaton always
+    * projection, the output sort. MEASURED crossover (SURVEY.md; the
+    * BlocklistAB harness is at commit 1451c40; 500k docs, min-of-3):
+    * at P = 8 a short-circuiting contains-OR FILTER is still faster
+    * (1.24 s vs 1.47 s — it exits on the first hit and computes no counts/positions, the automaton always
     * finishes the text to count every pattern); at P = 64 the automaton
     * wins 14.3× (1.20 s vs 17.21 s) and is ~flat in P where the naive
     * form scales linearly — and production badlists (C4's is ~400

@@ -250,12 +250,8 @@ object Sampling {
 
   // Frames shared by several aggregation branches of dsirResample persist
   // here; Bench releases them between queries (same lifecycle as the
-  // Dedup/Text registries).
-  private val caches = new graft.util.CacheRegistry
-  private def tracked(df: DataFrame): DataFrame = caches.track(df)
-
-  /** Unpersists every cache created by the sampling operators. */
-  def releaseCaches(): Unit = caches.releaseAll()
+  // Dedup/Text frames).
+  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
 
   /** Deterministic K-sample per stratum — the "carve a fixed eval/debug
     * set per domain" operation: the `k` rows of each stratum whose keys

@@ -76,7 +76,7 @@ object Similarity {
     * while at deployment sizes the crossJoin's |corpus|·Q materialized
     * pair rows are dimension-independent overhead that dominates the
     * flops: 3.2–4.3 s vs 1.3 s at 128k × 512 dims × 100 queries
-    * (tools/WideEmb, SURVEY §8.-9). */
+    * (SURVEY §8.-9; the WideEmb harness is at commit 1451c40). */
   private[graft] val FusedKernelMinBytes: Long = 64L << 20
 
   private def estimatedBytes(df: DataFrame): BigInt =
@@ -196,7 +196,7 @@ object Similarity {
     // from normed()'s full-width double `v`, and CollapseProject
     // re-inlined the d-wide cast into every per-query dot under the
     // crossJoin, making the "prefix" pass 3× slower than exact at
-    // d=512: tools/WideEmb). Above [[FusedKernelMinBytes]] the pass
+    // d=512: SURVEY §8.-9). Above [[FusedKernelMinBytes]] the pass
     // runs through the fused multi-query kernel (no |corpus|·Q pair
     // rows at all); below it, the single-job crossJoin form — both
     // branches bit-identical, zeroScore -1.0 preserving the documented

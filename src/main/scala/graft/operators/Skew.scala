@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * spreads over `factor` reducers instead of stalling a single task.
   *
   * AQE's skew-join split is the adaptive alternative, and where it fires
-  * it works (measured, tools/SkewAB: 2.29 s split vs 1.59 s salted on
+  * it works (measured, SURVEY §8.-8; the SkewAB harness is at commit
+  * 1451c40: 2.29 s split vs 1.59 s salted on
   * the same fixture) — but its detector is denominated in COMPRESSED
   * SHUFFLE BYTES (`skewedPartitionThresholdInBytes`, 256 MB default,
   * required on top of the ×5-over-median test) while skew cost is

@@ -36,9 +36,6 @@ object Unigram {
     * selection that produced it, and `logp = ln(cnt / total)`. */
   final case class Piece(piece: String, cnt: Long, logp: Double)
 
-  private val caches = new graft.util.CacheRegistry
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** Distinct-word frequency table: (word, wfreq). The one corpus-sized
     * step; everything downstream is vocabulary-sized. */
   def wordFrequencies(docs: DataFrame, textCol: String = "text"): DataFrame =
@@ -93,7 +90,7 @@ object Unigram {
       vocabSize: Int, maxPieceLen: Int): Seq[Piece] = {
     require(vocabSize > 0, s"vocabSize must be positive, got $vocabSize")
     require(maxPieceLen > 1, s"maxPieceLen must exceed 1, got $maxPieceLen")
-    val cnts = caches.track(substringCounts(words, maxPieceLen))
+    val cnts = graft.util.CacheRegistry.track(substringCounts(words, maxPieceLen))
     val top = cnts
       .orderBy(col("cnt").desc, col("piece"))
       .limit(vocabSize)
@@ -149,7 +146,7 @@ object Unigram {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     require(seedMultiplier >= 1, s"seedMultiplier must be >= 1, got $seedMultiplier")
     GraftExpressions.register(docs.sparkSession)
-    val words = caches.track(wordFrequencies(docs, textCol))
+    val words = graft.util.CacheRegistry.track(wordFrequencies(docs, textCol))
     val singles = words
       .select(explode(transform(sequence(lit(1), length(col("word"))),
         p => col("word").substr(p, lit(1)))).as("piece"))

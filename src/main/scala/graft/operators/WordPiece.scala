@@ -32,9 +32,6 @@ import graft.functions.GraftExpressions
   */
 object WordPiece {
 
-  private val caches = new graft.util.CacheRegistry
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** Position-classed weighted substring counts: (piece, cnt) where
     * word-initial substrings are bare and others carry `##` — the
     * shared [[Unigram.substringCountsBy]] enumeration with the classed
@@ -53,7 +50,7 @@ object WordPiece {
     // tracked: the counts frame feeds TWO collects (top-K, then the
     // singles pass) — uncached, each re-scans the corpus and re-runs
     // the substring explode (the Unigram.selectFromWords discipline)
-    val cnts = caches.track(
+    val cnts = graft.util.CacheRegistry.track(
       classedCounts(Unigram.wordFrequencies(docs, textCol), maxPieceLen))
     val isSingle =
       length(col("piece")) === 1 ||

@@ -12,6 +12,7 @@ import graft.model.CorpusAdapter
 import graft.serve.ServeQueries
 import graft.silver.SilverTransform
 import graft.streaming.SilverStream
+import graft.util.{CacheRegistry, RotatingTempDir}
 import Num._
 
 /** The reference pipeline's own transforms (Silver flatten/clean, Gold
@@ -36,50 +37,13 @@ object Domain {
     * by the aggregate/serving/ML queries. Cached once per (session, dir):
     * four downstream queries share one scan+join instead of recomputing
     * it (the reference re-scans silver 7× for its gold outputs,
-    * `starschema.py:75-146` — this is the fix at engine level). */
-  def silverFlat(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (spark, dir)
-    flatCache.getOrElseUpdate(key,
+    * `starschema.py:75-146` — this is the fix at engine level). The
+    * frame is a session memo: it survives per-query releases and is
+    * unpersisted when the session is released. */
+  def silverFlat(spark: SparkSession, dir: String): DataFrame =
+    CacheRegistry.memo(spark, ("silverFlat", dir))(
       CorpusAdapter.silverFlat(spark, dir, LoadDate, LoadTs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-  private val flatCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersists and drops all memoized frames — for long-lived drivers
-    * embedding the library (the one-shot Verify/Bench mains never need
-    * it, but without an eviction hook the cache would pin stopped
-    * sessions for the JVM lifetime). */
-  def clearCache(): Unit = synchronized {
-    flatCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => })
-    flatCache.clear()
-    Corpus.clearCache()
-    graft.operators.Dedup.releaseCaches()
-    graft.operators.Sampling.releaseCaches()
-    graft.operators.Quality.releaseCaches()
-    graft.operators.Unigram.releaseCaches()
-    graft.operators.WordPiece.releaseCaches()
-    graft.operators.Graph.releaseCaches()
-    Text.releaseCaches()
-    // per-name stream-override observability entries (tiny, but a
-    // long-lived driver launching nanoTime-named streams would grow
-    // the map without bound)
-    graft.streaming.SilverStream.overrideShufflePartitions.clear()
-    // staged stream-input dirs are only reaped for STOPPED sessions
-    // here — deleting a live session's staged dir would fail its
-    // in-flight stream read (ADVICE r15); a session cleaning up after
-    // itself calls clearCache(spark) instead
-    clearStreamStageCache(None)
-  }
-
-  /** Session-scoped variant: additionally force-deletes THIS session's
-    * staged stream-input dirs (the caller owns them and declares no
-    * stream of its own is still reading). Other live sessions' staging
-    * is untouched. */
-  def clearCache(spark: SparkSession): Unit = synchronized {
-    clearStreamStageCache(Some(spark))
-    clearCache()
-  }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(CacheRegistry.unpersist)
 
   // Minimal flat CTE for aggregate oracles (courier/status/days only need
   // orders⋈lineitem — customer/nation/region joins never drop rows).
@@ -872,42 +836,15 @@ object Domain {
     * unlucky same-tick write the sentinel could otherwise process
     * first, advancing the watermark to 2044 and silently dropping every
     * real event). Callers additionally fail loudly if a mis-ordered
-    * schedule ever empties the result ([[requireStreamBatchOrder]]). */
-  private val twoBatchStageCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  /** Test hook: the staged input dirs currently registered. */
-  private[graft] def stagedStreamDirs: Seq[String] =
-    twoBatchStageCache.values.toSeq
-
-  /** Deletes staged two-batch input dirs — scoped per session (ADVICE
-    * r15): the map is JVM-global, so an unscoped sweep from one session
-    * would delete a DIFFERENT live session's staged p19/p20 input out
-    * from under its in-flight stream read. Entries are deleted when
-    * they belong to `session` (explicit owner cleanup) or when their
-    * session's context has stopped (the application-end backstop — by
-    * then no stream can still be reading). With `session = None` and
-    * all sessions live, nothing is deleted: a live cache entry is by
-    * design reused, not reaped. */
-  private[graft] def clearStreamStageCache(
-      session: Option[SparkSession] = None): Unit = {
-    val doomed = twoBatchStageCache.toSeq.filter { case ((s, _), _) =>
-      session.exists(_ eq s) || s.sparkContext.isStopped
-    }
-    doomed.foreach { case (key, in) =>
-      twoBatchStageCache.remove(key)
-      val root = java.nio.file.Paths.get(in).getParent
-      try {
-        val walk = java.nio.file.Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      } catch { case _: java.io.IOException => } // best-effort /tmp cleanup
-    }
-  }
-
+    * schedule ever empties the result ([[requireStreamBatchOrder]]).
+    *
+    * The staged dir is a session memo (ADVICE r15: deleting a DIFFERENT
+    * live session's staged p19/p20 input would fail its in-flight
+    * stream read): it survives per-query releases, and its delete runs
+    * only when its own session is released or its context has stopped.
+    */
   private def stageTwoBatchEvents(spark: SparkSession, dir: String): String =
-    twoBatchStageCache.getOrElseUpdate((spark, dir), {
+    CacheRegistry.memo(spark, ("p19stage", dir)) {
       val in = java.nio.file.Files.createTempDirectory("graft_p19_in_").toString + "/events"
       // batch 1: the corpus, as ONE file; batch 2: one sentinel click +
       // one sentinel purchase 20 years out (user_id < 0 joins nothing
@@ -929,7 +866,15 @@ object Domain {
           s"p19 staging: cannot set sentinel mtime on $f")
       }
       in
-    })
+    } { in =>
+      // best-effort temp cleanup of the whole staging root
+      try RotatingTempDir.deleteRecursively(java.nio.file.Paths.get(in).getParent)
+      catch { case _: java.io.IOException => }
+    }
+
+  /** Test hook: the staged input dirs `spark` currently owns. */
+  private[graft] def stagedStreamDirs(spark: SparkSession): Seq[String] =
+    CacheRegistry.memos(spark).collect { case (("p19stage", _), in: String) => in }.toSeq
 
   /** Fails loudly when the two-batch schedule ran out of order: a
     * sentinel-first run advances the watermark past every real event,

@@ -42,14 +42,10 @@ object Text {
   private[queries] def mixSql(e: String): String =
     s"((${foldSql(e)}) * 2654435761) % 2147483647"
 
-  // Frames shared by multiple plan branches persist here and are freed by
-  // [[releaseCaches]] (wired into Domain.clearCache for long-lived
-  // drivers); see graft.util.CacheRegistry for the lifecycle.
-  private val caches = new graft.util.CacheRegistry
-  private def tracked(df: DataFrame): DataFrame = caches.track(df)
-
-  /** Unpersists every cache created by the text queries. */
-  def releaseCaches(): Unit = caches.releaseAll()
+  // Frames shared by multiple plan branches persist in the session's
+  // query scope and are freed by its releaseQuery; see
+  // graft.util.CacheRegistry for the lifecycle.
+  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
 
   /** Token counting: whitespace tokens, BPE-ish subword count, mean token
     * length. */
@@ -392,8 +388,8 @@ object Text {
     val docs = Corpus.documents(spark, dir)
     // tf feeds BOTH the scored output and the df roll-up; Catalyst does
     // not CSE across branches, so without the persist the explode + tf
-    // aggregation runs twice (measured ~2× at sf0.1). Released via
-    // Domain.clearCache (same lifecycle as the Dedup caches).
+    // aggregation runs twice (measured ~2× at sf0.1). Released with
+    // the session's query scope (same lifecycle as the Dedup caches).
     val terms = tracked(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))

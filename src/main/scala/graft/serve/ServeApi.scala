@@ -37,6 +37,8 @@ object ServeApi {
   /** Starts the server on `port` (0 = ephemeral) and returns it; callers
     * stop it with `server.stop(0)`. `silver` should be cached by the
     * caller — every request plans against it. */
+  private val serveThreads = new java.util.concurrent.atomic.AtomicInteger(0)
+
   def start(silver: DataFrame, model: Option[PipelineModel],
       config: Config, port: Int = 0): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -59,8 +61,14 @@ object ServeApi {
       else respond(ex, 404, jsonObj(Seq("error" -> "not found")))
     })
     // small fixed pool: request handling is IO-light, the work happens in
-    // the Spark jobs the handlers trigger
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    // the Spark jobs the handlers trigger. `stop` never shuts an
+    // executor down, so the threads are daemons: a stopped server must
+    // not keep its JVM alive.
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, s"graft-serve-${serveThreads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }))
     server.start()
     server
   }

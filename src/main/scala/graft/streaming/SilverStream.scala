@@ -188,16 +188,18 @@ object SilverStream {
   private val handoffIds = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Shuffle-partition count each overridden stream actually ran under
-    * (read back from its child session), KEYED BY QUERY NAME — test
-    * observability for the state-shard override, which has no other
-    * externally visible trace once the stream's temp checkpoint is
-    * gone. Per-name keying (ADVICE r17): concurrent runToMemory calls
-    * are explicitly permitted by the child-session design, and a single
-    * shared slot could hand a test another stream's value. */
-  private[graft] val overrideShufflePartitions =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-  private[graft] def lastOverrideShufflePartitions(name: String): Option[Int] =
-    overrideShufflePartitions.get(name)
+    * (read back from its child session), KEYED BY QUERY NAME within the
+    * caller's session — test observability for the state-shard
+    * override, which has no other externally visible trace once the
+    * stream's temp checkpoint is gone. Per-name keying (ADVICE r17):
+    * concurrent runToMemory calls are explicitly permitted by the
+    * child-session design, and a single shared slot could hand a test
+    * another stream's value. A session memo, so it goes with the
+    * session's release. */
+  private[graft] def overrideShufflePartitions(
+      spark: SparkSession): scala.collection.concurrent.TrieMap[String, Int] =
+    graft.util.CacheRegistry.memo(spark, "streamShufflePartitions")(
+      scala.collection.concurrent.TrieMap.empty[String, Int])(_ => ())
 
   def runToMemory(df: DataFrame, name: String, outputMode: String,
       statePartitions: Option[Int] = None,
@@ -248,7 +250,7 @@ object SilverStream {
         statePartitions.foreach(n =>
           s2.conf.set("spark.sql.shuffle.partitions", n))
         streamConfs.foreach { case (k, v) => s2.conf.set(k, v) }
-        overrideShufflePartitions(name) =
+        overrideShufflePartitions(spark)(name) =
           s2.conf.get("spark.sql.shuffle.partitions").toInt
         val handoff = s"graft_stream_in_${handoffIds.incrementAndGet()}"
         df.createOrReplaceGlobalTempView(handoff)
@@ -257,7 +259,9 @@ object SilverStream {
           run(s2.table(s"$gdb.$handoff"))
         } finally {
           spark.catalog.dropGlobalTempView(handoff)
-          ()
+          // nothing may stay owned by the child session once the stream
+          // is done: no one would ever release it
+          graft.util.CacheRegistry.release(s2)
         }
         // materialized on the child session, re-bound to the caller's:
         // the RDD is session-independent (it lives on the shared

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev-only scaling-corpus builder (the tools/Scratch class of utility —
+/** Dev-only scaling-corpus builder (a dev utility like [[PlanDump]] —
   * NOT part of the engine): replicates the sf0.1 fixture ~Nx with
   * shifted ids so the shuffle-heavy queries can be timed one scale
   * point beyond the driver fixtures, turning the 100x design claims

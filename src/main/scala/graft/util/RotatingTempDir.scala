@@ -31,7 +31,7 @@ object RotatingTempDir {
     parent.resolve(f"i$n%06d").toString
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     val walk = Files.walk(p)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(f => Files.deleteIfExists(f))

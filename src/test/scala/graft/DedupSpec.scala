@@ -97,7 +97,7 @@ class DedupSpec extends SparkTestBase {
     assert(hits.map(_._2).distinct === Seq(100L), hits.toString)
     assert(hits.map(_._1).sorted === Seq(0L, 1L), hits.toString)
     assert(hits.forall(h => h._3 >= 0.8 && h._3 <= 1.0), hits.toString)
-    graft.operators.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseQuery(spark)
   }
 
   test("dupClusters: star, chain, and bridged components all label to the min id") {

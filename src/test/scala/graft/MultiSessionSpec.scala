@@ -62,9 +62,59 @@ class MultiSessionSpec extends SparkTestBase {
     // the override itself must still be in force on the child session —
     // read back from the per-query-name observability map (the r18
     // ADVICE fix: a shared slot could hand us another stream's value)
-    val readBack = graft.streaming.SilverStream.overrideShufflePartitions
+    val readBack = graft.streaming.SilverStream.overrideShufflePartitions(spark)
       .filter { case (n, _) => n.startsWith("p06_stream_") }
     assert(readBack.values.exists(n => n >= 2 && n.toString != default),
       s"child-session override read-back: $readBack")
+  }
+
+  test("releasing one session leaves another session's frames and memos intact") {
+    import graft.util.CacheRegistry
+    val (a, b) = (spark.newSession(), spark.newSession())
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // registry-owned persists only: a Dedup query (tracked frames), the
+    // silverFlat memo, and Graph's registered edge frame
+    def triangles(s: org.apache.spark.sql.SparkSession, edges: Seq[(Long, Long)]): Unit = {
+      import s.implicits._
+      graft.operators.Graph.triangleCounts(edges.toDF("src", "dst")).collect()
+    }
+    def registryQueries(s: org.apache.spark.sql.SparkSession): Unit = {
+      rows("t07_dedup_minhash_lsh", s)
+      rows("p02_courier_metrics", s)
+      triangles(s, Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)))
+    }
+    // Spark keys its cache by plan across sessions: B's persists of the
+    // same plans share A's entries, while A's own triangle input is A's
+    // alone
+    val p0 = persisted
+    registryQueries(a)
+    val p1 = persisted
+    val shared = p1 -- p0
+    triangles(a, Seq((5L, 6L), (6L, 7L), (5L, 7L)))
+    val onlyA = persisted -- p1
+    registryQueries(b)
+    // p19 stages its two-batch input as a session memo in each session
+    for (s <- Seq(a, b)) rows("p19_stream_left_outer_join", s)
+    val flatB = graft.queries.Domain.silverFlat(b, sf0001)
+    val stagedA = graft.queries.Domain.stagedStreamDirs(a)
+    val stagedB = graft.queries.Domain.stagedStreamDirs(b)
+    val framesB = CacheRegistry.frames(b)
+    assert(shared.nonEmpty && onlyA.nonEmpty && stagedA.nonEmpty && stagedB.nonEmpty &&
+      framesB.nonEmpty)
+
+    CacheRegistry.releaseQuery(a)
+    CacheRegistry.release(a)
+    assert(graft.queries.Domain.silverFlat(b, sf0001) eq flatB,
+      "B's silverFlat memo must survive A's release")
+    assert(stagedB.forall(d => new java.io.File(d).exists()), "B's staged p19 input")
+    assert(stagedA.forall(d => !new java.io.File(d).exists()), "A's staged p19 input")
+    assert(framesB.forall(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE),
+      "B's tracked frames must stay persisted")
+    assert(shared.subsetOf(persisted), "entries B shares must stay cached")
+    assert((persisted intersect onlyA).isEmpty, s"A's own RDDs: ${persisted intersect onlyA}")
+    assert(CacheRegistry.frames(a).isEmpty && CacheRegistry.memos(a).isEmpty)
+    CacheRegistry.release(b)
+    assert((persisted intersect (shared ++ onlyA)).isEmpty,
+      s"RDDs left after both releases: ${persisted intersect (shared ++ onlyA)}")
   }
 }

@@ -518,8 +518,8 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("v20 matryoshka fused branch: prefix kernel stage 1, no pair-materializing join") {
-    // the branch deployment-size corpora take (tools/WideEmb measured it
-    // 1.2-2x over fused-exact at 8x byte ratio)
+    // the branch deployment-size corpora take (measured 1.2-2x over
+    // fused-exact at 8x byte ratio, SURVEY §8.-9)
     val plan = graft.operators.Similarity.matryoshkaTopKImpl(spark,
         Corpus.embeddings(spark, sf0001), nQueries = 5, k = 10,
         prefixDims = 16, overfetch = 4, fused = true)

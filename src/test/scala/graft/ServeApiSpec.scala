@@ -71,6 +71,18 @@ class ServeApiSpec extends SparkTestBase {
     } finally server.stop(0)
   }
 
+  test("a stopped server leaves no non-daemon serve thread behind") {
+    import scala.jdk.CollectionConverters._
+    def serveThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-serve-"))
+    val server = ServeApi.start(silver, model = None, ServeApi.Config(asOfDate = "2024-06-01"))
+    try assert(get(server, "/")._1 === 200)
+    finally server.stop(0)
+    assert(serveThreads.nonEmpty, "requests must run on the named serve pool")
+    assert(serveThreads.forall(_.isDaemon),
+      s"non-daemon serve threads: ${serveThreads.filterNot(_.isDaemon).map(_.getName)}")
+  }
+
   test("model-backed tracking prediction serves the fitted pipeline's output") {
     import graft.ml.DeliveryModel
     val result = DeliveryModel.train(DeliveryModel.features(silver))

@@ -758,21 +758,23 @@ class StreamingSpec extends SparkTestBase {
     // two-batch events dir for (session, sf0.001))
     graft.queries.Registry.specs.find(_.name == "p19_stream_left_outer_join").get
       .run(spark, sf0001).count()
-    val dirs = graft.queries.Domain.stagedStreamDirs
+    val dirs = graft.queries.Domain.stagedStreamDirs(spark)
     assert(dirs.nonEmpty, "p19 must have staged its two-batch input")
     def allExist = dirs.forall(d => new java.io.File(d).exists())
     assert(allExist)
-    // an unscoped sweep (the application-end backstop path) must NOT
-    // delete a LIVE session's staged input out from under it
-    graft.queries.Domain.clearCache()
+    // neither the per-query release nor the application-end backstop
+    // (which only reaps stopped contexts) may delete a LIVE session's
+    // staged input out from under it
+    graft.util.CacheRegistry.releaseQuery(spark)
+    graft.util.CacheRegistry.releaseStopped()
     assert(allExist, "live session's staged dirs survive the unscoped sweep")
-    assert(graft.queries.Domain.stagedStreamDirs.nonEmpty,
+    assert(graft.queries.Domain.stagedStreamDirs(spark).nonEmpty,
       "live entries stay registered (the cache is reusable, not reaped)")
     // the owner cleaning up after itself deletes its own staging
-    graft.queries.Domain.clearCache(spark)
+    graft.util.CacheRegistry.release(spark)
     assert(dirs.forall(d => !new java.io.File(d).exists()),
       "session-scoped clear deletes the caller's staged dirs")
-    assert(graft.queries.Domain.stagedStreamDirs.isEmpty)
+    assert(graft.queries.Domain.stagedStreamDirs(spark).isEmpty)
   }
 
   test("CMS sketch as streaming aggregation state ≡ the batch matrix (additive merge)") {

@@ -14,10 +14,16 @@ while the driver errored. It now rejects non-scalar cells up front, so
 a gated array column fails HERE first. Run `--selftest` to verify the
 rejection path.
 
+`--diff` is the bit-identical protocol for refactors: it compares two
+Verify output dirs (before/after a change) query by query — column
+names and types must match, and DuckDB `EXCEPT ALL` must be empty in
+both directions (a multiset compare, so duplicate rows count).
+
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+       python3 tools/check_oracle.py --diff <beforeOut> <afterOut>
        python3 tools/check_oracle.py --selftest
 """
-import json, math, sys
+import json, math, os, sys, tempfile
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -69,10 +75,17 @@ def compare(exp_cols, exp, got_cols, got):
     return (True, f"{len(es)} rows")
 
 
-def main(sf_dir, out_dir):
+def connect(sf_dir=None):
+    """DuckDB connection, with the corpus tables as views when given."""
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    if sf_dir is not None:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def main(sf_dir, out_dir):
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
@@ -96,6 +109,42 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: {msg}")
     print(f"== {n_ok} ok, {n_bad} bad")
     return 1 if n_bad else 0
+
+
+def diff_one(con, before, after):
+    """(identical, message) for one query's two output dirs."""
+    a, b = f"'{before}/*.parquet'", f"'{after}/*.parquet'"
+    try:
+        sa = [r[:2] for r in con.execute(f"DESCRIBE SELECT * FROM {a}").fetchall()]
+        sb = [r[:2] for r in con.execute(f"DESCRIBE SELECT * FROM {b}").fetchall()]
+        if sa != sb:
+            return (False, f"schema {sb} != {sa}")
+        only = [con.execute(f"SELECT count(*) FROM (SELECT * FROM {x} "
+                            f"EXCEPT ALL SELECT * FROM {y})").fetchone()[0]
+                for x, y in ((a, b), (b, a))]
+        rows = con.execute(f"SELECT count(*) FROM {a}").fetchone()[0]
+    except Exception as e:
+        return (False, str(e).splitlines()[0])
+    if any(only):
+        return (False, f"{only[0]} rows only before, {only[1]} only after")
+    return (True, f"{rows} rows")
+
+
+def diff(before_out, after_out):
+    def queries(d):
+        return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+    con = connect()
+    n_same = n_diff = 0
+    for name in sorted(queries(before_out) | queries(after_out)):
+        same, msg = diff_one(con, f"{before_out}/{name}", f"{after_out}/{name}")
+        if same:
+            n_same += 1
+            print(f"same {name} ({msg})")
+        else:
+            n_diff += 1
+            print(f"DIFF {name}: {msg}")
+    print(f"== {n_same} identical, {n_diff} differ")
+    return 1 if n_diff else 0
 
 
 def selftest():
@@ -122,6 +171,23 @@ def selftest():
     # 4. column-name mismatch still fails
     ok, msg = compare(["k"], [("a",)], ["kk"], [("a",)])
     assert not ok and "cols" in msg, (ok, msg)
+    # 5. --diff: identical outputs pass; a one-row difference, a
+    # duplicated row and a type change are each caught
+    con = connect()
+    with tempfile.TemporaryDirectory() as tmp:
+        def out(name, sql):
+            os.makedirs(f"{tmp}/{name}")
+            con.execute(f"COPY ({sql}) TO '{tmp}/{name}/part-0.parquet' (FORMAT PARQUET)")
+            return f"{tmp}/{name}"
+        base = "SELECT range AS k, range * 2 AS v FROM range(5)"
+        ref = out("ref", base)
+        assert diff_one(con, ref, out("same", base + " ORDER BY k DESC"))[0]
+        ok, msg = diff_one(con, ref, out("row", base.replace("range * 2", "CASE WHEN range = 3 THEN 7 ELSE range * 2 END")))
+        assert not ok and "1 rows only before, 1 only after" in msg, (ok, msg)
+        ok, msg = diff_one(con, ref, out("dup", base + " UNION ALL SELECT 0, 0"))
+        assert not ok and "0 rows only before, 1 only after" in msg, (ok, msg)
+        ok, msg = diff_one(con, ref, out("type", "SELECT range AS k, CAST(range * 2 AS INT) AS v FROM range(5)"))
+        assert not ok and "schema" in msg, (ok, msg)
     print("selftest ok")
     return 0
 
@@ -129,4 +195,6 @@ def selftest():
 if __name__ == "__main__":
     if len(sys.argv) == 2 and sys.argv[1] == "--selftest":
         sys.exit(selftest())
+    if len(sys.argv) == 4 and sys.argv[1] == "--diff":
+        sys.exit(diff(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
