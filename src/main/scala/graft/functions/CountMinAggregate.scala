@@ -51,81 +51,23 @@ object CMSMatrix {
     (Fold31.fold(UTF8String.fromString(s"cms:$row:$item")) % width).toInt
 }
 
-/** `graft_cms_sketch(token, depth, width)` — per-group Count-Min counter
-  * matrix as `array<bigint>` (row-major, length depth·width). Runs
+/** `graft_cms_sketch_w(token, weight, depth, width)` — per-group
+  * Count-Min counter matrix as `array<bigint>` (row-major, length
+  * depth·width): row r of an item adds `weight` to its cell. Runs
   * inside ObjectHashAggregate with map-side partials: each partition
   * carries one fixed-size matrix regardless of domain size, merges are
   * element-wise adds. Bounded state is the whole point at 100 TB: the
   * domain-sized exact frequency table never materializes — depth·width
-  * longs summarize any number of distinct tokens. */
-case class CMSketch(
-    child: Expression,
-    depth: Int,
-    width: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CMSMatrix] {
-  require(depth > 0, s"depth must be positive, got $depth")
-  require(width > 1, s"width must exceed 1, got $width")
-
-  override def prettyName: String = "graft_cms_sketch"
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): CMSMatrix = new CMSMatrix(depth, width)
-
-  override def update(buf: CMSMatrix, input: InternalRow): CMSMatrix = {
-    child.eval(input) match {
-      case null =>
-      // .toString copies out of Spark's reused row buffer — mandatory
-      case s: UTF8String => buf.add(s.toString, 1L)
-      case other => throw new IllegalArgumentException(
-        s"graft_cms_sketch input must be a string, got ${other.getClass.getName}")
-    }
-    buf
-  }
-
-  override def merge(buf: CMSMatrix, other: CMSMatrix): CMSMatrix = {
-    buf.mergeFrom(other); buf
-  }
-
-  override def eval(buf: CMSMatrix): Any =
-    new GenericArrayData(buf.counts.map(java.lang.Long.valueOf).asInstanceOf[Array[Any]])
-
-  override def serialize(buf: CMSMatrix): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + 8 * buf.counts.length)
-    bb.putInt(buf.depth); bb.putInt(buf.width)
-    buf.counts.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): CMSMatrix = {
-    val bb = ByteBuffer.wrap(bytes)
-    val m = new CMSMatrix(bb.getInt, bb.getInt)
-    var i = 0
-    while (i < m.counts.length) { m.counts(i) = bb.getLong; i += 1 }
-    m
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CMSketch =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CMSketch =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CMSketch =
-    copy(child = newChildren.head)
-}
-
-/** `graft_cms_sketch_w(token, weight, depth, width)` — [[CMSketch]] with
-  * a per-row bigint weight: row r of an item adds `weight` (instead of
-  * 1) to its cell. Because every cell is a plain integer SUM, folding a
-  * pre-aggregated (key, freq) table through this is bit-identical to
-  * folding each raw row through [[CMSketch]] — the algebra that lets
-  * [[graft.operators.Frequency.cmsJoinSize]] build its matrices from
-  * the exact frequency frames it needs anyway, instead of re-scanning
-  * the raw side per matrix. Null keys are skipped (as in CMSketch);
-  * null weights contribute nothing. */
+  * longs summarize any number of distinct tokens.
+  *
+  * `graft_cms_sketch(token, depth, width)` is this aggregate at weight
+  * 1 (registered in [[GraftExpressions]]). Because every cell is a plain
+  * integer SUM, folding a pre-aggregated (key, freq) table through the
+  * weighted form is bit-identical to folding each raw row at weight 1 —
+  * the algebra that lets [[graft.operators.Frequency.cmsJoinSize]]
+  * build its matrices from the exact frequency frames it needs anyway,
+  * instead of re-scanning the raw side per matrix. Null keys are
+  * skipped; null weights contribute nothing. */
 case class CMSketchWeighted(
     child: Expression,
     weight: Expression,

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -1082,7 +1082,8 @@ object GraftExpressions {
     ensure("graft_mg_sketch")(exprs =>
       MGSketch(exprs(0), intArg(exprs(1), "k")))
     ensure("graft_cms_sketch")(exprs =>
-      CMSketch(exprs(0), intArg(exprs(1), "depth"), intArg(exprs(2), "width")))
+      CMSketchWeighted(exprs(0), Literal(1L),
+        intArg(exprs(1), "depth"), intArg(exprs(2), "width")))
     ensure("graft_cms_sketch_w")(exprs =>
       CMSketchWeighted(exprs(0), exprs(1),
         intArg(exprs(2), "depth"), intArg(exprs(3), "width")))

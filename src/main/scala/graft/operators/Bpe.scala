@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftExpressions, TextFunctions}
+import graft.util.Fixpoint
 
 /** Distributed BPE merge learning — tokenizer induction over a corpus
   * (Sennrich et al. 2016, the algorithm behind GPT/Llama-family
@@ -49,8 +50,9 @@ object Bpe {
   }
 
   /** Adjacent symbol pairs of `syms` as structs — one element per
-    * position, so overlapping pairs count. */
-  private def adjacentPairs(syms: Column): Column =
+    * position, so overlapping pairs count. Shared with
+    * [[WordPiece.learnMerges]]. */
+  private[operators] def adjacentPairs(syms: Column): Column =
     zip_with(
       slice(syms, lit(1), size(syms) - 1),
       slice(syms, lit(2), size(syms) - 1),
@@ -72,23 +74,13 @@ object Bpe {
       textCol: String = "text"): Seq[Merge] = {
     require(nMerges > 0, s"nMerges must be positive, got $nMerges")
     GraftExpressions.register(docs.sparkSession)
-    // localCheckpoint each generation (the dupClusters lesson,
-    // Dedup.scala): persist() caches data but leaves the LOGICAL plan
-    // growing by one fold expression per merge, and analysis/optimization
-    // over the accumulated tree comes to dominate wall-clock within a few
-    // iterations. Checkpointing truncates the plan to the materialized
-    // vocabulary-sized result.
-    // LAZY (eager = false): the plan still truncates immediately, but the
-    // blocks materialize inside the round's argmax job instead of a
-    // separate checkpoint job — the argmax aggregation computes every
-    // partition anyway, so fusing them halves the per-round action count
-    // (2 jobs -> 1), and the final generation (which no argmax ever
-    // reads) stops paying a wasted materialization job entirely.
-    var words = wordTable(docs, textCol).localCheckpoint(eager = false)
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
+    // each generation adds one fold expression per merge to the plan;
+    // its lazy cut materializes inside the next round's argmax job
+    // (halving the per-round job count, 2 → 1), and the final
+    // generation, which no argmax reads, is never materialized.
+    // State: (words, merges so far); no pair occurring twice stops early.
+    val init = (wordTable(docs, textCol).localCheckpoint(eager = false), Vector.empty[Merge])
+    Fixpoint.iterate("bpe_rounds", init, nMerges) { case (s @ (words, merges), round) =>
       val top = words
         .select(col("n"), explode(adjacentPairs(col("syms"))).as("p"))
         .groupBy(col("p")).agg(sum(col("n")).as("freq"))
@@ -104,16 +96,13 @@ object Bpe {
         .limit(1)
         .select(col("p.l"), col("p.r"), col("freq"))
         .collect()
-      if (top.isEmpty) done = true
+      if (top.isEmpty) Fixpoint.Done(s)
       else {
         val (a, b, f) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += Merge(rank, a, b, a + b, f)
-        words = words.withColumn("syms", applyMerge(col("syms"), a, b))
-          .localCheckpoint(eager = false)
-        rank += 1
+        Fixpoint.Next((words.withColumn("syms", applyMerge(col("syms"), a, b))
+          .localCheckpoint(eager = false), merges :+ Merge(round + 1, a, b, a + b, f)))
       }
-    }
-    merges.result()
+    }.state._2
   }
 
   /** Segments `textCol` into BPE units under the learned merges: one

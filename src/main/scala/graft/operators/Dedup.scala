@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.util.Fixpoint
 
 /** Document deduplication family for training-data pipelines — exact,
   * MinHash+LSH, SimHash, and blocked n-gram Jaccard.
@@ -905,27 +906,18 @@ object Dedup {
     // seed with the 1-hop min already folded in (label = min(self,
     // neighbors)) — same single shuffle a plain distinct() would cost,
     // one fewer propagation round.
-    // localCheckpoint (not persist) each iteration: persist() caches DATA
-    // but leaves the LOGICAL plan growing — iteration N's plan nests
-    // iteration N−1's several times, so plan size (and analysis/explain
-    // cost) compounds geometrically and a deep graph OOMs the driver on
-    // plan strings alone. Checkpointing truncates the plan to the
-    // materialized result. Local (block-manager) checkpoints trade
-    // executor-loss tolerance for speed — on a dynamic-allocation
-    // cluster, configure a checkpoint dir and swap in Dataset.checkpoint.
-    // Freed by the ContextCleaner once unreferenced (row footprint is one
-    // (id,label) pair per incident doc).
-    // lazy checkpoints (the Bpe.learnMerges discipline): the plan still
-    // truncates immediately, but the blocks materialize inside the
-    // round's convergence count — which computes every partition anyway —
-    // instead of a separate checkpoint job: one action per round, not two.
-    var labels = edges.groupBy(col("src").as("id"))
+    // Local (block-manager) checkpoints trade executor-loss tolerance
+    // for speed — on a dynamic-allocation cluster, configure a
+    // checkpoint dir and swap in Dataset.checkpoint. Freed by the
+    // ContextCleaner once unreferenced (row footprint is one (id,label)
+    // pair per incident doc).
+    val seed = edges.groupBy(col("src").as("id"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
       .localCheckpoint(eager = false)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val prev = labels
+    // rounds-as-data: the scale argument for this operator is its round
+    // count (∝ diameter here, log n in the fallback), so it is recorded
+    // as cc_prop_rounds where the bench JSON picks it up
+    val prop = Fixpoint.iterate("cc_prop_rounds", seed, maxIter) { (prev, _) =>
       // a node's next label: min over itself and all neighbors' labels.
       // SHUFFLE_HASH on the node-sized label side (the labelPropagation
       // lesson, Graph.scala): a sort-merge join would re-sort the
@@ -940,21 +932,14 @@ object Dedup {
       val next = prev.unionByName(msgs)
         .groupBy(col("id")).agg(min(col("label")).as("label"))
         .localCheckpoint(eager = false)
-      converged = next
+      val changed = next
         .join(prev.withColumnRenamed("label", "old"), "id")
-        .filter(col("label") < col("old")).count() == 0L
-      labels = next
-      iter += 1
+        .filter(col("label") < col("old")).count()
+      if (changed == 0L) Fixpoint.Done(next) else Fixpoint.Next(next)
     }
-    // rounds-as-data: the scale argument for this operator is its round
-    // count (∝ diameter here, log n in the fallback), so emit it where
-    // the bench JSON picks it up instead of leaving it in logs
-    graft.util.PhaseTimer.count("cc_prop_rounds", iter.toLong)
-    if (!converged) {
-      // component diameter exceeded the propagation bound (chain-shaped
-      // graph) — restart on the O(log n)-round alternating scheme
-      labels = alternatingComponents(edges)
-    }
+    // component diameter exceeded the propagation bound (chain-shaped
+    // graph) — restart on the O(log n)-round alternating scheme
+    val labels = if (prop.converged) prop.state else alternatingComponents(edges)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select(col("id").as("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
@@ -973,8 +958,7 @@ object Dedup {
     * pass costing TWO exchanges total (see [[orientedMin]] /
     * [[starEmissions]]); convergence is checked with an exact
     * anti-join, not a hash heuristic. Rounds are localCheckpoint'd for
-    * the same plan-blowup reason as the propagation loop in
-    * [[dupClusters]]. */
+    * the plan-growth reason [[graft.util.Fixpoint]] states. */
   def alternatingComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     // r19 round restructure. The textbook round as two independent
     // operators cost ~5-7 exchanges and 3 actions (round, count,
@@ -1014,26 +998,22 @@ object Dedup {
     // The fixpoint star forest is IDENTICAL to the textbook form's (the
     // dedup boundaries moved, never any edge set) — t34's oracle gates
     // the complete labeling.
-    var raw = edges
-      .select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-    var dirPrev: DataFrame = null
-    var prevCount = -1L
-    var round_ = 0
-    var stable = false
-    while (!stable && round_ <= maxRounds) {
-      // lazy checkpoint: the count materializes the blocks in the same
-      // job (2 actions per round, not 3); the anti-join then reads them
+    // state: (raw emissions, previous round's (dir, count)); the count
+    // materializes dir's lazy cut in the same job (2 actions per round,
+    // not 3) and the anti-join then reads its blocks
+    val init = (edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")),
+      Option.empty[(DataFrame, Long)])
+    val alt = Fixpoint.iterate("cc_alt_rounds", init, maxRounds + 1) { case ((raw, prev), _) =>
       val dir = orientedMin(raw).localCheckpoint(eager = false)
       val dirCount = dir.count()
-      stable = dirPrev != null && dirCount == prevCount &&
-        dir.join(dirPrev, Seq("src", "dst"), "left_anti").isEmpty
-      if (!stable) raw = starEmissions(dir)
-      dirPrev = dir
-      prevCount = dirCount
-      round_ += 1
+      val stable = prev.exists { case (dirPrev, prevCount) =>
+        dirCount == prevCount && dir.join(dirPrev, Seq("src", "dst"), "left_anti").isEmpty
+      }
+      if (stable) Fixpoint.Done((raw, prev))
+      else Fixpoint.Next((starEmissions(dir), Some((dir, dirCount))))
     }
-    require(stable, s"alternatingComponents did not stabilize in $maxRounds rounds")
-    graft.util.PhaseTimer.count("cc_alt_rounds", round_.toLong)
+    require(alt.converged, s"alternatingComponents did not stabilize in $maxRounds rounds")
+    val raw = alt.state._1
     // fixed point is a star forest rooted at component minima: distinct
     // the (multiset) emissions ONCE, then every non-root appears as src
     // exactly once and roots label themselves
@@ -1046,10 +1026,8 @@ object Dedup {
   /** Large-star half of one alternating round over the (multiset)
     * emission frame `raw`: the deduped large→small oriented edge set,
     * hash-partitioned by src — the per-round checkpoint and convergence
-    * anchor. Extracted so the plan-evidence tooling can explain a
-    * single round (the loop materializes each round eagerly, so the
-    * query-level plan dump only ever shows the post-loop tail). */
-  private[graft] def orientedMin(raw: DataFrame): DataFrame = {
+    * anchor: the first half of the loop's step, before its cut. */
+  private def orientedMin(raw: DataFrame): DataFrame = {
     // large-star: for each u, connect every LARGER neighbor to
     // m = min({u} ∪ N(u)) — symmetrized view; duplicates in `raw`
     // are harmless here (min ignores them) and removed by the dedup
@@ -1070,7 +1048,7 @@ object Dedup {
     * every smaller neighbor (and src itself) to m = min(N(src)).
     * Everything is co-partitioned on src — NO exchange — and the
     * output is a multiset (the next round's [[orientedMin]] dedups). */
-  private[graft] def starEmissions(dir: DataFrame): DataFrame = {
+  private def starEmissions(dir: DataFrame): DataFrame = {
     val mins2 = dir.groupBy(col("src")).agg(min(col("dst")).as("m"))
     dir.join(mins2.hint("SHUFFLE_HASH"), "src")
       .select(explode(array(

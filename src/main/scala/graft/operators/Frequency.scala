@@ -56,7 +56,7 @@ object Frequency {
   /** Count-Min point estimates for every distinct token (Cormode &
     * Muthukrishnan, J. Algorithms 2005) — the ESTIMATING sibling of
     * [[heavyHitters]]'s Misra-Gries candidates: one aggregation builds
-    * the depth×width counter matrix ([[graft.functions.CMSketch]] —
+    * the depth×width counter matrix ([[graft.functions.CMSketchWeighted]] —
     * fixed-size buffers map-side, one matrix per partition crosses the
     * shuffle, merges are element-wise adds, so the matrix is a pure
     * function of the token multiset at any partitioning), then each

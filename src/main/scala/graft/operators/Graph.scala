@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.{CacheRegistry, Fixpoint}
+
 /** Iterative graph analytics over edge lists — the PageRank sibling of
   * the connected-components family ([[Dedup.dupClusters]]).
   */
@@ -51,11 +53,9 @@ object Graph {
     // iteration's rank⋈edges join moves only the node-sized rank table
     // (one-sided exchange) instead of re-shuffling the edge-sized side
     // five times — at web scale the edge table is the 100× term.
-    // lazy checkpoints throughout (the Bpe.learnMerges discipline): the
-    // plan truncates immediately either way; the blocks materialize
-    // inside the action that already needs them — nodes.count() here,
-    // each round's broadcast/hash build below — instead of a separate
-    // materialization job per generation.
+    // Lazy cuts throughout (the graft.util.Fixpoint step contract): the
+    // blocks materialize inside nodes.count() here and each round's
+    // broadcast/hash build below.
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).localCheckpoint(eager = false)
     val nodes = e.select(col("src").as("node"))
@@ -81,21 +81,16 @@ object Graph {
     val nodeSide: DataFrame => DataFrame =
       if (n <= 2000000L) broadcast else (df: DataFrame) => df.hint("SHUFFLE_HASH")
     val base = (1.0 - damping) / n
-    var pr = nodes.withColumn("pagerank", lit(1.0 / n))
+    val init = nodes.withColumn("pagerank", lit(1.0 / n))
       .localCheckpoint(eager = false)
-    var i = 0
-    while (i < iterations) {
-      pr = pageRankRound(ew, nodes, pr, nodeSide, base, damping)
-        .localCheckpoint(eager = false)
-      i += 1
-    }
-    pr.orderBy(col("node"))
+    Fixpoint.iterate("pagerank_rounds", init, iterations) { (pr, _) =>
+      Fixpoint.Next(pageRankRound(ew, nodes, pr, nodeSide, base, damping)
+        .localCheckpoint(eager = false))
+    }.state.orderBy(col("node"))
   }
 
-  /** One pageRank power iteration — extracted so the plan-evidence
-    * tooling can explain a single round (the loop checkpoints each
-    * generation eagerly, so a query-level dump only shows the tail). */
-  private[graft] def pageRankRound(ew: DataFrame, nodes: DataFrame,
+  /** One pageRank power iteration: the loop's step, before its cut. */
+  private def pageRankRound(ew: DataFrame, nodes: DataFrame,
       pr: DataFrame, nodeSide: DataFrame => DataFrame,
       base: Double, damping: Double): DataFrame = {
     val contrib = ew
@@ -222,9 +217,8 @@ object Graph {
     // DISK_ONLY for the edge-sized side (the q35/q41 lesson — measured
     // here too: localCheckpoint'ing |E| rows starved the per-round
     // (node, label) count aggregation into AGGREGATE_OUT_OF_MEMORY at
-    // the 100× point); label generations are node-sized and eager
-    val sym = canonSym(edges)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // the 100× point); label generations are node-sized
+    val sym = symmetrize(edges)
     val nodes = sym.select(col("src").as("node")).distinct()
       .localCheckpoint(eager = false) // nodes.count() below materializes
     // Node-sized label side (guide §3.1, the pageRank r19 gate):
@@ -238,32 +232,21 @@ object Graph {
     val nodeSide: DataFrame => DataFrame =
       if (nodes.count() <= 2000000L) broadcast
       else (df: DataFrame) => df.hint("SHUFFLE_HASH")
-    var labels = nodes.withColumn("label", col("node"))
-    var i = 0
-    while (i < rounds) {
-      // intermediate generations checkpoint LAZILY (the Bpe.learnMerges
-      // discipline): each materializes inside the next round's
-      // broadcast/hash build, which computes every partition anyway —
-      // one action per round, not two
-      labels = lpRound(sym, labels, nodeSide)
-        .localCheckpoint(eager = i == rounds - 1)
-      i += 1
-    }
-    // the final generation is an eager checkpoint (no lineage into sym),
-    // so the edge-sized disk cache can be released instead of leaking
-    // one dead frame per invocation in a long session
-    sym.unpersist()
-    labels.orderBy(col("node"))
+    // each generation materializes inside the next round's
+    // broadcast/hash build; the last one inside the caller's action
+    Fixpoint.iterate("label_propagation_rounds", nodes.withColumn("label", col("node")),
+        rounds) { (labels, _) =>
+      Fixpoint.Next(lpRound(sym, labels, nodeSide).localCheckpoint(eager = false))
+    }.state.orderBy(col("node"))
   }
 
-  /** One label-propagation round — extracted for the plan-evidence
-    * tooling (the loop checkpoints each generation eagerly). Argmax by
-    * (count DESC, label ASC) as a plain MAX over struct(c, -label) —
-    * both aggregation levels partial-aggregate map-side and nothing
-    * sorts, where a row_number window would range-sort the edge-sized
-    * count table every round (measured: the window sort ran q45's 100×
-    * point out of execution memory). */
-  private[graft] def lpRound(sym: DataFrame, labels: DataFrame,
+  /** One label-propagation round: the loop's step, before its cut.
+    * Argmax by (count DESC, label ASC) as a plain MAX over
+    * struct(c, -label) — both aggregation levels partial-aggregate
+    * map-side and nothing sorts, where a row_number window would
+    * range-sort the edge-sized count table every round (measured: the
+    * window sort ran q45's 100× point out of execution memory). */
+  private def lpRound(sym: DataFrame, labels: DataFrame,
       nodeSide: DataFrame => DataFrame): DataFrame =
     sym
       .join(nodeSide(labels.select(col("node").as("src"), col("label"))),
@@ -301,13 +284,12 @@ object Graph {
     * core, node order; empty when the whole graph peels away. */
   def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    // lazy checkpoints (the Bpe.learnMerges discipline): each round's
-    // fixpoint head() computes every partition of degs — and, chained,
-    // of the current sym — so the blocks materialize inside that one
-    // action instead of two extra checkpoint jobs per round
-    var sym = canonSym(edges).localCheckpoint(eager = false)
-    var stable = false
-    while (!stable) {
+    // each round's fixpoint head() computes every partition of degs —
+    // and, chained, of the current sym — so both lazy cuts materialize
+    // inside that one action
+    val init = canonSym(edges).localCheckpoint(eager = false)
+    // no round bound: every non-final round peels ≥ 1 node
+    Fixpoint.iterate("kcore_rounds", init, Int.MaxValue) { (sym, _) =>
       val degs = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .localCheckpoint(eager = false)
       // coalesce: sum over the empty frame is NULL, and an emptied graph
@@ -315,7 +297,7 @@ object Graph {
       val row = degs.agg(count(lit(1)).as("cur"),
         coalesce(sum(when(col("deg") >= k, 1L).otherwise(0L)), lit(0L))
           .as("kept")).head()
-      if (row.getLong(0) == row.getLong(1)) stable = true // fixpoint (incl. empty)
+      if (row.getLong(0) == row.getLong(1)) Fixpoint.Done(sym) // fixpoint (incl. empty)
       else {
         val keep = degs.filter(col("deg") >= k).select(col("src"))
         // `kept` (row column 1) is exactly |keep| — when it fits every
@@ -324,19 +306,19 @@ object Graph {
         // its src partitioning, so the trailing repartition is dropped
         // too (three exchanges → zero). The fallback path (web-scale
         // surviving core) keeps the shuffle semi joins + repartition.
-        if (row.getLong(1) <= 2000000L)
-          sym = sym
-            .join(broadcast(keep), Seq("src"), "left_semi")
-            .join(broadcast(keep.withColumnRenamed("src", "dst")), Seq("dst"), "left_semi")
-            .localCheckpoint(eager = false)
-        else
-          sym = sym
-            .join(keep, Seq("src"), "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-            .repartition(col("src")).localCheckpoint(eager = false)
+        Fixpoint.Next(
+          if (row.getLong(1) <= 2000000L)
+            sym
+              .join(broadcast(keep), Seq("src"), "left_semi")
+              .join(broadcast(keep.withColumnRenamed("src", "dst")), Seq("dst"), "left_semi")
+              .localCheckpoint(eager = false)
+          else
+            sym
+              .join(keep, Seq("src"), "left_semi")
+              .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
+              .repartition(col("src")).localCheckpoint(eager = false))
       }
-    }
-    sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
+    }.state.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
       .orderBy(col("node"))
   }
 
@@ -381,8 +363,8 @@ object Graph {
     * deduped), symmetrized, src-partitioned edge list — the ONE
     * normalization every undirected iterative operator here starts
     * from, unpersisted so each caller picks its storage: kCore
-    * localCheckpoints (its graph shrinks every round), the BFS walk
-    * persists DISK_ONLY (see [[symmetrize]]). */
+    * localCheckpoints (its graph shrinks every round), the BFS walk and
+    * label propagation persist DISK_ONLY (see [[symmetrize]]). */
   private def canonSym(edges: DataFrame): DataFrame = {
     val canon = edges
       .select(least(col("src"), col("dst")).as("a"),
@@ -394,47 +376,48 @@ object Graph {
       .repartition(col("src"))
   }
 
-  /** [[canonSym]] persisted DISK_ONLY: the walk re-reads it every
+  /** [[canonSym]] persisted DISK_ONLY: the loops re-read it every
     * round, but pinning |E| rows in memory starves the per-round
     * joins' execution memory exactly when the graph is at its largest
     * (the q41 100×-corpus OOM) — local-disk re-reads cost seconds, an
-    * executor OOM costs the job. Callers unpersist after the last
-    * round. */
-  private def symmetrize(edges: DataFrame): DataFrame =
-    canonSym(edges).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    * executor OOM costs the job. Owned by the registry: the session's
+    * next `releaseQuery` frees it, after the caller's action has read
+    * the loop's lazily cut last generation. */
+  private def symmetrize(edges: DataFrame): DataFrame = {
+    val sym = canonSym(edges).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    CacheRegistry.register(sym)
+    sym
+  }
 
   private def bfsCore(sym: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be non-negative, got $maxHops")
-    var visited = seeds.select(col("node"), lit(0L).as("dist"))
+    val seeded = seeds.select(col("node"), lit(0L).as("dist"))
       .distinct().localCheckpoint()
-    var frontier = visited.select(col("node"))
-    var hop = 0L
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      // anti-join BEFORE distinct: on a dense graph a late frontier
-      // touches most edges, and running distinct first hash-shuffles
-      // that whole near-|E| join output only for the anti-join to drop
-      // ~all of it; dropping visited dsts first leaves the distinct a
-      // frontier-sized input (measured 1.7x at the 100x decade).
-      // SHUFFLE_HASH on both node-sized sides (frontier, visited — the
-      // labelPropagation lesson): sort-merge would re-sort the
-      // edge-sized sym and the near-|E| discovered set every round.
-      frontier = sym
-        .join(frontier.withColumnRenamed("node", "src").hint("SHUFFLE_HASH"),
-          Seq("src"))
-        .select(col("dst").as("node"))
-        .join(visited.hint("SHUFFLE_HASH"), Seq("node"), "left_anti")
-        .distinct()
-        .localCheckpoint()
-      // lazy: materializes inside the next round's anti-join build (the
-      // frontier's eager checkpoint job); the union's parents are both
-      // checkpointed frames, so the final generation stays computable
-      // from blocks after sym is released below
-      visited = visited
-        .union(frontier.select(col("node"), lit(hop).as("dist")))
-        .localCheckpoint(eager = false)
-    }
-    sym.unpersist(blocking = false) // visited's lineage stops at checkpointed frames — safe
-    visited.orderBy(col("node"))
+    // state: (visited, frontier); an empty frontier is the fixpoint
+    Fixpoint.iterate("bfs_rounds", (seeded, seeded.select(col("node"))), maxHops) {
+      case (s @ (_, frontier), _) if frontier.isEmpty => Fixpoint.Done(s)
+      case ((visited, frontier), round) =>
+        val hop = round + 1L
+        // anti-join BEFORE distinct: on a dense graph a late frontier
+        // touches most edges, and running distinct first hash-shuffles
+        // that whole near-|E| join output only for the anti-join to drop
+        // ~all of it; dropping visited dsts first leaves the distinct a
+        // frontier-sized input (measured 1.7x at the 100x decade).
+        // SHUFFLE_HASH on both node-sized sides (frontier, visited — the
+        // labelPropagation lesson): sort-merge would re-sort the
+        // edge-sized sym and the near-|E| discovered set every round.
+        val next = sym
+          .join(frontier.withColumnRenamed("node", "src").hint("SHUFFLE_HASH"),
+            Seq("src"))
+          .select(col("dst").as("node"))
+          .join(visited.hint("SHUFFLE_HASH"), Seq("node"), "left_anti")
+          .distinct()
+          .localCheckpoint()
+        // lazy: materializes inside the next round's anti-join build (the
+        // frontier's eager checkpoint job)
+        Fixpoint.Next((visited
+          .union(next.select(col("node"), lit(hop).as("dist")))
+          .localCheckpoint(eager = false), next))
+    }.state._1.orderBy(col("node"))
   }
 }

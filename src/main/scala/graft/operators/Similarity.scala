@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftExpressions
+import graft.util.Fixpoint
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -694,36 +695,29 @@ object Similarity {
       .select(col("vec_id"), col("v")).collect()
     require(firstRows.nonEmpty, "kCenterGreedy needs a non-empty corpus")
     val first = firstRows.head
-    var picks = Vector((1L, first.getLong(0), 0.0))
     def distTo(center: Seq[Double]): Column =
       fullL2(col("v"), typedLit(center))
-    // lazy checkpoints (the Bpe.learnMerges discipline): each round's
-    // TakeOrdered argmax computes every partition, so the generation's
-    // blocks materialize inside that collect instead of a separate
-    // checkpoint job per round
-    var state = n
-      .withColumn("mind", distTo(first.getSeq[Double](1)))
-      .localCheckpoint(eager = false)
-    var r = 2
-    while (r <= k) {
+    // each round's TakeOrdered argmax computes every partition, so the
+    // generation's lazy cut materializes inside that collect.
+    // State: (vectors with running min, picks so far); round r picks r + 2.
+    val init = (n.withColumn("mind", distTo(first.getSeq[Double](1)))
+      .localCheckpoint(eager = false), Vector((1L, first.getLong(0), 0.0)))
+    Fixpoint.iterate("kcenter_rounds", init, k - 1) { case (s @ (state, picks), round) =>
       val rows = state
         .filter(!col("vec_id").isInCollection(picks.map(_._2)))
         .orderBy(col("mind").desc, col("vec_id")).limit(1)
         .select(col("vec_id"), col("v"), col("mind")).collect()
-      if (rows.isEmpty) {
-        // corpus exhausted before k picks: return the truncated trace
-        // (every vector IS a center) rather than dying inside a job
-        r = k + 1
-      } else {
+      // corpus exhausted before k picks: return the truncated trace
+      // (every vector IS a center) rather than dying inside a job
+      if (rows.isEmpty) Fixpoint.Done(s)
+      else {
         val best = rows.head
-        picks = picks :+ ((r.toLong, best.getLong(0), best.getDouble(2)))
-        state = state
+        Fixpoint.Next((state
           .withColumn("mind", least(col("mind"), distTo(best.getSeq[Double](1))))
-          .localCheckpoint(eager = false)
-        r += 1
+          .localCheckpoint(eager = false),
+          picks :+ ((round + 2L, best.getLong(0), best.getDouble(2)))))
       }
-    }
-    picks.toDF("round", "vec_id", "picked_dist").orderBy(col("round"))
+    }.state._2.toDF("round", "vec_id", "picked_dist").orderBy(col("round"))
   }
 
   /** Contrastive training-pair mining (the DPR recipe — Karpukhin et
@@ -852,9 +846,8 @@ object Similarity {
     require(k > 0, s"k must be positive, got $k")
     GraftExpressions.register(spark)
     import spark.implicits._
-    // lazy checkpoints (the Bpe.learnMerges discipline): the first-seed
-    // TakeOrdered below materializes n; each round's inertia aggregate
-    // materializes that generation's D² fold — one action per round
+    // lazy cuts: the first-seed TakeOrdered below materializes n; each
+    // round's inertia aggregate materializes that generation's D² fold
     val n = normed(emb).select(col("vec_id"), col("v"))
       .localCheckpoint(eager = false)
     // the t56 uniform: (remix + 1) / (2³¹ − 1) ∈ (0, 1], round-salted
@@ -873,27 +866,25 @@ object Similarity {
       .select(col("vec_id"), col("v")).collect()
     require(firstRows.nonEmpty, "kmeansPlusPlusSeed needs a non-empty corpus")
     val first = firstRows(0)
-    var best = n.crossJoin(centDf(first.getSeq[Double](1)))
+    val best1 = n.crossJoin(centDf(first.getSeq[Double](1)))
       .select(col("vec_id"), col("v"), fullL2(col("v"), col("cv")).as("d"))
       .localCheckpoint(eager = false)
-    val out = scala.collection.mutable.ListBuffer(
-      (1L, first.getLong(0), inertia(best)))
-    var r = 2
-    while (r <= k) {
+    // State: (D² frame, seeds so far); round i draws seed r = i + 2.
+    val init = (best1, Vector((1L, first.getLong(0), inertia(best1))))
+    Fixpoint.iterate("kmeanspp_rounds", init, k - 1) { case ((best, out), round) =>
+      val r = round + 2
       val cand = best.filter(col("d") > 0)
         .withColumn("_key", log(u(r)) / col("d"))
         .orderBy(col("_key").desc, col("vec_id")).limit(1)
         .select(col("vec_id"), col("v")).collect()
       require(cand.nonEmpty,
         s"k-means++ round $r found no point at D² > 0: k = $k exceeds the corpus' distinct vectors")
-      best = best.crossJoin(centDf(cand(0).getSeq[Double](1)))
+      val next = best.crossJoin(centDf(cand(0).getSeq[Double](1)))
         .select(col("vec_id"), col("v"),
           least(col("d"), fullL2(col("v"), col("cv"))).as("d"))
         .localCheckpoint(eager = false)
-      out += ((r.toLong, cand(0).getLong(0), inertia(best)))
-      r += 1
-    }
-    out.toSeq.toDF("round", "seed_id", "inertia").orderBy(col("round"))
+      Fixpoint.Next((next, out :+ ((r.toLong, cand(0).getLong(0), inertia(next)))))
+    }.state._2.toDF("round", "seed_id", "inertia").orderBy(col("round"))
   }
 
   /** The shared Lloyd machinery behind [[lloydKMeans]] (v15) and the IVF
@@ -910,10 +901,9 @@ object Similarity {
     require(k > 0, s"k must be positive, got $k")
     require(iterations > 0, s"iterations must be positive, got $iterations")
     import spark.implicits._
-    // lazy checkpoints (the Bpe.learnMerges discipline): the init
-    // TakeOrdered materializes n; each round's recenter collect
-    // materializes that round's assignment; the final assignment
-    // materializes under the caller's first action
+    // lazy cuts: the init TakeOrdered materializes n; each round's
+    // recenter collect materializes that round's assignment; the final
+    // assignment materializes under the caller's first action
     val n = normed(emb).select(col("vec_id"), col("v"), col("nrm"))
       .localCheckpoint(eager = false)
     val init = n
@@ -921,13 +911,8 @@ object Similarity {
       .orderBy(col("fp"), col("vec_id")).limit(k)
       .select(col("v")).collect().map(_.getSeq[Double](0))
     require(init.nonEmpty, "lloydFit needs a non-empty corpus")
-    var cents: Seq[(Long, Seq[Double])] =
-      init.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq
-    var assigned: DataFrame = null
-    var t = 0
-    while (t < iterations) {
-      val centDf = broadcast(cents.toDF("cid", "cv"))
-      assigned = n.crossJoin(centDf)
+    def assign(cents: Seq[(Long, Seq[Double])]): DataFrame =
+      n.crossJoin(broadcast(cents.toDF("cid", "cv")))
         .select(col("vec_id"), col("v"), col("nrm"),
           struct(fullL2(col("v"), col("cv")).as("d"), col("cid")).as("sc"))
         .groupBy(col("vec_id"))
@@ -939,29 +924,31 @@ object Similarity {
         .select(col("vec_id"), col("v"), col("nrm"), col("best.cid").as("cluster"),
           col("best.d").as("sq_dist"))
         .localCheckpoint(eager = false)
-      if (t < iterations - 1) {
-        val means = assigned
-          .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "val")))
-          .groupBy(col("cluster"), col("dim"))
-          // decimal-detour mean (the Num.davg contract, operator-layer
-          // copy). Magnitude bound (the Num.dsum precondition): summands
-          // are raw embedding components (~0.1 scale on the fixture);
-          // components below the 10⁻⁶ grid contribute a deterministic
-          // ≤ 5·10⁻⁷ per-dim centroid error — noise relative to any
-          // component scale a clustering is meaningful at, not a
-          // q34-style collapse of a whole summand class.
-          .agg((sum(col("val").cast(DecimalType(30, 6))).cast("double") /
-            count(col("val"))).as("mv"))
-          .collect()
-          .groupBy(_.getLong(0))
-          .map { case (cid, rows) =>
-            (cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
-          }
-        cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-      }
-      t += 1
-    }
-    (assigned, cents)
+    // `iterations` assignments with a recenter between each two: the
+    // loop's rounds are the iterations − 1 assign+recenter pairs
+    val cents = Fixpoint.iterate("lloyd_rounds",
+        init.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq,
+        iterations - 1) { (cents, _) =>
+      val means = assign(cents)
+        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "val")))
+        .groupBy(col("cluster"), col("dim"))
+        // decimal-detour mean (the Num.davg contract, operator-layer
+        // copy). Magnitude bound (the Num.dsum precondition): summands
+        // are raw embedding components (~0.1 scale on the fixture);
+        // components below the 10⁻⁶ grid contribute a deterministic
+        // ≤ 5·10⁻⁷ per-dim centroid error — noise relative to any
+        // component scale a clustering is meaningful at, not a
+        // q34-style collapse of a whole summand class.
+        .agg((sum(col("val").cast(DecimalType(30, 6))).cast("double") /
+          count(col("val"))).as("mv"))
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (cid, rows) =>
+          (cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
+        }
+      Fixpoint.Next(cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) })
+    }.state
+    (assign(cents), cents)
   }
 
   /** Subvector `s` (0-based) of a `subDim`-striped vector column. */
@@ -1548,9 +1535,8 @@ object Similarity {
       .localCheckpoint(eager = false) // the d0 TakeOrdered materializes it
     val d0 = scat.filter(col("i") === col("j"))
       .orderBy(col("sv").desc, col("i")).select(col("i")).head().getInt(0)
-    var vec = Array.tabulate(d)(i => if (i == d0) 1.0 else 0.0)
-    var t = 0
-    while (t < iterations) {
+    val start = Array.tabulate(d)(i => if (i == d0) 1.0 else 0.0)
+    val vec = Fixpoint.iterate("pca_rounds", start, iterations) { (vec, _) =>
       val vLit = array(vec.map(lit): _*)
       // ONE job per round (r19): the matvec's d per-i sums, their
       // decimal-detoured squared norm and the driver pull ride a single
@@ -1571,9 +1557,8 @@ object Similarity {
         "pcaTopComponent: zero-variance corpus (all vectors identical) has no principal direction")
       val wMap = row.getSeq[org.apache.spark.sql.Row](1)
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      vec = Array.tabulate(d)(i => wMap(i) / nrm)
-      t += 1
-    }
+      Fixpoint.Next(Array.tabulate(d)(i => wMap(i) / nrm))
+    }.state
     val vLit = array(vec.map(lit): _*)
     // Rayleigh quotient and trace in ONE pass (r19): the diagonal filter
     // becomes a null-skipping `when` inside the same aggregation — the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftExpressions, TextFunctions}
+import graft.util.Fixpoint
 
 /** Unigram-LM tokenizer family (the SentencePiece unigram model — Kudo,
   * "Subword Regularization", ACL 2018): the second of the two dominant
@@ -151,9 +152,8 @@ object Unigram {
       .select(explode(transform(sequence(lit(1), length(col("word"))),
         p => col("word").substr(p, lit(1)))).as("piece"))
       .distinct().collect().map(_.getString(0)).toSet
-    var vocab = selectFromWords(words, vocabSize * seedMultiplier, maxPieceLen)
-    var r = 0
-    while (r < rounds) {
+    val seed = selectFromWords(words, vocabSize * seedMultiplier, maxPieceLen)
+    Fixpoint.iterate("unigram_rounds", seed, rounds) { (vocab, _) =>
       val counts = words
         .withColumn("_p", explode(
           call_function("graft_unigram_encode", col("word"), lit(pieceSpec(vocab)))))
@@ -166,10 +166,8 @@ object Unigram {
         .take(vocabSize)
       val keptSingles = singles.toSeq.sorted
         .map(s => (s, math.max(counts.getOrElse(s, 0L), 1L)))
-      vocab = withLogp((top ++ keptSingles).distinct
-        .groupBy(_._1).map { case (p, cs) => (p, cs.map(_._2).max) }.toSeq)
-      r += 1
-    }
-    vocab
+      Fixpoint.Next(withLogp((top ++ keptSingles).distinct
+        .groupBy(_._1).map { case (p, cs) => (p, cs.map(_._2).max) }.toSeq))
+    }.state
   }
 }

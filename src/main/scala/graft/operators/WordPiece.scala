@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftExpressions
+import graft.util.Fixpoint
 
 /** WordPiece tokenization (Wu et al. 2016 §4.1; the BERT vocabulary
   * convention) — the third tokenizer family beside BPE
@@ -70,12 +71,6 @@ object WordPiece {
   final case class Merge(rank: Int, left: String, right: String,
       merged: String, score: Double, freq: Long)
 
-  private def adjacentPairs(syms: org.apache.spark.sql.Column) =
-    zip_with(
-      slice(syms, lit(1), size(syms) - 1),
-      slice(syms, lit(2), size(syms) - 1),
-      (l, r) => struct(l.as("l"), r.as("r")))
-
   /** Initial WordPiece symbols of a word: first character bare, every
     * later character `##`-prefixed — the HF WordPiece trainer's start
     * state. */
@@ -106,22 +101,18 @@ object WordPiece {
       textCol: String = "text"): Seq[Merge] = {
     require(nMerges > 0, s"nMerges must be positive, got $nMerges")
     GraftExpressions.register(docs.sparkSession)
-    // lazy checkpoints (the Bpe.learnMerges discipline): the plan
-    // truncates immediately, the blocks materialize inside the round's
-    // argmax job — one action per round instead of checkpoint + argmax,
-    // and the final generation stops paying a wasted materialization.
-    var words = Unigram.wordFrequencies(docs, textCol)
+    // each generation's lazy cut materializes inside the next round's
+    // argmax job; the final one is never materialized.
+    // State: (words, merges so far).
+    val init = (Unigram.wordFrequencies(docs, textCol)
       .select(col("wfreq").as("n"), initialSymbols(col("word")).as("syms"))
-      .localCheckpoint(eager = false)
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
+      .localCheckpoint(eager = false), Vector.empty[Merge])
+    Fixpoint.iterate("wordpiece_rounds", init, nMerges) { case (s @ (words, merges), round) =>
       val symCounts = words
         .select(explode(col("syms")).as("s"), col("n"))
         .groupBy(col("s")).agg(sum(col("n")).as("cnt"))
       val top = words
-        .select(col("n"), explode(adjacentPairs(col("syms"))).as("p"))
+        .select(col("n"), explode(Bpe.adjacentPairs(col("syms"))).as("p"))
         .groupBy(col("p")).agg(sum(col("n")).as("freq"))
         .filter(col("freq") >= 2)
         .join(broadcast(symCounts.select(col("s").as("_l"), col("cnt").as("cl"))),
@@ -137,18 +128,16 @@ object WordPiece {
         .limit(1)
         .select(col("p.l"), col("p.r"), col("score"), col("freq"))
         .collect()
-      if (top.isEmpty) done = true
+      if (top.isEmpty) Fixpoint.Done(s)
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         val merged = a + b.stripPrefix("##")
-        merges += Merge(rank, a, b, merged, top(0).getDouble(2), top(0).getLong(3))
-        words = words.withColumn("syms",
+        Fixpoint.Next((words.withColumn("syms",
           call_function("graft_merge_step", col("syms"), lit(a), lit(b), lit(merged)))
-          .localCheckpoint(eager = false)
-        rank += 1
+          .localCheckpoint(eager = false),
+          merges :+ Merge(round + 1, a, b, merged, top(0).getDouble(2), top(0).getLong(3))))
       }
-    }
-    merges.result()
+    }.state._2
   }
 
   /** Greedy longest-match segmentation of every distinct word under a

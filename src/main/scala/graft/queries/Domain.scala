@@ -399,7 +399,7 @@ object Domain {
        |ORDER BY event_type""".stripMargin
 
   /** Structured Streaming Count-Min frequency estimates — the CMS
-    * ([[graft.functions.CMSketch]], the t55 machinery) running AS
+    * ([[graft.functions.CMSketchWeighted]], the t55 machinery) running AS
     * STREAMING STATE, completing the p10 symmetry for the sketch
     * family's ADDITIVE member: counter matrices element-wise add across
     * micro-batches exactly as across partitions, so the streamed matrix
@@ -673,7 +673,7 @@ object Domain {
 
   /** Streaming CDC upsert: the event stream last-writer-wins-merges
     * into a keyed parquet table per micro-batch
-    * ([[SilverStream.cdcUpsertSink]] → [[graft.io.Merge.lwwUpsertParquet]]);
+    * ([[SilverStream.cdcUpsertSink]] → [[graft.io.Merge.lwwUpsertParquetBucketed]]);
     * the converged table must equal the batch per-user argmax — the
     * stream≡batch equivalence gate applied to a WRITE loop (every other
     * p-stream gates a read-side aggregation). Batch-boundary

@@ -80,28 +80,22 @@ object SilverStream {
     * a batch is a no-op) — the streaming CDC pattern that needs no
     * _epoch dedup column, unlike [[appendSink]]'s at-least-once append.
     *
-    * The target is hash-bucketed on the key (`numBuckets` parquet
+    * The target is hash-bucketed on the key ([[CdcBuckets]] parquet
     * partitions) and each apply rewrites ONLY the buckets its batch
     * touches, so per-batch cost tracks the batch, not the table — the
     * shape that survives a long-running stream against a 100 TB target.
-    * `numBuckets = None` selects the whole-table copy-on-write path
-    * ([[graft.io.Merge.lwwUpsertParquet]]), right only when each batch
-    * rewrites most keys anyway. Bucketed readers see a trailing
-    * `_bucket` partition column — SELECTs should name their columns. */
+    * Bucketed readers see a trailing `_bucket` partition column —
+    * SELECTs should name their columns. */
   def cdcUpsertSink(df: DataFrame, outDir: String, key: String,
-      ordCols: Seq[String],
-      numBuckets: Option[Int] = Some(16)): DataStreamWriter[Row] =
+      ordCols: Seq[String]): DataStreamWriter[Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      numBuckets match {
-        case Some(n) =>
-          graft.io.Merge.lwwUpsertParquetBucketed(
-            batch.sparkSession, outDir, batch, key, ordCols, n)
-          ()
-        case None =>
-          graft.io.Merge.lwwUpsertParquet(
-            batch.sparkSession, outDir, batch, key, ordCols)
-      }
+      graft.io.Merge.lwwUpsertParquetBucketed(
+        batch.sparkSession, outDir, batch, key, ordCols, CdcBuckets)
+      ()
     }
+
+  /** Bucket count of every [[cdcUpsertSink]] target. */
+  private val CdcBuckets = 16
 
   /** foreachBatch SCD2 apply: day-stamped snapshot rows stream into a
     * persisted attribute-HISTORY dimension

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only scaling-corpus builder (a dev utility like [[PlanDump]] —
@@ -40,13 +40,7 @@ object ScaleUp {
     // arg 4: optional comma-list restricting which tables are written
     // (a single-query scale corpus needs only the tables it reads)
     val tableFilter = args.lift(4).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     val OFF = 100000000L
     val reps = spark.range(replicas).select(col("id").as("_r"))
 

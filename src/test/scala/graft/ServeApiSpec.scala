@@ -71,6 +71,23 @@ class ServeApiSpec extends SparkTestBase {
     } finally server.stop(0)
   }
 
+  test("malformed percent-escapes in the query string answer 400, not 500") {
+    // java.net.URI (and so HttpClient) refuses to build these requests,
+    // so they go out over a raw socket
+    val server = ServeApi.start(silver, model = None, ServeApi.Config(asOfDate = "2024-06-01"))
+    try for (q <- Seq("/predict/country/?country=%ZZ", "/predict/country/?country=NATION_7%")) {
+      val so = new java.net.Socket("127.0.0.1", server.getAddress.getPort)
+      try {
+        so.getOutputStream.write(
+          s"GET $q HTTP/1.1\r\nHost: 127.0.0.1\r\nConnection: close\r\n\r\n".getBytes("US-ASCII"))
+        val status = new java.io.BufferedReader(
+          new java.io.InputStreamReader(so.getInputStream, "US-ASCII")).readLine()
+        assert(status != null && status.startsWith("HTTP/1.1 400"), s"$q: $status")
+      } finally so.close()
+    }
+    finally server.stop(0)
+  }
+
   test("a stopped server leaves no non-daemon serve thread behind") {
     import scala.jdk.CollectionConverters._
     def serveThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
