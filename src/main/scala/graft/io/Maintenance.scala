@@ -1,6 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
 /** Table maintenance: small-file compaction (the OPTIMIZE-style lakehouse
   * operation). Streaming sinks and per-day batch jobs accumulate many
@@ -8,52 +10,54 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * file, footer reads, scheduler pressure) dominates unless layouts are
   * periodically rewritten into target-sized files.
   *
-  * Delta/Iceberg would provide this as `OPTIMIZE`; on plain parquet it is
-  * a read → repartition-to-size → atomic-swap rewrite.
+  * Delta/Iceberg would provide this as `OPTIMIZE`; on a
+  * [[VersionedTable]] it is a read → repartition-to-size → new version.
   */
 object Maintenance {
 
-  /** Rewrites a parquet table into ~targetFileBytes files. Returns
-    * (filesBefore, filesAfter). Partitioned layouts are handled by
-    * compacting each leaf partition directory in place (layout and
-    * partition pruning preserved); flat layouts swap atomically through
-    * a temp dir + checked rename ([[Merge.swapInto]]). */
+  /** Rewrites the current snapshot of the [[VersionedTable]] at `dir`
+    * into ~targetFileBytes files and publishes them as a new version by
+    * a read-modify-write commit. Returns (filesBefore, filesAfter); an
+    * already-compact snapshot is left as it is. A partitioned snapshot
+    * keeps its partition columns, layout and pruning: the rewrite is a
+    * range repartition on the partition columns (then a row hash), so a
+    * value larger than the target spans several files and small values
+    * share a task but still get one file each. */
   def compactParquet(spark: SparkSession, dir: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
+    val base = VersionedTable.base(spark, dir)
+    val m = base.current.getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed version under $dir"))
     // Bucketed LWW targets ([[Merge.lwwUpsertParquetBucketed]]) are
     // SELF-compacting — every apply replaces each dirty bucket dir
-    // whole with one freshly-written file, so bucket dirs never accrete
-    // small files and there is nothing for this pass to do. Running it
-    // anyway would be actively dangerous: the in-place leaf swap stages
-    // `_old` backups INSIDE the table root, where a crash strands a
-    // `_bucket=N_old` dir that partition discovery misparses and the
-    // bucketed crash recovery (backups under `<dir>_bak`) cannot heal.
-    require(!fs.exists(new org.apache.hadoop.fs.Path(dir + "_buckets.json")),
+    // whole with one freshly-written file — and a rewrite here would
+    // lose the one-dir-per-bucket layout the apply reads by.
+    require(!m.meta.contains(Merge.BucketsKey),
       s"$dir is a bucketed LWW target — it is self-compacting (each apply " +
-        "rewrites its dirty buckets whole) and compactParquet's in-root " +
-        "backup staging is unsafe for its crash recovery; nothing to do here")
-
-    def leafDirs(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val subdirs = fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_"))
-      if (subdirs.isEmpty) Seq(p) else subdirs.flatMap(s => leafDirs(s.getPath))
+        "rewrites its dirty buckets whole); nothing to do here")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // (file, its snapshot dir) for every parquet file of `dirs`
+    def files(dirs: Seq[String]) = dirs.flatMap { d =>
+      val snap = fs.makeQualified(new Path(dir, d))
+      val it = fs.listFiles(snap, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.endsWith(".parquet")).map(_ -> snap).toSeq
     }
-
-    def compactLeaf(p: org.apache.hadoop.fs.Path): (Int, Int) = {
-      val files = fs.listStatus(p).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      if (files.isEmpty) return (0, 0)
-      val nFiles = math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-      if (nFiles >= files.size) return (files.size, files.size) // already compact
-      Merge.swapInto(spark, p.toString,
-        spark.read.parquet(p.toString).repartition(nFiles), suffix = "_compacting")
-      val after = fs.listStatus(p).count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      (files.size, after)
+    val before = files(m.dirs)
+    val leaves = before.map(_._1.getPath.getParent).distinct.size
+    val nFiles = math.max(1,
+      math.ceil(before.map(_._1.getLen).sum.toDouble / targetFileBytes).toInt)
+    if (before.size <= math.max(nFiles, leaves)) return (before.size, before.size)
+    // partition columns: the `k=v` dirs between a snapshot dir and its files
+    val partCols = before.headOption.toSeq.flatMap { case (st, snap) =>
+      Iterator.iterate(st.getPath.getParent)(_.getParent).takeWhile(p => p != null && p != snap)
+        .map(_.getName.takeWhile(_ != '=')).toSeq.reverse
     }
-
-    val results = leafDirs(root).map(compactLeaf)
-    (results.map(_._1).sum, results.map(_._2).sum)
+    val cur = VersionedTable.read(spark, dir)
+    val out = VersionedTable.freshDir()
+    cur.repartitionByRange(nFiles,
+        (partCols.map(col) :+ xxhash64(cur.columns.map(col): _*)): _*)
+      .write.partitionBy(partCols: _*).parquet(new Path(dir, out).toString)
+    VersionedTable.commit(spark, dir, base, VersionedTable.Manifest(Seq(out)))
+    (before.size, files(Seq(out)).size)
   }
 }

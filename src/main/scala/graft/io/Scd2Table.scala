@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted SCD2 dimension driven by a STREAM of day-stamped snapshot
@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * attribute HISTORY via [[graft.gold.Scd2]]). Each apply groups the
   * arriving rows by their day column, applies each complete day's
   * snapshot in ascending order through the SAME batch `Scd2.apply`
-  * (stream ≡ batch structurally, the p06/p15 discipline), and swaps
-  * the rewritten dimension into place atomically.
+  * (stream ≡ batch structurally, the p06/p15 discipline), and
+  * publishes the rewritten dimension as one new version.
   *
   * Convergence contract: a day's snapshot must arrive whole within one
   * micro-batch (days are the unit of SCD2 time — a split day would
@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * of whole days into batches converges to the identical history, and
   * replays are no-ops: `Scd2.apply` of an already-applied (snapshot,
   * day) changes nothing (unchanged rows are kept by key+attr-hash,
-  * nothing closes, nothing opens), and the last-applied-day side file
-  * additionally skips stale days outright, so an at-least-once source
+  * nothing closes, nothing opens), and the last applied day (kept in
+  * the version's manifest) additionally skips stale days outright, so an at-least-once source
   * replaying OLD epochs after newer ones cannot regress history —
   * StreamingSpec drives reordered/replayed schedules to the same
   * table. The contract is ENFORCED, not just documented: a skipped
@@ -28,121 +28,98 @@ import org.apache.spark.sql.functions._
   * fails loudly instead of silently losing rows (see the stale-day
   * guard in [[applyDays]]).
   *
-  * Scale shape: dimensions are dimension-sized, so the whole-table
-  * copy-on-write swap ([[Merge.swapInto]]'s discipline) is the right
-  * plan here — unlike the fact-sized LWW target that needed
-  * [[Merge.lwwUpsertParquetBucketed]]. A 100 TB-fact pipeline's dims
-  * are GBs; were a dimension ever fact-sized, the same bucket layout
-  * applies (per-key version chains partition cleanly by key hash). */
+  * Each apply publishes the rewritten dimension as a new
+  * [[VersionedTable]] version by a read-modify-write commit, with the
+  * last applied day in the version's manifest — the day and the table
+  * it describes land in one atomic step, so no crash can separate them.
+  *
+  * Scale shape: dimensions are dimension-sized, so whole-table
+  * copy-on-write is the right plan here — unlike the fact-sized LWW
+  * target that needed [[Merge.lwwUpsertParquetBucketed]]. A 100
+  * TB-fact pipeline's dims are GBs; were a dimension ever fact-sized,
+  * the same bucket layout applies (per-key version chains partition
+  * cleanly by key hash). */
 object Scd2Table {
 
-  private def dayFile(dir: String) = new org.apache.hadoop.fs.Path(dir + "_scd2_day.json")
-
-  private def readLastDay(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Option[String] = {
-    val p = dayFile(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      "\"last_day\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1))
-    }
-  }
-
-  private def writeLastDay(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, day: String): Unit = {
-    val out = fs.create(dayFile(dir), true)
-    try out.write(s"""{"last_day":"$day"}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** Manifest metadata key holding the last applied day. */
+  private val LastDay = "last_day"
 
   /** Applies one micro-batch of day-stamped snapshot rows to the SCD2
     * dimension at `targetDir`. Returns the days actually applied (in
     * order) — empty when every day in the batch was stale or the batch
-    * was empty. Crash-safe at every step: a swap crashed between
-    * renames is healed by [[Merge.recoverCrashedSwap]] on the next
-    * apply; a crash between the swap and the side-file write makes the
-    * replayed epoch re-apply its days, which is a no-op by SCD2
-    * idempotence. */
+    * was empty. Crash-safe at every step: nothing is visible until the
+    * commit, and a replayed epoch re-applies its days, which is a no-op
+    * by SCD2 idempotence. */
   def applyDays(spark: SparkSession, targetDir: String, batch: DataFrame,
       key: String, attrs: Seq[String], dayCol: String): Seq[String] = {
     require(attrs.nonEmpty, "scd2 needs at least one tracked attribute")
-    val path = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Merge.recoverCrashedSwap(fs, targetDir)
-    val lastApplied = readLastDay(fs, targetDir)
+    val base = VersionedTable.base(spark, targetDir)
+    val lastApplied = base.current.flatMap(_.meta.get(LastDay))
     val b = batch.cache()
-    // ≤ days-per-batch strings — the driver collect that tells the
-    // apply which day slices exist without scanning the target
-    val days = b.select(col(dayCol)).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    val toApply = days.filter(d => lastApplied.forall(_ < d))
-    // Stale-day guard: a day at or below lastApplied is only skippable
-    // when it is a REPLAY — its rows must equal the snapshot the history
-    // already encodes at that day. Anything else is one of the two
-    // silent-corruption shapes the in-order/whole-day contract forbids:
-    // a day SPLIT across micro-batches (the first half already closed
-    // the keys the second half carries — swallowing the rest would
-    // leave wrong history), or a genuinely NEW day delivered out of
-    // order (its changes would vanish forever). Both now fail loudly.
-    // Cost: runs only on the skip path (rare — at-least-once replays),
-    // two set-difference counts per skipped day against a
-    // dimension-sized table.
-    val skippedStale = days.filterNot(toApply.toSet)
-    if (skippedStale.nonEmpty && fs.exists(path)) {
-      val hist = spark.read.parquet(targetDir)
-      skippedStale.foreach { d =>
-        val snap = b.filter(col(dayCol) === d)
-          .select((key +: attrs).map(col): _*).distinct()
-        // the snapshot the history implies at day d: versions effective
-        // at d ([effective_from, effective_to) contains d; open = null)
-        val asAt = hist.filter(col("effective_from") <= d &&
-            (col("effective_to").isNull || col("effective_to") > d))
-          .select((key +: attrs).map(col): _*).distinct()
-        val extra = snap.except(asAt).count()
-        val missing = asAt.except(snap).count()
-        if (extra != 0 || missing != 0)
-          throw new IllegalStateException(
-            s"scd2 stale-day guard: day $d is at or below the last applied day " +
-              s"(${lastApplied.getOrElse("<none>")}) but is NOT a replay of the " +
-              s"applied history ($extra row(s) unknown to the history, $missing " +
-              "missing from the batch). Either the day was split across " +
-              "micro-batches (each day's snapshot must arrive whole in one " +
-              "batch) or a new day arrived out of order — refusing to " +
-              "silently drop its rows.")
+    try {
+      // ≤ days-per-batch strings — the driver collect that tells the
+      // apply which day slices exist without scanning the target
+      val days = b.select(col(dayCol)).distinct()
+        .collect().map(_.getString(0)).sorted.toSeq
+      val toApply = days.filter(d => lastApplied.forall(_ < d))
+      // Stale-day guard: a day at or below lastApplied is only skippable
+      // when it is a REPLAY — its rows must equal the snapshot the history
+      // already encodes at that day. Anything else is one of the two
+      // silent-corruption shapes the in-order/whole-day contract forbids:
+      // a day SPLIT across micro-batches (the first half already closed
+      // the keys the second half carries — swallowing the rest would
+      // leave wrong history), or a genuinely NEW day delivered out of
+      // order (its changes would vanish forever). Both now fail loudly.
+      // Cost: runs only on the skip path (rare — at-least-once replays),
+      // two set-difference counts per skipped day against a
+      // dimension-sized table.
+      val skippedStale = days.filterNot(toApply.toSet)
+      if (skippedStale.nonEmpty && base.current.nonEmpty) {
+        val hist = VersionedTable.read(spark, targetDir)
+        skippedStale.foreach { d =>
+          val snap = b.filter(col(dayCol) === d)
+            .select((key +: attrs).map(col): _*).distinct()
+          // the snapshot the history implies at day d: versions effective
+          // at d ([effective_from, effective_to) contains d; open = null)
+          val asAt = hist.filter(col("effective_from") <= d &&
+              (col("effective_to").isNull || col("effective_to") > d))
+            .select((key +: attrs).map(col): _*).distinct()
+          val extra = snap.except(asAt).count()
+          val missing = asAt.except(snap).count()
+          if (extra != 0 || missing != 0)
+            throw new IllegalStateException(
+              s"scd2 stale-day guard: day $d is at or below the last applied day " +
+                s"(${lastApplied.getOrElse("<none>")}) but is NOT a replay of the " +
+                s"applied history ($extra row(s) unknown to the history, $missing " +
+                "missing from the batch). Either the day was split across " +
+                "micro-batches (each day's snapshot must arrive whole in one " +
+                "batch) or a new day arrived out of order — refusing to " +
+                "silently drop its rows.")
+        }
       }
-    }
-    if (toApply.isEmpty) { b.unpersist(); return Nil }
-    val exists = fs.exists(path)
-    var dim: DataFrame = if (exists) spark.read.parquet(targetDir) else null
-    toApply.zipWithIndex.foreach { case (d, i) =>
-      val snap = b.filter(col(dayCol) === d)
-        .select((key +: attrs).map(col): _*)
-      dim =
-        if (dim == null) graft.gold.Scd2.init(snap, key, attrs, d)
-        else graft.gold.Scd2(dim, snap, key, attrs, d)
-      // eager cut BETWEEN days: the apply chain is anti/semi-join-deep
-      // (each apply references dim twice), so a multi-day batch would
-      // otherwise stack lineage day over day. The LAST day is left
-      // lazy (r19): its only consumer is the single swap/bootstrap
-      // write below, so an eager checkpoint there was one whole extra
-      // dimension-sized materialization job per micro-batch.
-      if (i < toApply.size - 1) dim = dim.localCheckpoint()
-    }
-    if (exists) Merge.swapInto(spark, targetDir, dim, suffix = "_scd2")
-    else {
-      // bootstrap through temp+rename: crash mid-write leaves the
-      // target absent, never half-committed (the Merge discipline)
-      val tmp = new org.apache.hadoop.fs.Path(targetDir + "_scd2")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      dim.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      require(fs.rename(tmp, path),
-        s"bootstrap failed: could not move $tmp into place")
-    }
-    writeLastDay(fs, targetDir, toApply.last)
-    b.unpersist()
-    toApply
+      if (toApply.nonEmpty) {
+        var dim: DataFrame =
+          if (base.current.nonEmpty) VersionedTable.read(spark, targetDir) else null
+        toApply.zipWithIndex.foreach { case (d, i) =>
+          val snap = b.filter(col(dayCol) === d)
+            .select((key +: attrs).map(col): _*)
+          dim =
+            if (dim == null) graft.gold.Scd2.init(snap, key, attrs, d)
+            else graft.gold.Scd2(dim, snap, key, attrs, d)
+          // eager cut BETWEEN days: the apply chain is anti/semi-join-deep
+          // (each apply references dim twice), so a multi-day batch would
+          // otherwise stack lineage day over day. The LAST day is left
+          // lazy (r19): its only consumer is the single snapshot write
+          // below, so an eager checkpoint there was one whole extra
+          // dimension-sized materialization job per micro-batch.
+          if (i < toApply.size - 1) dim = dim.localCheckpoint()
+        }
+        val dir = VersionedTable.freshDir()
+        dim.write.parquet(new org.apache.hadoop.fs.Path(targetDir, dir).toString)
+        VersionedTable.commit(spark, targetDir, base,
+          VersionedTable.Manifest(Seq(dir), Map(LastDay -> toApply.last)))
+      }
+      toApply
+    } finally b.unpersist()
   }
 }

@@ -692,8 +692,8 @@ object Domain {
       .start()
     q.awaitTermination()
     // name the columns: the bucketed target carries a trailing _bucket
-    // partition column (layout, not data — the oracle never sees it)
-    spark.read.parquet(out)
+    // column (layout, not data — the oracle never sees it)
+    graft.io.VersionedTable.read(spark, out)
       .select("user_id", "event_id", "ts", "event_type", "value")
       .orderBy(col("user_id"))
   }
@@ -737,7 +737,7 @@ object Domain {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(out)
+    graft.io.VersionedTable.read(spark, out)
       .select("c_custkey", "seg", "nat", "effective_from", "effective_to", "is_current")
       .orderBy(col("c_custkey"), col("effective_from"))
   }
@@ -769,7 +769,7 @@ object Domain {
     q.awaitTermination()
     // materialized: the frame must outlive RotatingTempDir's pruning of
     // this invocation's index generation (the v05 discipline)
-    spark.read.parquet(out)
+    graft.io.VersionedTable.read(spark, out)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
       .orderBy(col("query_id"), col("rank"))
       .localCheckpoint()

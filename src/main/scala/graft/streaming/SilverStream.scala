@@ -80,17 +80,20 @@ object SilverStream {
     * a batch is a no-op) — the streaming CDC pattern that needs no
     * _epoch dedup column, unlike [[appendSink]]'s at-least-once append.
     *
-    * The target is hash-bucketed on the key ([[CdcBuckets]] parquet
-    * partitions) and each apply rewrites ONLY the buckets its batch
-    * touches, so per-batch cost tracks the batch, not the table — the
-    * shape that survives a long-running stream against a 100 TB target.
-    * Bucketed readers see a trailing `_bucket` partition column —
-    * SELECTs should name their columns. */
+    * The target is a [[graft.io.VersionedTable]] hash-bucketed on the
+    * key ([[CdcBuckets]] buckets) and each apply rewrites ONLY the
+    * buckets its batch touches, so per-batch cost tracks the batch, not
+    * the table — the shape that survives a long-running stream against
+    * a 100 TB target. Each apply is followed by a `vacuum(keep = 2)`, so
+    * a long stream's storage stays bounded. Readers go through
+    * `VersionedTable.read` and see a trailing `_bucket` column — SELECTs
+    * should name their columns. */
   def cdcUpsertSink(df: DataFrame, outDir: String, key: String,
       ordCols: Seq[String]): DataStreamWriter[Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       graft.io.Merge.lwwUpsertParquetBucketed(
         batch.sparkSession, outDir, batch, key, ordCols, CdcBuckets)
+      graft.io.VersionedTable.vacuum(batch.sparkSession, outDir, keep = 2)
       ()
     }
 
@@ -109,12 +112,14 @@ object SilverStream {
     * so at-least-once delivery converges to the exact batch-applied
     * history — while a day split across micro-batches or a genuinely
     * new day arriving out of order fails loudly instead of silently
-    * losing rows. */
+    * losing rows. The dimension is a [[graft.io.VersionedTable]],
+    * vacuumed to two versions after each apply. */
   def scd2Sink(df: DataFrame, outDir: String, key: String,
       attrs: Seq[String], dayCol: String): DataStreamWriter[Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       graft.io.Scd2Table.applyDays(batch.sparkSession, outDir, batch,
         key, attrs, dayCol)
+      graft.io.VersionedTable.vacuum(batch.sparkSession, outDir, keep = 2)
       ()
     }
 
@@ -150,6 +155,7 @@ object SilverStream {
         .withColumn("_probe_epoch", lit(epochId))
       graft.io.Merge.lwwUpsertParquetBucketed(batch.sparkSession, outDir,
         hits, "_qr", Seq("_probe_epoch", "neighbor_id"), numBuckets = 4)
+      graft.io.VersionedTable.vacuum(batch.sparkSession, outDir, keep = 2)
       ()
     }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.gold.Scd2
-import graft.io.Merge
+import graft.io.{Merge, VersionedTable}
 import graft.silver.DataQuality
 
 /** Lakehouse table operations: upsert/merge, SCD2 history, row-level
@@ -13,12 +13,12 @@ class LakehouseOpsSpec extends SparkTestBase {
 
   test("upsert: updates win, inserts append, untouched rows survive") {
     val dir = java.nio.file.Files.createTempDirectory("graft_merge_").toString + "/t"
-    Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
-      .toDF("k", "name", "v").write.parquet(dir)
+    VersionedTable.write(spark, dir, Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
+      .toDF("k", "name", "v"))
     val updates = Seq((2L, "b2", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
-    val (before, after, updated, inserted) = Merge.upsertParquet(spark, dir, updates, "k")
+    val (before, after, updated, inserted) = VersionedTable.upsert(spark, dir, updates, "k")
     assert((before, after, updated, inserted) === ((3L, 4L, 1L, 1L)))
-    val rows = spark.read.parquet(dir).as[(Long, String, Double)].collect().toSet
+    val rows = VersionedTable.read(spark, dir).as[(Long, String, Double)].collect().toSet
     assert(rows === Set((1L, "a", 10.0), (2L, "b2", 21.0), (3L, "c", 30.0), (4L, "d", 40.0)))
   }
 
@@ -202,10 +202,10 @@ class LakehouseOpsSpec extends SparkTestBase {
 
   test("upsert with duplicate update keys reports key-level counts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_merge2_").toString + "/t"
-    Seq((1L, "a"), (2L, "b")).toDF("k", "name").write.parquet(dir)
+    VersionedTable.write(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "name"))
     // two update rows for the same existing key + one new key
     val updates = Seq((2L, "b2"), (2L, "b3"), (9L, "z")).toDF("k", "name")
-    val (before, after, updated, inserted) = Merge.upsertParquet(spark, dir, updates, "k")
+    val (before, after, updated, inserted) = VersionedTable.upsert(spark, dir, updates, "k")
     assert((before, updated, inserted) === ((2L, 1L, 1L)))
     assert(after === 4L) // 1 untouched + 2 rows for k=2 (grain preserved) + 1 new
   }
@@ -292,44 +292,34 @@ class LakehouseOpsSpec extends SparkTestBase {
 
   // ---- bucketed LWW CDC merge (the scale-safe p15 target layout) ----
 
-  private def lwwCols(dir: String) = spark.read.parquet(dir)
+  private def lwwCols(dir: String) = VersionedTable.read(spark, dir)
     .select("k", "name", "v")
 
-  /** (file name, length, mtime) signature of every file under each
-    * `_bucket=K` dir — byte-level "was this partition touched" probe. */
-  private def bucketSignatures(dir: String): Map[String, Set[(String, Long, Long)]] = {
-    val root = new java.io.File(dir)
-    root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("_bucket="))
-      .map { d =>
-        d.getName -> d.listFiles().filter(_.isFile)
-          .map(f => (f.getName, f.length(), f.lastModified())).toSet
-      }.toMap
-  }
+  /** bucket → its dir in the current version's manifest — the "was this
+    * bucket rewritten" probe: a rewrite commits a new dir. */
+  private def bucketDirs(dir: String): Map[Int, String] =
+    VersionedTable.base(spark, dir).current.get.dirs
+      .map(d => d.substring(d.lastIndexOf('=') + 1).toInt -> d).toMap
 
   test("bucketed lww upsert: converges to the per-key argmax and only dirty buckets rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("graft_blww_").toString + "/t"
     // enough keys that most of the 16 buckets are populated
     val base = (1L to 200L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v")
     val d0 = Merge.lwwUpsertParquetBucketed(spark, dir, base, "k", Seq("v"))
-    assert(d0.nonEmpty && spark.read.parquet(dir).count() === 200)
-    val before = bucketSignatures(dir)
+    assert(d0.nonEmpty && VersionedTable.read(spark, dir).count() === 200)
+    val before = bucketDirs(dir)
     assert(before.size > 8, s"200 keys should populate most buckets, got ${before.size}")
     // small batch: 2 keys (one stale change that must NOT regress k=7)
     val batch = Seq((7L, "new7", 5L), (7L, "stale7", 0L), (8L, "new8", 3L))
       .toDF("k", "name", "v")
     val dirty = Merge.lwwUpsertParquetBucketed(spark, dir, batch, "k", Seq("v"))
-    // touched-partition count ∝ distinct update buckets, NOT target size
+    // touched-bucket count ∝ distinct update buckets, NOT target size
     assert(dirty.size <= 2, s"2 update keys must touch <= 2 buckets, got $dirty")
-    val after = bucketSignatures(dir)
-    val untouched = before.keySet.filterNot(n =>
-      dirty.map(b => s"_bucket=$b").contains(n))
-    untouched.foreach { n =>
-      assert(after(n) === before(n), s"clean bucket $n was rewritten")
-    }
-    dirty.foreach { b =>
-      assert(after(s"_bucket=$b") !== before.getOrElse(s"_bucket=$b", Set.empty),
-        s"dirty bucket $b was not rewritten")
-    }
+    // exactly the dirty buckets' dirs change between the two versions
+    val after = bucketDirs(dir)
+    assert(after.keySet === before.keySet ++ dirty)
+    assert(after.filter { case (b, d) => before.get(b) != Some(d) }.keySet === dirty.toSet,
+      s"only dirty buckets may get new dirs: $before -> $after")
     // LWW semantics across the merge: max-v row wins per key
     def asMap() = lwwCols(dir).as[(Long, String, Long)].collect()
       .map(t => t._1 -> ((t._2, t._3))).toMap
@@ -344,68 +334,62 @@ class LakehouseOpsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Merge.lwwUpsertParquetBucketed(spark, dir, batch, "k", Seq("v"), numBuckets = 8)
     }
-    // the dirty-bucket read is PARTITION-PRUNED: the apply's scoped scan
-    // must carry a partition filter on _bucket, so clean buckets' files
-    // are never opened (the plan-shape half of the file-signature proof)
-    val scoped = spark.read.parquet(dir)
-      .filter(col("_bucket").isin(dirty.map(Int.box): _*))
-    val plan = scoped.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("_bucket"),
-      s"dirty-bucket scan must prune partitions:\n$plan")
+    // the apply's scoped read opens only the dirty buckets' dirs, so
+    // clean buckets' files are never read
+    val m = VersionedTable.base(spark, dir).current.get
+    val scopedFiles = Merge.scopedTarget(spark, dir, m, dirty).inputFiles.toSeq
+    val dirtyDirs = dirty.map(bucketDirs(dir))
+    assert(scopedFiles.nonEmpty && scopedFiles.forall(f => dirtyDirs.exists(d => f.contains(s"/$d/"))),
+      s"scoped read must open only $dirtyDirs, opened $scopedFiles")
   }
 
   test("bucketed lww upsert equals the unbucketed merge on the same change set") {
     val dirB = java.nio.file.Files.createTempDirectory("graft_blww_eq_").toString + "/b"
-    val dirU = java.nio.file.Files.createTempDirectory("graft_blww_eq_").toString + "/u"
     val batches = Seq(
       Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "c", 1L)),
       Seq((2L, "b2", 5L), (4L, "d", 1L)),
       Seq((1L, "stale", 0L), (3L, "c2", 9L)))
     batches.foreach { b =>
-      val df = b.toDF("k", "name", "v")
-      Merge.lwwUpsertParquetBucketed(spark, dirB, df, "k", Seq("v", "name"), numBuckets = 4)
-      Merge.lwwUpsertParquet(spark, dirU, df, "k", Seq("v", "name"))
+      Merge.lwwUpsertParquetBucketed(spark, dirB, b.toDF("k", "name", "v"),
+        "k", Seq("v", "name"), numBuckets = 4)
     }
+    // the reference: the pure LWW frame over the whole change set
+    val reference = Merge.lww(batches.flatten.toDF("k", "name", "v"), "k", Seq("v", "name"))
     assert(lwwCols(dirB).as[(Long, String, Long)].collect().sorted.toSeq ===
-      spark.read.parquet(dirU).select("k", "name", "v")
-        .as[(Long, String, Long)].collect().sorted.toSeq)
+      reference.as[(Long, String, Long)].collect().sorted.toSeq)
   }
 
-  test("lww crash recovery: a swap crashed between renames restores the backup, not bootstrap") {
+  test("lww crash recovery: an apply crashed before its marker leaves the prior version, and the replay merges into it") {
     val dir = java.nio.file.Files.createTempDirectory("graft_lww_cr_").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Merge.lwwUpsertParquet(spark, dir,
-      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "name", "v"), "k", Seq("v"))
-    // simulate the crash window: target moved aside, replacement never landed
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "_old")))
-    Merge.lwwUpsertParquet(spark, dir,
-      Seq((3L, "c", 1L)).toDF("k", "name", "v"), "k", Seq("v"))
-    // without recovery this bootstraps from the one replayed batch and
-    // silently loses keys 1 and 2
-    assert(spark.read.parquet(dir).select("k").as[Long].collect().toSet
-      === Set(1L, 2L, 3L))
+    Merge.lwwUpsertParquetBucketed(spark, dir,
+      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
+    // the crash state: an apply wrote its snapshot dir (a one-row
+    // bucket leaf) and died before creating its marker
+    val orphan = new java.io.File(dir, "d-0rphan000000/_b=0")
+    Seq((3L, "c", 1L, 0)).toDF("k", "name", "v", "_bucket").write.parquet(orphan.toString)
+    assert(VersionedTable.currentVersion(spark, dir) === Some(1L))
+    assert(lwwCols(dir).select("k").as[Long].collect().toSet === Set(1L, 2L),
+      "a snapshot without a marker is invisible")
+    // the replayed epoch merges into the committed version, not a bootstrap
+    Merge.lwwUpsertParquetBucketed(spark, dir,
+      Seq((3L, "c", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
+    assert(lwwCols(dir).select("k").as[Long].collect().toSet === Set(1L, 2L, 3L))
+    assert(VersionedTable.currentVersion(spark, dir) === Some(2L))
   }
 
-  test("bucketed lww crash recovery: a bucket stranded in _bak is restored before the apply") {
+  test("bucketed lww crash recovery: an empty marker from a crashed commit is skipped and no key is lost") {
     val dir = java.nio.file.Files.createTempDirectory("graft_blww_cr_").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = (1L to 50L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v")
     Merge.lwwUpsertParquetBucketed(spark, dir, base, "k", Seq("v"), numBuckets = 8)
-    val buckets = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("_bucket=")).map(_.getName)
-    val victim = buckets.head
-    val victimKeys = spark.read.parquet(s"$dir/$victim").select("k").as[Long].collect().toSet
-    // crash window: victim bucket moved aside, fresh copy never landed
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir + "_bak"))
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/$victim"),
-      new org.apache.hadoop.fs.Path(s"${dir}_bak/$victim")))
+    // the crash state: an apply created marker 2 and died before
+    // writing its manifest into it
+    assert(new java.io.File(dir, "_log/000000002").createNewFile())
+    assert(lwwCols(dir).count() === 50L, "the empty marker is not a committed version")
+    // the restarted apply commits above the dead marker
     Merge.lwwUpsertParquetBucketed(spark, dir,
       Seq((999L, "z", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 8)
-    val keys = spark.read.parquet(dir).select("k").as[Long].collect().toSet
-    assert(victimKeys.subsetOf(keys), "stranded bucket's keys must be restored, not lost")
-    assert(keys.contains(999L))
+    assert(VersionedTable.currentVersion(spark, dir) === Some(3L))
+    val keys = lwwCols(dir).select("k").as[Long].collect().toSet
+    assert(keys === (1L to 50L).toSet + 999L, "every committed key must survive")
   }
 }

@@ -2,33 +2,46 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.io.Maintenance
+import graft.io.{Maintenance, VersionedTable}
 import graft.operators.Dedup
 
 class MaintenanceSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** Lays a committed version out on disk the way any writer leaves
+    * it: a snapshot dir `write` fills, then marker 1 naming it. */
+  private def committedTable(root: String)(write: String => Unit): Unit = {
+    write(s"$root/d-000000000001")
+    val log = new java.io.File(root, "_log")
+    assert(log.mkdirs())
+    java.nio.file.Files.write(new java.io.File(log, "000000001").toPath,
+      "d-000000000001".getBytes("UTF-8"))
+  }
+
   test("compaction collapses many small files and preserves every row") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact_").toString + "/t"
     // 64 tiny files
-    spark.range(10000).select(col("id"), (col("id") % 7).as("k"))
-      .repartition(64).write.parquet(dir)
-    val beforeRows = spark.read.parquet(dir).count()
+    VersionedTable.write(spark, dir,
+      spark.range(10000).select(col("id"), (col("id") % 7).as("k")).repartition(64))
+    val beforeRows = VersionedTable.read(spark, dir).count()
     val (before, after) = Maintenance.compactParquet(spark, dir, targetFileBytes = 1L << 20)
     assert(before === 64)
     assert(after < 8, s"expected few files, got $after")
-    val compacted = spark.read.parquet(dir)
+    assert(VersionedTable.currentVersion(spark, dir) === Some(2L), "published as a new version")
+    val compacted = VersionedTable.read(spark, dir)
     assert(compacted.count() === beforeRows)
     assert(compacted.agg(sum("id")).head().getLong(0) === (9999L * 10000L) / 2)
   }
 
   test("compaction of a partitioned table preserves layout and pruning") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact_p_").toString + "/t"
-    spark.range(4000).select(col("id"), (col("id") % 3).cast("string").as("day"))
-      .repartition(16).write.partitionBy("day").parquet(dir)
+    committedTable(dir) { snap =>
+      spark.range(4000).select(col("id"), (col("id") % 3).cast("string").as("day"))
+        .repartition(16).write.partitionBy("day").parquet(snap)
+    }
     val (before, after) = Maintenance.compactParquet(spark, dir, targetFileBytes = 1L << 20)
     assert(before === 48 && after === 3, s"got ($before, $after)") // 16 files × 3 partitions → 1 each
-    val back = spark.read.parquet(dir)
+    val back = VersionedTable.read(spark, dir)
     assert(back.count() === 4000)
     val pruned = back.filter(col("day") === "1")
     val plan = pruned.queryExecution.executedPlan.toString
@@ -36,21 +49,33 @@ class MaintenanceSpec extends SparkTestBase {
       s"partition layout must survive compaction:\n$plan")
   }
 
-  test("compactParquet refuses a bucketed LWW target (self-compacting; in-root swap unsafe there)") {
+  test("compactParquet refuses a bucketed manifest (self-compacting)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact_b_").toString + "/t"
     graft.io.Merge.lwwUpsertParquetBucketed(spark, dir,
       (1L to 50L).map(kk => (kk, s"n$kk", 1L)).toDF("k", "name", "v"),
       "k", Seq("v"), numBuckets = 4)
     // each apply already rewrites its dirty buckets whole (one file per
-    // bucket), so there is nothing to compact — and the generic pass's
-    // in-root `_old` staging would strand a `_bucket=N_old` dir on crash
-    // that partition discovery misparses; it must refuse loudly
+    // bucket), so there is nothing to compact — and a rewrite would lose
+    // the one-dir-per-bucket layout the apply reads by; it must refuse
     val thrown = intercept[IllegalArgumentException] {
       Maintenance.compactParquet(spark, dir)
     }
     assert(thrown.getMessage.contains("self-compacting"))
     // the table is untouched and still reads
-    assert(spark.read.parquet(dir).count() === 50L)
+    assert(VersionedTable.currentVersion(spark, dir) === Some(1L))
+    assert(VersionedTable.read(spark, dir).count() === 50L)
+  }
+
+  test("a compaction crashed before its marker leaves the prior version, and a re-run compacts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_cr_").toString + "/t"
+    VersionedTable.write(spark, dir, spark.range(1000).toDF("id").repartition(16))
+    // the crash state: the compacted snapshot was written, its marker never was
+    spark.range(1000).toDF("id").coalesce(1).write.parquet(s"$dir/d-0rphan000000")
+    assert(VersionedTable.read(spark, dir).inputFiles.length === 16,
+      "readers still see the uncompacted version")
+    assert(Maintenance.compactParquet(spark, dir, targetFileBytes = 1L << 20) === ((16, 1)))
+    assert(VersionedTable.currentVersion(spark, dir) === Some(2L))
+    assert(VersionedTable.read(spark, dir).agg(sum("id")).head().getLong(0) === 999L * 1000L / 2)
   }
 
   test("compactNearDupIndex folds batches into __base__ with probe results identical") {

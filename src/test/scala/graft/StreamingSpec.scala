@@ -931,7 +931,10 @@ class StreamingSpec extends SparkTestBase {
         .start()
       batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
       q.stop()
-      spark.read.parquet(dir).collect()
+      // the sink vacuums to two versions after each apply
+      assert(new java.io.File(dir, "_log").list().count(_.forall(_.isDigit)) ===
+        math.min(batches.size, 2))
+      graft.io.VersionedTable.read(spark, dir).collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(3), r.getDouble(4))))
         .toMap
     }
@@ -973,7 +976,7 @@ class StreamingSpec extends SparkTestBase {
         q.processAllAvailable()
       }
       q.stop()
-      spark.read.parquet(dir)
+      graft.io.VersionedTable.read(spark, dir)
         .as[(Long, String, String, Option[String], Boolean)].collect().toSet
     }
     val exp = expected
@@ -1075,7 +1078,7 @@ class StreamingSpec extends SparkTestBase {
         .start()
       batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
       q.stop()
-      spark.read.parquet(out)
+      graft.io.VersionedTable.read(spark, out)
         .select("query_id", "rank", "neighbor_id")
         .as[(Long, Long, Long)].collect().toSet
     }
@@ -1121,7 +1124,7 @@ class StreamingSpec extends SparkTestBase {
     input.addData(queries: _*)
     q.processAllAvailable()
     q.stop()
-    val got = spark.read.parquet(out)
+    val got = graft.io.VersionedTable.read(spark, out)
       .select("query_id", "rank", "neighbor_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(got === expected,
@@ -1165,7 +1168,7 @@ class StreamingSpec extends SparkTestBase {
       .ivfTopKAgainstIndex(spark, query.toDF("vec_id", "embedding", "label"), idx, k = 5)
       .select("query_id", "rank", "neighbor_id")
       .as[(Long, Long, Long)].collect().toSet
-    val got = spark.read.parquet(out)
+    val got = graft.io.VersionedTable.read(spark, out)
       .select("query_id", "rank", "neighbor_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(got === expected,
@@ -1189,30 +1192,25 @@ class StreamingSpec extends SparkTestBase {
     input.addData((1L to 300L).map(u =>
       (u, u, t("2024-01-01 10:00:00"), "a", 1.0)): _*)
     q.processAllAvailable()
-    def sigs(): Map[String, Set[(String, Long, Long)]] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("_bucket="))
-        .map { d =>
-          d.getName -> d.listFiles().filter(_.isFile)
-            .map(f => (f.getName, f.length(), f.lastModified())).toSet
-        }.toMap
-    }
-    val before = sigs()
+    // the current version's bucket dirs: a rewritten bucket gets a new dir
+    def dirs(): Set[String] =
+      graft.io.VersionedTable.base(spark, dir).current.get.dirs.toSet
+    val before = dirs()
     assert(before.size === 16, "300 keys must populate all 16 buckets")
     // batch 2: ONE user updates — exactly one bucket may rewrite
     input.addData((7L, 1000L, t("2024-01-01 11:00:00"), "b", 2.0))
     q.processAllAvailable()
     q.stop()
-    val after = sigs()
-    val changed = before.keySet.filter(n => after(n) != before(n))
-    assert(changed.size === 1,
+    val after = dirs()
+    val changed = before -- after
+    assert(changed.size === 1 && after.size === 16,
       s"a 1-key batch must rewrite exactly 1 of 16 buckets, rewrote $changed")
     // and the table is still the converged per-key argmax
-    val row7 = spark.read.parquet(dir)
+    val row7 = graft.io.VersionedTable.read(spark, dir)
       .filter(col("user_id") === 7L)
       .select("event_id", "event_type").as[(Long, String)].collect()
     assert(row7.toSeq === Seq((1000L, "b")))
-    assert(spark.read.parquet(dir).count() === 300)
+    assert(graft.io.VersionedTable.read(spark, dir).count() === 300)
   }
 
 }

@@ -2,11 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import graft.io.VersionedTable
+import graft.io.{Merge, VersionedTable}
 
-/** The gap-free table swap: version publish is an atomic marker create,
-  * so a concurrent reader must ALWAYS resolve a complete committed
-  * snapshot — the property Merge.swapInto's rename window lacks. */
+/** The one commit protocol: version publish is an atomic marker create
+  * naming a manifest, so a concurrent reader must ALWAYS resolve a
+  * complete committed snapshot, a read-modify-write commit on a stale
+  * base must fail loudly, and vacuum must never delete a dir a kept
+  * version lists. Crash states are laid out on disk: an orphan `d-*` dir
+  * with no marker, or an empty marker. */
 class VersionedTableSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -16,6 +19,7 @@ class VersionedTableSpec extends SparkTestBase {
   test("write/read round trip, version numbers increase") {
     val root = tmpRoot("rt")
     assert(VersionedTable.currentVersion(spark, root).isEmpty)
+    assert(VersionedTable.vacuum(spark, root) === Seq.empty, "a root with no version yet")
     val v1 = VersionedTable.write(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "name"))
     val v2 = VersionedTable.write(spark, root, Seq((1L, "a2")).toDF("k", "name"))
     assert(v1 === 1L && v2 === 2L)
@@ -161,5 +165,61 @@ class VersionedTableSpec extends SparkTestBase {
     VersionedTable.vacuum(spark, root, keep = 1)
     assert(VersionedTable.read(spark, root).count() === 5L,
       "the kept version's shared dir must survive the doomed duplicate marker")
+  }
+
+  test("two upserts on the same base version: the second fails loudly, the first's rows survive") {
+    val root = tmpRoot("lost")
+    VersionedTable.write(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "name"))
+    // upsert B takes base v1 and is held before it merges; upsert A
+    // commits v2 in that window. B's commit at v1 + 1 must fail: a blind
+    // retry at v3 would drop A's row without an error.
+    val b = PausedWriter.race(Seq((3L, "c")).toDF("k", "name")) { u =>
+      VersionedTable.upsert(spark, root, u, "k")
+    } {
+      VersionedTable.upsert(spark, root, Seq((2L, "b2")).toDF("k", "name"), "k")
+    }
+    assert(b.isFailure && b.failed.get.isInstanceOf[IllegalStateException], b.toString)
+    assert(b.failed.get.getMessage.contains("concurrent commit"), b.failed.get.getMessage)
+    assert(VersionedTable.currentVersion(spark, root) === Some(2L), "B committed nothing")
+    assert(VersionedTable.read(spark, root).as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b2")))
+    // B's staged snapshot was deleted with its failed commit
+    assert(new java.io.File(root).listFiles().count(_.getName.startsWith("d-")) === 2)
+  }
+
+  test("a manifest longer than 256 bytes round-trips through its marker") {
+    val root = tmpRoot("long")
+    // 300 keys fill all 16 buckets: a 16-dir manifest plus its bucket count
+    Merge.lwwUpsertParquetBucketed(spark, root,
+      (1L to 300L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v"), "k", Seq("v"))
+    val marker = new java.io.File(new java.io.File(root, "_log"), "000000001")
+    assert(marker.length() > 256, s"fixture: marker is only ${marker.length()} bytes")
+    val m = VersionedTable.base(spark, root).current.get
+    assert(m.dirs.size === 16 && m.meta === Map("num_buckets" -> "16"), m.toString)
+    assert(VersionedTable.read(spark, root).count() === 300L)
+  }
+
+  test("vacuum after bucketed applies keeps every dir a kept manifest lists") {
+    val root = tmpRoot("vshared")
+    Merge.lwwUpsertParquetBucketed(spark, root,
+      (1L to 100L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v"), "k", Seq("v"),
+      numBuckets = 4)
+    // three one-key applies: each rewrites one bucket and reuses the rest
+    (1 to 3).foreach { i =>
+      Merge.lwwUpsertParquetBucketed(spark, root,
+        Seq((i.toLong, s"v$i", 2L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
+    }
+    val listed = (1 to 4).map { n =>
+      val c = new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(root, f"_log/$n%09d").toPath), "UTF-8")
+      n -> "d-[0-9a-f-]+/_b=[0-9]+".r.findAllIn(c).toSet
+    }.toMap
+    assert(VersionedTable.vacuum(spark, root, keep = 2) === Seq(1L, 2L))
+    val keptDirs = listed(3) ++ listed(4)
+    keptDirs.foreach(d => assert(new java.io.File(root, d).isDirectory, s"kept dir $d is gone"))
+    val retiredOnly = (listed(1) ++ listed(2)) -- keptDirs
+    assert(retiredOnly.nonEmpty, "fixture: the applies must have retired some dir")
+    retiredOnly.foreach(d => assert(!new java.io.File(root, d).exists, s"retired dir $d survived"))
+    assert(VersionedTable.read(spark, root).count() === 100L)
   }
 }

@@ -1,109 +1,103 @@
 package graft.io
 
-import org.apache.spark.sql.functions._
-
-/** Pins the documented single-writer contract of the swap family
-  * (Merge.swapInto / lwwUpsertParquetBucketed scaladoc): a writer that
-  * loses the rename race — another writer moved the table (or a bucket)
-  * while this apply was in flight — must fail LOUDLY at the rename
-  * `require`, never return success having committed against a stale
-  * view. Lives in package graft.io for access to the private[io]
-  * swapInto, the exact step where the race lands. */
+/** Pins the single-writer contract of every read-modify-write writer
+  * ([[VersionedTable]] scaladoc): a writer whose base version is stale —
+  * another writer committed after it read — must fail LOUDLY at its
+  * marker create and commit nothing, never publish a table computed from
+  * a stale view. Also the bucketed apply's crash states, laid out on
+  * disk: a snapshot staged without a marker. Lives in package graft.io
+  * for access to the private[io] commit primitives. */
 class MergeContentionSpec extends graft.SparkTestBase {
   import spark.implicits._
 
-  private def fs(dir: String) = new org.apache.hadoop.fs.Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def tmp(tag: String) =
+    java.nio.file.Files.createTempDirectory(s"graft_race_${tag}_").toString + "/t"
 
-  test("swapInto loses the rename race loudly and commits nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_").toString + "/t"
-    Seq((1L, "a")).toDF("k", "name").write.parquet(dir)
-    // writer B wins the race: the table moves away mid-A's-apply
-    val stolen = dir + "_stolen_by_b"
-    assert(fs(dir).rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(stolen)))
-    val replacement = Seq((2L, "b")).toDF("k", "name")
-    // A's swap must die (the rename-aside require, or the filesystem
-    // itself refusing the vanished source) — not bootstrap or silently
-    // publish `replacement` as the whole table
-    val thrown = intercept[Exception] {
-      Merge.swapInto(spark, dir, replacement, suffix = "_merging")
+  private def snapshotDirs(dir: String) =
+    new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("d-")).toSet
+
+  test("a commit on a stale base loses the marker race loudly and commits nothing") {
+    val dir = tmp("rmw")
+    VersionedTable.write(spark, dir, Seq((1L, "a")).toDF("k", "name"))
+    val base = VersionedTable.base(spark, dir)
+    // writer A stages its rewrite against v1 ...
+    val staged = VersionedTable.freshDir()
+    Seq((2L, "b")).toDF("k", "name").write.parquet(s"$dir/$staged")
+    // ... while writer B commits v2
+    VersionedTable.write(spark, dir, Seq((3L, "c")).toDF("k", "name"))
+    val thrown = intercept[IllegalStateException] {
+      VersionedTable.commit(spark, dir, base, VersionedTable.Manifest(Seq(staged)))
     }
-    assert(thrown.isInstanceOf[IllegalArgumentException] ||
-      thrown.isInstanceOf[java.io.IOException], s"unexpected failure mode: $thrown")
-    assert(!fs(dir).exists(new org.apache.hadoop.fs.Path(dir)),
+    assert(thrown.getMessage.contains("concurrent commit"), thrown.getMessage)
+    assert(VersionedTable.currentVersion(spark, dir) === Some(2L),
       "the losing writer must not have committed anything")
+    assert(!snapshotDirs(dir).contains(staged), "the loser's staged snapshot is deleted")
     // B's table is intact
-    assert(spark.read.parquet(stolen).select("k").as[Long].collect().toSeq === Seq(1L))
+    assert(VersionedTable.read(spark, dir).select("k").as[Long].collect().toSeq === Seq(3L))
   }
 
-  test("bucketed apply dies loudly when a bucket vanishes mid-swap window") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_b_").toString + "/t"
+  test("bucketed apply from a stale base fails loudly and commits nothing") {
+    val dir = tmp("b")
     val base = (1L to 50L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v")
     Merge.lwwUpsertParquetBucketed(spark, dir, base, "k", Seq("v"), numBuckets = 4)
-    // a second writer holding a conflicting backup of a bucket that is
-    // STILL live: recovery treats it as stale and deletes it — then the
-    // apply proceeds against the live bucket (no data loss either way)
-    val buckets = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("_bucket=")).map(_.getName).sorted
-    val b0 = buckets.head
-    fs(dir).mkdirs(new org.apache.hadoop.fs.Path(dir + "_bak"))
-    // plant a stale backup (copy of live bucket) — crash-after-rename-in residue
-    org.apache.hadoop.fs.FileUtil.copy(fs(dir), new org.apache.hadoop.fs.Path(s"$dir/$b0"),
-      fs(dir), new org.apache.hadoop.fs.Path(s"${dir}_bak/$b0"), false,
-      spark.sparkContext.hadoopConfiguration)
-    val before = spark.read.parquet(dir).count()
-    Merge.lwwUpsertParquetBucketed(spark, dir,
-      Seq((999L, "z", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
-    assert(spark.read.parquet(dir).count() === before + 1)
-    assert(!fs(dir).exists(new org.apache.hadoop.fs.Path(s"${dir}_bak/$b0")),
-      "stale backup must be cleared, not restored over the live bucket")
+    val dirsBefore = VersionedTable.base(spark, dir).current.get.dirs.toSet
+    // apply B takes base v1 and is held before its dirty pre-scan;
+    // apply A commits v2 in that window
+    val b = graft.PausedWriter.race(Seq((998L, "y", 1L)).toDF("k", "name", "v")) { u =>
+      Merge.lwwUpsertParquetBucketed(spark, dir, u, "k", Seq("v"), numBuckets = 4)
+    } {
+      Merge.lwwUpsertParquetBucketed(spark, dir,
+        Seq((999L, "z", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
+    }
+    assert(b.isFailure && b.failed.get.getMessage.contains("concurrent commit"), b.toString)
+    assert(VersionedTable.currentVersion(spark, dir) === Some(2L))
+    val keys = VersionedTable.read(spark, dir).select("k").as[Long].collect().toSet
+    assert(keys === (1L to 50L).toSet + 999L, "A's apply survives, B's rows are not in")
+    // B deleted only its own staged dir: every dir v1 and v2 list is there
+    (dirsBefore ++ VersionedTable.base(spark, dir).current.get.dirs).foreach { d =>
+      assert(new java.io.File(dir, d).isDirectory, s"$d is gone")
+    }
   }
 
-  test("bucketed apply refuses a present table whose _buckets.json side file is missing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_sf_").toString + "/t"
-    val base = (1L to 50L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v")
-    Merge.lwwUpsertParquetBucketed(spark, dir, base, "k", Seq("v"), numBuckets = 4)
-    // the side file is lost (external deletion / pre-side-file table):
-    // an apply must fail loudly rather than trust the caller's
-    // numBuckets — a mismatched count would scatter keys across two
-    // incompatible layouts where half the later probes silently miss
-    val side = new org.apache.hadoop.fs.Path(dir + "_buckets.json")
-    assert(fs(dir).delete(side, false))
+  test("bucketed apply refuses a committed table whose manifest has no bucket count") {
+    val dir = tmp("sf")
+    // a table not written by a bucketed apply: an apply must fail loudly
+    // rather than trust the caller's numBuckets — a mismatched count
+    // would scatter keys across two incompatible layouts where half the
+    // later probes silently miss
+    VersionedTable.write(spark, dir,
+      (1L to 50L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v"))
     val thrown = intercept[IllegalStateException] {
       Merge.lwwUpsertParquetBucketed(spark, dir,
         Seq((999L, "z", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
     }
-    assert(thrown.getMessage.contains("_buckets.json"))
-    // nothing was committed: the table still reads its bootstrap rows
-    assert(spark.read.parquet(dir).count() === 50L)
+    assert(thrown.getMessage.contains("bucket count"), thrown.getMessage)
+    // nothing was committed: the table still reads its original rows
+    assert(VersionedTable.currentVersion(spark, dir) === Some(1L))
+    assert(VersionedTable.read(spark, dir).count() === 50L)
   }
 
-  test("bootstrap crash window (side file present, table absent) heals on replay") {
-    // the side file is now written BEFORE the rename into place, so the
-    // only bootstrap crash window leaves (side file present, table
-    // absent) — the replayed epoch must bootstrap cleanly and overwrite
-    // the orphaned side file with ITS bucket count. (The old order's
-    // window — table present, side file absent — committed a table
-    // whose layout guard was permanently disabled.)
-    val dir = java.nio.file.Files.createTempDirectory("graft_race_cw_").toString + "/t"
-    val side = new org.apache.hadoop.fs.Path(dir + "_buckets.json")
-    fs(dir).mkdirs(side.getParent)
-    val out = fs(dir).create(side, true)
-    out.write("""{"num_buckets":8}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+  test("bootstrap crashed before its marker (orphan snapshot, no marker) heals on replay") {
+    // the crash state: a bootstrap with 8 buckets wrote its snapshot and
+    // died before creating marker 1. The replayed epoch must bootstrap
+    // cleanly, and the layout guard must enforce the REPLAY's count.
+    val dir = tmp("cw")
+    Seq((1L, "n1", 1L, 5)).toDF("k", "name", "v", "_bucket")
+      .write.parquet(s"$dir/d-0rphan000000/_b=5")
     Merge.lwwUpsertParquetBucketed(spark, dir,
       (1L to 20L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v"),
       "k", Seq("v"), numBuckets = 4)
-    assert(spark.read.parquet(dir).count() === 20L)
-    // the replayed bootstrap owns the side file: the guard now enforces
-    // THIS table's layout, not the crashed attempt's
+    assert(VersionedTable.read(spark, dir).count() === 20L)
     intercept[IllegalArgumentException] {
       Merge.lwwUpsertParquetBucketed(spark, dir,
         Seq((999L, "z", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 8)
     }
     Merge.lwwUpsertParquetBucketed(spark, dir,
       Seq((999L, "z", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
-    assert(spark.read.parquet(dir).count() === 21L)
+    assert(VersionedTable.read(spark, dir).count() === 21L)
+    // the orphan was never part of the table; an aged-orphan vacuum sweeps it
+    VersionedTable.vacuum(spark, dir, keep = 1, orphanAgeMs = 0L)
+    assert(!snapshotDirs(dir).contains("d-0rphan000000"))
+    assert(VersionedTable.read(spark, dir).count() === 21L)
   }
 }
