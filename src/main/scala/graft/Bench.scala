@@ -246,7 +246,8 @@ object Bench {
           else phases) ++ counts.map { case (k, v) => k -> v.toDouble }
         else Map.empty[String, Double]
       // Per-call operator caches (minhash explodes, tf frames, cluster
-      // labels) are never reused across queries — release them so query
+      // labels) and scratch dirs (indexes, exports, stream sinks) are
+      // never reused across queries — release them so query
       // N+1 (and run 2 of this query) isn't timed under run 1's cache
       // memory/GC pressure. The deliberately-shared Domain.silverFlat
       // frame is a session memo and is NOT released (p02/p03/p04

@@ -43,18 +43,23 @@ object GraftSession {
     .config("spark.sql.parquet.compression.codec", "zstd")
     .config("spark.ui.enabled", "false")
 
+  /** A local session whose managed tables live in a fresh temp
+    * warehouse. Every session of the context shares that warehouse, so
+    * it is deleted when the context's application ends, not at any
+    * session's release. */
   def local(cores: Int, shufflePartitions: Int = 0): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else cores
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh_")
     val spark = configure(
       SparkSession.builder()
         .master(s"local[$cores]")
         .appName("graft")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+        .config("spark.sql.warehouse.dir", warehouse.toString)
         .config("spark.sql.shuffle.partitions", sp.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    installCacheBackstop(spark)
+    installCacheBackstop(spark,
+      () => graft.util.CacheRegistry.deleteRecursively(warehouse))
     spark
   }
 
@@ -68,11 +73,13 @@ object GraftSession {
     * and the registry still drops their sessions. Sessions built
     * directly from [[configure]] should call this once after
     * `getOrCreate()` (or call `CacheRegistry.release` on their own
-    * schedule). */
-  def installCacheBackstop(spark: SparkSession): Unit =
+    * schedule). `atEnd` runs after that release. */
+  def installCacheBackstop(spark: SparkSession, atEnd: () => Unit = () => ()): Unit =
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onApplicationEnd(
-          e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
         graft.util.CacheRegistry.releaseStopped()
+        atEnd()
+      }
     })
 }

@@ -18,6 +18,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // after the write: the result reads the query's scratch dirs
+      finally graft.util.CacheRegistry.releaseQuery(spark)
     }
     // jsonObj escapes quotes, backslashes and ALL control chars: a tab
     // or CR in the SQL would otherwise break the compare's json.load

@@ -509,14 +509,13 @@ object Dedup {
     // (queryable, engine-agnostic) and a tiny JSON side file the probe
     // can re-read on EVERY call without a Spark job — so a concurrent
     // rebuild with different parameters is seen by long-lived probers
-    // (e.g. the streaming audit sink) instead of silently matching
-    // nothing against a stale in-JVM memo.
+    // (e.g. the streaming audit sink).
     import spark.implicits._
     Seq((shingleSize, numHashes, bands))
       .toDF("shingle_size", "num_hashes", "bands")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-    writeParamsJson(spark, dir, (shingleSize, numHashes, bands))
-    memoPut(dir, (shingleSize, numHashes, bands))
+    graft.io.ParamsFile.write(spark, dir,
+      "shingle_size" -> shingleSize, "num_hashes" -> numHashes, "bands" -> bands)
   }
 
   /** Partition label of the initial [[buildNearDupIndex]] contents. */
@@ -669,44 +668,12 @@ object Dedup {
     }
   }
 
-  private def paramsJsonPath(dir: String) = s"$dir/params.json"
-
-  private def writeParamsJson(spark: org.apache.spark.sql.SparkSession,
-      dir: String, p: (Int, Int, Int)): Unit = {
-    val path = new org.apache.hadoop.fs.Path(paramsJsonPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(
-      s"""{"shingle_size":${p._1},"num_hashes":${p._2},"bands":${p._3}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Params as the index DIR currently declares them: the JSON side file
-    * when present (re-read per call — microseconds, no Spark job, never
-    * stale), else the parquet table through the bounded memo (indexes
-    * built by older engine versions). */
+  /** Params as the index dir currently declares them, re-read from its
+    * `params.json` per call (microseconds, no Spark job, never stale).
+    * A dir without one is not a near-dup index and fails loudly. */
   private def readParams(spark: org.apache.spark.sql.SparkSession, dir: String): (Int, Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(paramsJsonPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) {
-      val in = fs.open(path)
-      val txt = try new String(
-        in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-      def field(name: String): Int =
-        s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(txt)
-          .getOrElse(throw new IllegalArgumentException(
-            s"malformed ${paramsJsonPath(dir)}: $txt"))
-          .group(1).toInt
-      (field("shingle_size"), field("num_hashes"), field("bands"))
-    } else Option(paramsMemo.get(dir)).getOrElse {
-      val r = spark.read.parquet(s"$dir/params")
-        .select("shingle_size", "num_hashes", "bands").head()
-      val p = (r.getInt(0), r.getInt(1), r.getInt(2))
-      memoPut(dir, p)
-      p
-    }
+    val field = graft.io.ParamsFile.read(spark, dir, "near-dup")
+    (field("shingle_size").toInt, field("num_hashes").toInt, field("bands").toInt)
   }
 
   /** Number of non-base batch labels currently registered in the index —
@@ -753,18 +720,6 @@ object Dedup {
       // chain must survive any future relaxation of that restriction.
       .map(s => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(s.getPath.getName.stripPrefix("_batch=")))
-  }
-
-  // (shingleSize, numHashes, bands) per index dir — see the probe-side
-  // comment in nearDupsAgainstIndex. Bounded: rotating per-invocation
-  // index dirs (RotatingTempDir) would otherwise grow this map one dead
-  // path per invocation forever; a rare full reset just costs one
-  // re-read per live dir.
-  private val paramsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int)]()
-  private def memoPut(dir: String, p: (Int, Int, Int)): Unit = {
-    if (paramsMemo.size > 64) paramsMemo.clear()
-    paramsMemo.put(dir, p)
   }
 
   /** Near-dup pairs between `newDocs` and the corpus indexed at `dir`

@@ -132,7 +132,8 @@ object Retrieval {
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/df")
       val stats = spark.read.parquet(s"$dir/dl")
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl")).head()
-      writeBm25Params(spark, dir, nBuckets, k1, b, stats.getLong(0), stats.getLong(1))
+      graft.io.ParamsFile.write(spark, dir, "n_buckets" -> nBuckets, "k1" -> k1, "b" -> b,
+        "n_docs" -> stats.getLong(0), "total_dl" -> stats.getLong(1))
     }
 
   /** BM25 top-k for `queryTerms` against the persisted index at `dir` —
@@ -180,34 +181,11 @@ object Retrieval {
   private final case class Bm25Params(nBuckets: Int, k1: Double, b: Double,
       nDocs: Long, totalDl: Long)
 
-  private def writeBm25Params(spark: org.apache.spark.sql.SparkSession,
-      dir: String, nBuckets: Int, k1: Double, b: Double,
-      nDocs: Long, totalDl: Long): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/params.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(
-      (s"""{"n_buckets":$nBuckets,"k1":${java.lang.Double.toString(k1)},""" +
-        s""""b":${java.lang.Double.toString(b)},"n_docs":$nDocs,"total_dl":$totalDl}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** Params as the index declares them — probing a dir that is not a
     * BM25 index fails loudly (the readPqParams discipline). */
   private def readBm25Params(spark: org.apache.spark.sql.SparkSession,
       dir: String): Bm25Params = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/params.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"$dir is not a BM25 index (no params.json)")
-    val in = fs.open(path)
-    val txt = try new String(
-      in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-    def num(name: String): String =
-      s""""$name"\\s*:\\s*([-0-9.eE]+)""".r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"params.json at $dir lacks '$name'")).group(1)
+    val num = graft.io.ParamsFile.read(spark, dir, "BM25")
     Bm25Params(num("n_buckets").toInt, num("k1").toDouble, num("b").toDouble,
       num("n_docs").toLong, num("total_dl").toLong)
   }

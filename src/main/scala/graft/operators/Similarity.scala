@@ -1096,7 +1096,7 @@ object Similarity {
       // bit-exactly; this pins the invariant structurally)
       pqEncode(n, spark.read.parquet(s"$dir/codebook"), nSub, subDim)
         .write.mode("overwrite").parquet(s"$dir/codes")
-      writePqParams(spark, dir, dim, nSub, codebookK)
+      graft.io.ParamsFile.write(spark, dir, "dim" -> dim, "n_sub" -> nSub, "codebook_k" -> codebookK)
     }
 
   /** Top-k over the persisted PQ index for a batch of query vectors
@@ -1118,34 +1118,12 @@ object Similarity {
     pqAdcRank(codes, pqAdcTables(q, cent, nSub, dim / nSub), nSub, k)
   }
 
-  private def writePqParams(spark: SparkSession, dir: String,
-      dim: Int, nSub: Int, codebookK: Int): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/params.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(
-      s"""{"dim":$dim,"n_sub":$nSub,"codebook_k":$codebookK}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** Params as the index dir declares them — a probe against an index
     * built with different parameters must fail loudly, not return
     * garbage distances (the Dedup.readParams discipline). */
   private def readPqParams(spark: SparkSession, dir: String): (Int, Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/params.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"$dir is not a PQ index (no params.json)")
-    val in = fs.open(path)
-    val txt = try new String(
-      in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-    def field(name: String): Int =
-      s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"malformed $dir/params.json: $txt"))
-        .group(1).toInt
-    (field("dim"), field("n_sub"), field("codebook_k"))
+    val field = graft.io.ParamsFile.read(spark, dir, "PQ")
+    (field("dim").toInt, field("n_sub").toInt, field("codebook_k").toInt)
   }
 
   /** IVF-PQ top-k — the production-standard composition (FAISS's

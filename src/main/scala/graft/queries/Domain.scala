@@ -12,7 +12,7 @@ import graft.model.CorpusAdapter
 import graft.serve.ServeQueries
 import graft.silver.SilverTransform
 import graft.streaming.SilverStream
-import graft.util.{CacheRegistry, RotatingTempDir}
+import graft.util.CacheRegistry
 import Num._
 
 /** The reference pipeline's own transforms (Silver flatten/clean, Gold
@@ -260,7 +260,7 @@ object Domain {
     * partitioned by load_date → gold tables), reference DAG semantics
     * (`orchestration.py:164-167`). Rows-only: inputs are engine-generated. */
   private def p07(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pipeline_").toString
+    val tmp = CacheRegistry.scratchDir(spark, "graft_pipeline_")
     val results = graft.Pipeline.run(spark, tmp, LoadDate, nShipments = 2000L, seed = 42L)
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(
@@ -280,11 +280,10 @@ object Domain {
     * the generator path (rows-only by nature); this row pins the
     * composition's arithmetic end to end. */
   private def p07b(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.RotatingTempDir.next("graft_pipeline_oracle_")
+    val tmp = CacheRegistry.scratchDir(spark, "graft_pipeline_oracle_")
     graft.Pipeline.run(spark, tmp, LoadDate,
       bronzeSource = Some(CorpusAdapter.bronzeShipments(spark, dir)))
     graft.Pipeline.readGold(spark, tmp, LoadDate, "fact_courier_metrics")
-      .localCheckpoint() // survive RotatingTempDir pruning this generation
       .orderBy(col("courier"))
   }
 
@@ -680,8 +679,8 @@ object Domain {
     * independence of the same merge is property-tested in StreamingSpec
     * across arrival-order permutations. */
   private def p15(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_p15_").toString + "/state"
-    val ck = java.nio.file.Files.createTempDirectory("graft_p15_ck_").toString
+    val out = CacheRegistry.scratchDir(spark, "graft_p15_") + "/state"
+    val ck = CacheRegistry.scratchDir(spark, "graft_p15_ck_")
     val src = eventsStream(spark, dir)
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), col("event_id"), col("ts"),
@@ -715,9 +714,9 @@ object Domain {
     * batch chain bit for bit. Reordered/replayed/split micro-batch
     * schedules are property-tested in StreamingSpec. */
   private def p16(spark: SparkSession, dir: String): DataFrame = {
-    val in = java.nio.file.Files.createTempDirectory("graft_p16_in_").toString + "/snaps"
-    val out = java.nio.file.Files.createTempDirectory("graft_p16_").toString + "/dim"
-    val ck = java.nio.file.Files.createTempDirectory("graft_p16_ck_").toString
+    val in = CacheRegistry.scratchDir(spark, "graft_p16_in_") + "/snaps"
+    val out = CacheRegistry.scratchDir(spark, "graft_p16_") + "/dim"
+    val ck = CacheRegistry.scratchDir(spark, "graft_p16_ck_")
     // phase-split (r19): the bench attributes the snapshot staging write
     // separately from the streamed SCD2 apply, so a p16 reading says
     // which half moved — the input prep or the stream under measure
@@ -753,11 +752,11 @@ object Domain {
     * and replay schedules are property-tested in StreamingSpec. */
   private def p17(spark: SparkSession, dir: String): DataFrame = {
     val emb = Corpus.embeddings(spark, dir)
-    val idx = graft.util.RotatingTempDir.next("graft_p17_idx_")
+    val idx = CacheRegistry.scratchDir(spark, "graft_p17_idx_")
     graft.operators.Similarity.buildIvfIndex(spark, emb, idx)
-    val qdir = java.nio.file.Files.createTempDirectory("graft_p17_q_").toString + "/queries"
-    val out = java.nio.file.Files.createTempDirectory("graft_p17_").toString + "/hits"
-    val ck = java.nio.file.Files.createTempDirectory("graft_p17_ck_").toString
+    val qdir = CacheRegistry.scratchDir(spark, "graft_p17_q_") + "/queries"
+    val out = CacheRegistry.scratchDir(spark, "graft_p17_") + "/hits"
+    val ck = CacheRegistry.scratchDir(spark, "graft_p17_ck_")
     emb.filter(col("vec_id") < 5).write.mode("overwrite").parquet(qdir)
     val src = spark.readStream
       .schema(spark.read.parquet(qdir).schema)
@@ -767,12 +766,9 @@ object Domain {
       .option("checkpointLocation", ck)
       .start()
     q.awaitTermination()
-    // materialized: the frame must outlive RotatingTempDir's pruning of
-    // this invocation's index generation (the v05 discipline)
     graft.io.VersionedTable.read(spark, out)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
       .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint()
   }
 
   private val p17Sql = Vectors.v05Sql
@@ -868,7 +864,7 @@ object Domain {
       in
     } { in =>
       // best-effort temp cleanup of the whole staging root
-      try RotatingTempDir.deleteRecursively(java.nio.file.Paths.get(in).getParent)
+      try CacheRegistry.deleteRecursively(java.nio.file.Paths.get(in).getParent)
       catch { case _: java.io.IOException => }
     }
 

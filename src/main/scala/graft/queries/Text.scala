@@ -8,6 +8,7 @@ import graft.io.Corpus
 import graft.functions.{GraftExpressions, TextFunctions}
 import graft.functions.TextFunctions._
 import graft.operators.{Bpe, Dedup, Retrieval, Similarity}
+import graft.util.CacheRegistry
 
 /** Text-analysis + deduplication operator surface for training-data
   * pipelines (the BASELINE.json north-star ops), over the `documents`
@@ -44,8 +45,8 @@ object Text {
 
   // Frames shared by multiple plan branches persist in the session's
   // query scope and are freed by its releaseQuery; see
-  // graft.util.CacheRegistry for the lifecycle.
-  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
+  // CacheRegistry for the lifecycle.
+  private def tracked(df: DataFrame): DataFrame = CacheRegistry.track(df)
 
   /** Token counting: whitespace tokens, BPE-ish subword count, mean token
     * length. */
@@ -486,13 +487,9 @@ object Text {
     * exact verification arithmetic. */
   private def t15(spark: SparkSession, dir: String): DataFrame = {
     val docs = Corpus.documents(spark, dir)
-    // fresh bounded-retention dir per invocation: see RotatingTempDir
-    val idx = graft.util.RotatingTempDir.next("graft_dedup_idx_")
+    val idx = CacheRegistry.scratchDir(spark, "graft_dedup_idx_")
     Dedup.buildNearDupIndex(docs.filter(col("doc_id") % 2 === 0), idx)
-    // materialized (tiny result): the returned frame must stay valid
-    // after RotatingTempDir prunes this invocation's index generation
     Dedup.nearDupsAgainstIndex(docs.filter(col("doc_id") % 2 === 1), idx)
-      .localCheckpoint()
   }
 
   private val t15Sql =
@@ -513,13 +510,11 @@ object Text {
     * Jaccard with the split recomputed from the portable fold. */
   private def t16(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.operators.Sampling.hashSplit(Corpus.documents(spark, dir), "text")
-    val idx = graft.util.RotatingTempDir.next("graft_contam_idx_")
+    val idx = CacheRegistry.scratchDir(spark, "graft_contam_idx_")
     Dedup.buildNearDupIndex(docs.filter(col("split") === "train"), idx)
-    // materialized: survives RotatingTempDir pruning (see t15)
     Dedup.nearDupsAgainstIndex(docs.filter(col("split") =!= "train"), idx)
       .select(col("doc_a").as("train_doc"), col("doc_b").as("eval_doc"), col("jaccard"))
       .orderBy(col("train_doc"), col("eval_doc"))
-      .localCheckpoint()
   }
 
   private val t16Sql = {
@@ -1567,12 +1562,10 @@ object Text {
     * day-0 ∪ day-1. */
   private def t29(spark: SparkSession, dir: String): DataFrame = {
     val docs = Corpus.documents(spark, dir)
-    val idx = graft.util.RotatingTempDir.next("graft_reg_idx_")
+    val idx = CacheRegistry.scratchDir(spark, "graft_reg_idx_")
     Dedup.buildNearDupIndex(docs.filter(col("doc_id") % 3 === 0), idx)
     Dedup.registerInNearDupIndex(docs.filter(col("doc_id") % 3 === 1), idx, "day1")
-    // materialized: survives RotatingTempDir pruning (see t15)
     Dedup.nearDupsAgainstIndex(docs.filter(col("doc_id") % 3 === 2), idx)
-      .localCheckpoint()
   }
 
   private val t29Sql =
@@ -1950,13 +1943,10 @@ object Text {
     * reproduce the in-memory ranking bit for bit (the v11 discipline
     * applied to lexical retrieval). */
   private def t53(spark: SparkSession, dir: String): DataFrame = {
-    val idx = graft.util.RotatingTempDir.next("graft_bm25_idx_")
+    val idx = CacheRegistry.scratchDir(spark, "graft_bm25_idx_")
     graft.operators.Retrieval.buildBm25Index(spark, Corpus.documents(spark, dir),
       idx, nBuckets = 32, k1 = Bm25K1, b = Bm25B)
-    // materialized (tiny result): stays valid after RotatingTempDir
-    // prunes this invocation's index generation
     graft.operators.Retrieval.bm25AgainstIndex(spark, idx, Bm25Query, k = 20)
-      .localCheckpoint()
   }
 
   // Shared BM25 CTE chain (dl/stats/tf/dfreq/sc, optionally suffixed) —
@@ -2065,7 +2055,7 @@ object Text {
     * misassigned shard, a token-count drift, or a gap/duplicate in the
     * written positions. */
   private def t32(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.util.RotatingTempDir.next("graft_export_")
+    val out = CacheRegistry.scratchDir(spark, "graft_export_")
     graft.io.TrainingExport
       .exportTrainingCorpus(Corpus.documents(spark, dir), out)
       .groupBy(col("shard").cast("long").as("shard"))
@@ -2075,7 +2065,6 @@ object Text {
         max(col("pos")).as("max_pos"),
         countDistinct(col("pos")).as("n_distinct_pos"))
       .orderBy(col("shard"))
-      .localCheckpoint() // survives RotatingTempDir pruning (see t15)
   }
 
   private val t32Sql =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.io.Corpus
 import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.util.CacheRegistry
 
 /** Similarity search over embeddings + multimodal column plumbing
   * (BASELINE.json north-star ops). Vector math uses the codegen'd
@@ -863,13 +864,9 @@ object Vectors {
     * in-memory answer to the bit (the v11/t53 discipline). */
   private def v05(spark: SparkSession, dir: String): DataFrame = {
     val emb = Corpus.embeddings(spark, dir)
-    // fresh bounded-retention dir per invocation: see RotatingTempDir
-    val idx = graft.util.RotatingTempDir.next("graft_ivf_idx_")
+    val idx = CacheRegistry.scratchDir(spark, "graft_ivf_idx_")
     Similarity.buildIvfIndex(spark, emb, idx)
-    // materialized (tiny result): the returned frame must stay valid
-    // after RotatingTempDir prunes this invocation's index generation
     Similarity.ivfTopKAgainstIndex(spark, emb.filter(col("vec_id") < 5), idx, k = 10)
-      .localCheckpoint()
   }
 
   private[queries] val v05Sql =
@@ -1097,13 +1094,9 @@ object Vectors {
     * stroke — the oracle-gateable analogue of the KMeans-based v05. */
   private def v11(spark: SparkSession, dir: String): DataFrame = {
     val emb = Corpus.embeddings(spark, dir)
-    // fresh bounded-retention dir per invocation: see RotatingTempDir
-    val idx = graft.util.RotatingTempDir.next("graft_pq_idx_")
+    val idx = CacheRegistry.scratchDir(spark, "graft_pq_idx_")
     Similarity.buildPqIndex(spark, emb, idx)
-    // materialized (tiny result): the returned frame must stay valid
-    // after RotatingTempDir prunes this invocation's index generation
     Similarity.pqTopKAgainstIndex(spark, emb.filter(col("vec_id") < 5), idx, k = 10)
-      .localCheckpoint()
   }
 
   /** Binary sign-quantized top-k ([[graft.operators.Similarity.binaryTopK]];

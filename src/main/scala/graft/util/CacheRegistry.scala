@@ -1,5 +1,7 @@
 package graft.util
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -7,12 +9,17 @@ import org.apache.spark.storage.StorageLevel
   * `SparkSession` (by identity: a child session from `newSession()` is
   * its own owner). Two lifetimes:
   *
-  *  - query-scoped frames: persisted intermediates that feed several
-  *    plan branches (Catalyst does not CSE across branches, so an
-  *    unpersisted shared frame re-executes its whole upstream plan per
-  *    branch). Operators persist through [[track]] (or hand over an
-  *    already-persisted frame with [[register]]); [[releaseQuery]] frees
-  *    them. Callers must materialize a query's result before releasing.
+  *  - query-scoped state, freed by [[releaseQuery]]:
+  *    - persisted intermediates that feed several plan branches
+  *      (Catalyst does not CSE across branches, so an unpersisted shared
+  *      frame re-executes its whole upstream plan per branch). Operators
+  *      persist through [[track]] (or hand over an already-persisted
+  *      frame with [[register]]).
+  *    - on-disk scratch dirs ([[scratchDir]]): the indexes, exports,
+  *      stream sinks and checkpoints a query entry writes and reads back.
+  *    A query's result frame reads those files lazily, so callers must
+  *    read the result (write it, collect it) BEFORE `releaseQuery`: the
+  *    files are deleted there.
   *  - session-scoped memos ([[memo]]): values built once per session and
   *    reused by every later query — the shared silver frame, scan-split
   *    decisions, staged stream inputs. Each carries its own release.
@@ -26,6 +33,7 @@ object CacheRegistry {
   private final class Owned {
     val frames = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val memos = scala.collection.mutable.Map.empty[Any, (Any, () => Unit)]
+    val dirs = scala.collection.mutable.ListBuffer.empty[Path]
   }
   private val owners = scala.collection.mutable.Map.empty[SparkSession, Owned]
 
@@ -46,6 +54,14 @@ object CacheRegistry {
     * iterative loop) without re-persisting it. */
   def register(df: DataFrame): Unit = synchronized {
     owned(df.sparkSession).frames += df
+  }
+
+  /** A fresh temp dir (name prefix `tag`) owned until `spark`'s next
+    * [[releaseQuery]], which deletes it after unpersisting the frames. */
+  def scratchDir(spark: SparkSession, tag: String): String = {
+    val dir = Files.createTempDirectory(tag)
+    synchronized(owned(spark).dirs += dir)
+    dir.toString
   }
 
   /** The value memoized under `key` for `spark`, built on first use and
@@ -80,22 +96,35 @@ object CacheRegistry {
       df.unpersist()
   }
 
-  /** Frees the frames `spark` tracked; its memos survive. */
-  def releaseQuery(spark: SparkSession): Unit =
-    synchronized {
+  /** Frees the frames and scratch dirs `spark` owns; its memos survive. */
+  def releaseQuery(spark: SparkSession): Unit = {
+    val (fs, ds) = synchronized {
       owners.get(spark).map { o =>
-        val fs = o.frames.toList
+        val taken = (o.frames.toList, o.dirs.toList)
         o.frames.clear()
-        fs
-      }.getOrElse(Nil)
-    }.foreach(unpersist)
+        o.dirs.clear()
+        taken
+      }.getOrElse((Nil, Nil))
+    }
+    fs.foreach(unpersist)
+    ds.foreach(d => quietly(deleteRecursively(d)))
+  }
 
-  /** Frees everything `spark` owns: its frames and its memos. */
+  /** Frees everything `spark` owns: its frames, scratch dirs and memos. */
   def release(spark: SparkSession): Unit =
     synchronized(owners.remove(spark)).foreach { o =>
       o.frames.foreach(unpersist)
+      o.dirs.foreach(d => quietly(deleteRecursively(d)))
       o.memos.values.foreach { case (_, free) => quietly(free()) }
     }
+
+  /** Deletes `p` and everything under it. */
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    val walk = Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => Files.deleteIfExists(f))
+    finally walk.close()
+  }
 
   /** Releases every session whose SparkContext has stopped — by then no
     * query or stream of theirs can still be reading. */
@@ -106,6 +135,8 @@ object CacheRegistry {
   /** Test hooks: what `spark` currently owns. */
   private[graft] def frames(spark: SparkSession): Seq[DataFrame] =
     synchronized(owners.get(spark).map(_.frames.toList).getOrElse(Nil))
+  private[graft] def scratchDirs(spark: SparkSession): Seq[String] =
+    synchronized(owners.get(spark).map(_.dirs.map(_.toString).toList).getOrElse(Nil))
   private[graft] def memos(spark: SparkSession): Map[Any, Any] =
     synchronized(owners.get(spark).map(_.memos.map { case (k, (v, _)) => k -> v }.toMap)
       .getOrElse(Map.empty))

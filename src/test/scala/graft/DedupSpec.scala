@@ -187,6 +187,22 @@ class DedupSpec extends SparkTestBase {
       Dedup.buildNearDupIndex(docs, dir, numHashes = 32, bands = 7))
   }
 
+  test("probing or compacting a dir without params.json fails loudly, naming the dir") {
+    // the parquet params table alone is not enough: params.json is the
+    // index's declaration, and a dir without one is not an index
+    val root = java.nio.file.Files.createTempDirectory("graft_noparams_")
+    val dir = root.toString
+    try {
+      Dedup.buildNearDupIndex(docs, dir)
+      java.nio.file.Files.delete(root.resolve("params.json"))
+      val probe = intercept[IllegalArgumentException](
+        Dedup.nearDupsAgainstIndex(docs.filter($"doc_id" === 0L), dir))
+      assert(probe.getMessage.contains(dir), probe.getMessage)
+      val compact = intercept[IllegalArgumentException](Dedup.compactNearDupIndex(spark, dir))
+      assert(compact.getMessage.contains(dir), compact.getMessage)
+    } finally graft.util.CacheRegistry.deleteRecursively(root)
+  }
+
   test("registerInNearDupIndex: tomorrow's batch dedups against today's, idempotently") {
     val dir = java.nio.file.Files.createTempDirectory("graft_reg_").toString
     Dedup.buildNearDupIndex(docs, dir) // base corpus: docs 0-4

@@ -117,4 +117,39 @@ class MultiSessionSpec extends SparkTestBase {
     assert((persisted intersect (shared ++ onlyA)).isEmpty,
       s"RDDs left after both releases: ${persisted intersect (shared ++ onlyA)}")
   }
+
+  private def exists(d: String) = new java.io.File(d).exists()
+
+  test("a query's scratch dirs live until its session's releaseQuery; session memos outlive it") {
+    import graft.util.CacheRegistry
+    val s = spark.newSession()
+    try {
+      // t53 writes its BM25 index to a scratch dir and probes it lazily;
+      // p19 stages its stream input as a session memo
+      val probe = graft.queries.Registry.specs.find(_.name == "t53_bm25_index").get.run(s, sf0001)
+      rows("p19_stream_left_outer_join", s)
+      val scratch = CacheRegistry.scratchDirs(s)
+      val staged = graft.queries.Domain.stagedStreamDirs(s)
+      assert(scratch.nonEmpty && scratch.forall(exists) && staged.nonEmpty)
+      // read before release: the result's files are still there
+      assert(probe.collect().length <= 20)
+      CacheRegistry.releaseQuery(s)
+      assert(!scratch.exists(exists), s"scratch dirs left after releaseQuery: $scratch")
+      assert(CacheRegistry.scratchDirs(s).isEmpty)
+      assert(staged.forall(exists), "the p19 staging memo survives releaseQuery")
+    } finally CacheRegistry.release(s)
+  }
+
+  test("releasing one session deletes its scratch dirs and keeps another session's") {
+    import graft.util.CacheRegistry
+    val (a, b) = (spark.newSession(), spark.newSession())
+    val dirA = CacheRegistry.scratchDir(a, "graft_ms_a_")
+    val dirB = CacheRegistry.scratchDir(b, "graft_ms_b_")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dirA, "f"), "a")
+    CacheRegistry.release(a)
+    assert(!exists(dirA), "A's release deletes A's scratch dir, contents and all")
+    assert(exists(dirB), "B's scratch dir survives A's release")
+    CacheRegistry.release(b)
+    assert(!exists(dirB))
+  }
 }

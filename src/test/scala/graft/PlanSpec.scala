@@ -91,15 +91,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("t15 incremental dedup: batch probes the index by equi-join, never n²") {
-    // the t15 query ENTRY localCheckpoints its (tiny) result so the frame
-    // outlives RotatingTempDir pruning — which truncates the plan to a
-    // Scan ExistingRDD. Assert on the probe operator itself instead.
-    val docs = Corpus.documents(spark, sf0001)
-    val idx = graft.util.RotatingTempDir.next("graft_planspec_idx_")
-    graft.operators.Dedup.buildNearDupIndex(docs.filter(col("doc_id") % 2 === 0), idx)
-    val plan = graft.operators.Dedup
-      .nearDupsAgainstIndex(docs.filter(col("doc_id") % 2 === 1), idx)
-      .queryExecution.executedPlan.toString
+    val plan = planOf("t15_dedup_incremental")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"index probe must equi-join on (band_idx, band_hash) and (doc, shingle):\n$plan")
     assert(plan.contains("partial_min"), s"signature min-agg must have a map-side phase:\n$plan")
@@ -342,14 +334,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("bm25 index probe: query-term buckets prune partitions; df broadcasts") {
-    // the t53 query checkpoints its (tiny) result, which hides the probe
-    // plan — pin the operator's own plan instead
-    val idx = graft.util.RotatingTempDir.next("graft_bm25_planspec_")
-    graft.operators.Retrieval.buildBm25Index(spark,
-      Corpus.documents(spark, sf0001), idx, nBuckets = 32)
-    val plan = graft.operators.Retrieval
-      .bm25AgainstIndex(spark, idx, Seq("hash", "join", "window"), k = 20)
-      .queryExecution.executedPlan.toString
+    val plan = planOf("t53_bm25_index")
     assert(plan.contains("PartitionFilters: [bucket") ||
         plan.contains("PartitionFilters: [isnotnull(bucket"),
       s"the probe must read only the query terms' posting buckets:\n$plan")

@@ -7,8 +7,8 @@ class QuerySmokeSpec extends SparkTestBase {
 
   graft.queries.Registry.specs.foreach { spec =>
     test(s"${spec.name} runs at sf0.001") {
-      val df = spec.run(spark, sf0001)
-      df.write.format("noop").mode("overwrite").save()
+      try spec.run(spark, sf0001).write.format("noop").mode("overwrite").save()
+      finally graft.util.CacheRegistry.releaseQuery(spark)
       spec.oracle.foreach(sql => assert(sql.trim.nonEmpty))
     }
   }

@@ -463,11 +463,13 @@ class SimilaritySpec extends SparkTestBase {
 
   test("persisted IVF index probe is bit-identical to the in-memory ivfTopK") {
     val emb = Corpus.embeddings(spark, sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx_").toString
-    Similarity.buildIvfIndex(spark, emb, dir)
-    val fromIndex = Similarity
-      .ivfTopKAgainstIndex(spark, emb.filter(col("vec_id") < 5), dir, k = 10)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_idx_")
+    val dir = root.toString
+    val fromIndex = try {
+      Similarity.buildIvfIndex(spark, emb, dir)
+      Similarity.ivfTopKAgainstIndex(spark, emb.filter(col("vec_id") < 5), dir, k = 10)
+        .as[(Long, Long, Long, Double)].collect().toSeq
+    } finally graft.util.CacheRegistry.deleteRecursively(root)
     val inMemory = Similarity.ivfTopK(spark, emb, nQueries = 5, k = 10)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(fromIndex === inMemory,
