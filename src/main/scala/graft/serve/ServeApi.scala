@@ -3,12 +3,12 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.LongAdder
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, Row}
-
-import graft.ml.DeliveryModel
+import org.apache.spark.sql.DataFrame
 
 /** HTTP serving layer over [[ServeQueries]] — the reference's FastAPI
   * process (`API/pastapi.py:168-219`: `/predict/tracking/`,
@@ -16,9 +16,11 @@ import graft.ml.DeliveryModel
   * `com.sun.net.httpserver` (no new dependency).
   *
   * Differences by design:
-  *  - queries run DISTRIBUTED against the Silver frame; only the answer
-  *    row is collected (the reference pins the whole gold table in
-  *    driver-side pandas, `pastapi.py:125`);
+  *  - answers come from a [[ServeIndex]] per read route, built once from
+  *    the Silver frame by the same [[ServeQueries]] run over all keys,
+  *    so a request runs no Spark job to find its answer (the reference
+  *    pins the whole gold table in driver-side pandas, `pastapi.py:125`);
+  *    a route with more keys than the bound runs its query per request;
   *  - the model is fitted once and passed in — no per-request label
   *    re-encoding (`pastapi.py:134-141` re-fits encoders per request,
   *    shifting encodings with every filtered subset);
@@ -26,7 +28,9 @@ import graft.ml.DeliveryModel
   *    responses are deterministic and testable;
   *  - predictions append to a typed parquet log ([[PredictionLog]])
   *    instead of 1-row CSVs serialized to the object store
-  *    (`pastapi.py:146-163`).
+  *    (`pastapi.py:146-163`);
+  *  - `/health` reports each route's index state and `/metrics` each read
+  *    route's status counts and latency histogram.
   */
 object ServeApi {
 
@@ -36,109 +40,120 @@ object ServeApi {
 
   /** Starts the server on `port` (0 = ephemeral) and returns it; callers
     * stop it with `server.stop(0)`. `silver` should be cached by the
-    * caller — every request plans against it. */
-  private val serveThreads = new java.util.concurrent.atomic.AtomicInteger(0)
-
+    * caller: each read route's [[ServeIndex]] is built from it on that
+    * route's first request, which waits for the build. */
   def start(silver: DataFrame, model: Option[PipelineModel],
-      config: Config, port: Int = 0): HttpServer = {
+      config: Config, port: Int = 0): HttpServer =
+    start(silver, model, config, port, ServeIndex.DefaultBound, prebuild = false)
+
+  /** [[start]] with the routes' [[ServeIndex]] bound (0 answers every
+    * request through the per-key Spark queries); `prebuild` builds both
+    * indexes before the server accepts a request. */
+  private[graft] def start(silver: DataFrame, model: Option[PipelineModel],
+      config: Config, port: Int, indexBound: Int, prebuild: Boolean): HttpServer = {
+    val tracking = ServeIndex.tracking(silver, model, indexBound)
+    val country = ServeIndex.country(silver, config.asOfDate, indexBound)
+    if (prebuild) { tracking.prepare(); country.prepare() }
+    val trackingStats, countryStats = new RouteStats
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/predict/tracking/", (ex: HttpExchange) =>
-      safely(ex)(trackingRoute(silver, model, config, ex)))
-    server.createContext("/predict/country/", (ex: HttpExchange) =>
-      safely(ex)(countryRoute(silver, config, ex)))
-    // com.sun HttpServer contexts match by path PREFIX, so without the
-    // exact-path check this context would also serve /uix, /ui/anything…
-    server.createContext("/ui", (ex: HttpExchange) => safely(ex) {
-      val p = ex.getRequestURI.getPath
-      if (p == "/ui" || p == "/ui/") respondHtml(ex, 200, uiPage)
-      else respond(ex, 404, jsonObj(Seq("error" -> "not found")))
-    })
-    server.createContext("/", (ex: HttpExchange) => safely(ex) {
-      if (ex.getRequestURI.getPath == "/")
-        respond(ex, 200, jsonObj(Seq(
-          "service" -> "graft-serving",
-          "routes" -> "/ui, /predict/tracking/?tracking_id=…, /predict/country/?country=…")))
-      else respond(ex, 404, jsonObj(Seq("error" -> "not found")))
-    })
-    // small fixed pool: request handling is IO-light, the work happens in
-    // the Spark jobs the handlers trigger. `stop` never shuts an
-    // executor down, so the threads are daemons: a stopped server must
-    // not keep its JVM alive.
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
-      val t = new Thread(r, s"graft-serve-${serveThreads.incrementAndGet()}")
-      t.setDaemon(true)
-      t
-    }))
+    server.createContext("/predict/tracking/",
+      readRoute(trackingStats)(trackingRoute(tracking, silver, config, _)))
+    server.createContext("/predict/country/",
+      readRoute(countryStats)(countryRoute(country, silver, config, _)))
+    page(server, "/health")(ex => respond(ex, 200, jsonObj(Seq(
+      "status" -> "ok", "tracking" -> tracking.state, "country" -> country.state))))
+    page(server, "/metrics")(ex => respond(ex, 200, jsonObj(Seq(
+      "tracking" -> trackingStats.json, "country" -> countryStats.json))))
+    page(server, "/ui", "/ui/")(ex => respondHtml(ex, 200, uiPage))
+    page(server, "/")(ex => respond(ex, 200, jsonObj(Seq(
+      "service" -> "graft-serving",
+      "routes" -> ("/ui, /health, /metrics, /predict/tracking/?tracking_id=…, " +
+        "/predict/country/?country=…")))))
+    // small pool: request handling is IO-light, and a hit is a map
+    // lookup. `stop` never shuts an executor down, so the threads are
+    // daemons that exit after 30 s idle: a stopped server keeps neither
+    // its JVM alive nor its threads parked.
+    val pool = new ThreadPoolExecutor(4, 4, 30L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-serve-${serveThreads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    server.setExecutor(pool)
     server.start()
     server
   }
 
+  private val serveThreads = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Serves `paths` exactly: com.sun HttpServer contexts match by path
+    * PREFIX, so without the check `/ui` would also serve /uix, /ui/anything… */
+  private def page(server: HttpServer, paths: String*)(body: HttpExchange => Unit): Unit =
+    server.createContext(paths.head, (ex: HttpExchange) => safely(ex) {
+      if (paths.contains(ex.getRequestURI.getPath)) body(ex)
+      else respond(ex, 404, error("not found"))
+    })
+
+  /** A read route: the answer is recorded in `stats`, then sent; a route
+    * that throws answers 500. Recording before sending means a client
+    * that reads `/metrics` after its answer sees it counted. */
+  private def readRoute(stats: RouteStats)(answer: HttpExchange => (Int, String)): HttpHandler =
+    (ex: HttpExchange) => safely(ex) {
+      val t0 = System.nanoTime()
+      val (status, body) =
+        try answer(ex)
+        catch { case t: Throwable => 500 -> error(t.toString) }
+      stats.record(status, (System.nanoTime() - t0) / 1e6)
+      respond(ex, status, body)
+    }
+
+  private def error(message: String): String = jsonObj(Seq("error" -> message))
+
   /** `/predict/tracking/?tracking_id=TN…` (`pastapi.py:168-194`): point
     * lookup + latest checkpoint, predicted status from the fitted model
     * (or the recorded delivery_status when no model is supplied). */
-  private def trackingRoute(silver: DataFrame, model: Option[PipelineModel],
-      config: Config, ex: HttpExchange): Unit =
+  private def trackingRoute(index: ServeIndex[ServeIndex.Tracking], silver: DataFrame,
+      config: Config, ex: HttpExchange): (Int, String) =
     queryParam(ex, "tracking_id") match {
-      case None => respond(ex, 400, jsonObj(Seq("error" -> "missing query param tracking_id")))
+      case None => 400 -> error("missing query param tracking_id")
       case Some(id) =>
-        val hit = ServeQueries.trackingLookup(silver, id)
-        hit.collect().headOption match {
-          case None => respond(ex, 404, jsonObj(Seq("error" -> s"Tracking ID '$id' not found.")))
-          case Some(row) =>
-            val predicted = model match {
-              case Some(m) =>
-                // single-row inference through the SAME fitted pipeline as
-                // batch scoring — encoders frozen at training time
-                val feats = DeliveryModel.features(
-                  silver.filter(silver("tracking_number") === id))
-                DeliveryModel.predict(m, feats)
-                  .select("predicted_status").collect()
-                  .headOption.map(_.getString(0)).getOrElse("UNKNOWN")
-              case None => str(row, "delivery_status")
-            }
-            val body = jsonObj(Seq(
+        index.lookup(id) match {
+          case None => 404 -> error(s"Tracking ID '$id' not found.")
+          case Some(t) =>
+            logPrediction(silver, config, "tracking", id, t.predictedStatus)
+            200 -> jsonObj(Seq(
               "tracking_id" -> id,
-              "courier" -> str(row, "courier"),
-              "origin" -> str(row, "origin_country"),
-              "destination" -> str(row, "destination_country"),
-              "last_checkpoint_city" -> str(row, "last_checkpoint_city"),
-              "last_checkpoint_message" -> str(row, "last_checkpoint_message"),
-              "predicted_status" -> predicted,
+              "courier" -> t.courier,
+              "origin" -> t.origin,
+              "destination" -> t.destination,
+              "last_checkpoint_city" -> t.lastCheckpointCity,
+              "last_checkpoint_message" -> t.lastCheckpointMessage,
+              "predicted_status" -> t.predictedStatus,
               "predicted_on" -> config.asOfDate))
-            logPrediction(silver, config, "tracking", id, predicted)
-            respond(ex, 200, body)
         }
     }
 
   /** `/predict/country/?country=…` (`pastapi.py:197-219`): mean delivery
     * days to a destination + projected date from the injected clock. */
-  private def countryRoute(silver: DataFrame, config: Config, ex: HttpExchange): Unit =
+  private def countryRoute(index: ServeIndex[ServeIndex.Country], silver: DataFrame,
+      config: Config, ex: HttpExchange): (Int, String) =
     queryParam(ex, "country") match {
-      case None => respond(ex, 400, jsonObj(Seq("error" -> "missing query param country")))
+      case None => 400 -> error("missing query param country")
       case Some(country) =>
-        val agg = ServeQueries.countryExpectation(silver, country, config.asOfDate)
-        // a miss is an agg row with n_shipments=0 and null averages
-        agg.collect().headOption.filter(r => r.getLong(r.fieldIndex("n_shipments")) > 0) match {
-          case None => respond(ex, 404, jsonObj(Seq("error" -> s"No data for country '$country'.")))
-          case Some(row) =>
-            val iAvg = row.fieldIndex("avg_delivery_days")
-            val iDate = row.fieldIndex("expected_delivery_date")
-            // shipments can exist with delivery_days all null (in transit,
-            // never delivered) — that's a data gap, not a server fault:
-            // answer 422 with a JSON error, don't let getDouble NPE into a 500
-            if (row.isNullAt(iAvg) || row.isNullAt(iDate))
-              respond(ex, 422, jsonObj(Seq("error" ->
-                s"No completed deliveries recorded for country '$country'.")))
-            else {
-              val avg = row.getDouble(iAvg)
-              val body = jsonObj(Seq(
-                "country" -> country.toUpperCase,
-                "n_shipments" -> row.getLong(row.fieldIndex("n_shipments")),
-                "average_delivery_days" -> avg,
-                "expected_delivery_date" -> row.getDate(iDate).toString))
-              logPrediction(silver, config, "country", country.toUpperCase, avg.toString)
-              respond(ex, 200, body)
-            }
+        index.lookup(country) match {
+          case None => 404 -> error(s"No data for country '$country'.")
+          case Some(ServeIndex.Country(n, Some(avg), Some(date))) =>
+            logPrediction(silver, config, "country", country.toUpperCase, avg.toString)
+            200 -> jsonObj(Seq(
+              "country" -> country.toUpperCase,
+              "n_shipments" -> n,
+              "average_delivery_days" -> avg,
+              "expected_delivery_date" -> date))
+          // shipments can exist with delivery_days all null (in transit,
+          // never delivered) — that's a data gap, not a server fault:
+          // answer 422 with a JSON error, not a 500
+          case Some(_) => 422 -> error(s"No completed deliveries recorded for country '$country'.")
         }
     }
 
@@ -210,13 +225,39 @@ object ServeApi {
       |</html>
       |""".stripMargin
 
+  /** Upper edges of the latency histogram buckets, in ms; one more
+    * bucket counts everything above the last edge. */
+  private val LatencyEdgesMs = Seq(1, 2, 5, 10, 20, 50, 100, 200, 500, 1000, 2000, 5000)
+
+  /** A read route's request counts by status code and latency histogram,
+    * recorded with adders: no lock on the request path. */
+  private final class RouteStats {
+    private val byStatus = new ConcurrentHashMap[Int, LongAdder]()
+    private val buckets = Seq.fill(LatencyEdgesMs.size + 1)(new LongAdder)
+
+    def record(status: Int, ms: Double): Unit = {
+      // `get` first: computeIfAbsent may lock even when the key is there
+      Option(byStatus.get(status))
+        .getOrElse(byStatus.computeIfAbsent(status, _ => new LongAdder)).increment()
+      val i = LatencyEdgesMs.indexWhere(ms <= _)
+      buckets(if (i < 0) LatencyEdgesMs.size else i).increment()
+    }
+
+    def json: Obj = {
+      import scala.jdk.CollectionConverters._
+      Obj(Seq(
+        "status" -> Obj(byStatus.asScala.toSeq.sortBy(_._1).map { case (c, n) => c.toString -> n.sum }),
+        "latency_ms" -> Obj(Seq("edges" -> LatencyEdgesMs, "counts" -> buckets.map(_.sum)))))
+    }
+  }
+
   // ---- plumbing ----------------------------------------------------------
 
   private def safely(ex: HttpExchange)(body: => Unit): Unit =
     try body
     catch {
       case t: Throwable =>
-        try respond(ex, 500, jsonObj(Seq("error" -> t.toString)))
+        try respond(ex, 500, error(t.toString))
         catch { case _: Throwable => () }
     }
     finally ex.close()
@@ -244,21 +285,21 @@ object ServeApi {
     try os.write(bytes) finally os.close()
   }
 
-  private def str(row: Row, field: String): String = {
-    val i = row.fieldIndex(field)
-    if (row.isNullAt(i)) "UNKNOWN" else String.valueOf(row.get(i))
-  }
+  /** A nested JSON object value for [[jsonObj]]. */
+  private[serve] final case class Obj(fields: Seq[(String, Any)])
 
-  /** Minimal JSON object writer (strings escaped; numbers inline) — the
-    * response shapes here are flat, no library needed. */
+  /** Minimal JSON object writer (strings escaped; numbers inline; [[Obj]]
+    * and `Seq` values nest) — the response shapes here are small, no
+    * library needed. */
   private[graft] def jsonObj(fields: Seq[(String, Any)]): String =
-    fields.map { case (k, v) =>
-      val value = v match {
-        case s: String => "\"" + escape(s) + "\""
-        case other => String.valueOf(other)
-      }
-      "\"" + escape(k) + "\":" + value
-    }.mkString("{", ",", "}")
+    fields.map { case (k, v) => "\"" + escape(k) + "\":" + jsonValue(v) }.mkString("{", ",", "}")
+
+  private def jsonValue(v: Any): String = v match {
+    case s: String => "\"" + escape(s) + "\""
+    case Obj(fields) => jsonObj(fields)
+    case xs: Seq[_] => xs.map(jsonValue).mkString("[", ",", "]")
+    case other => String.valueOf(other)
+  }
 
   private def escape(s: String): String =
     s.flatMap {
@@ -274,7 +315,8 @@ object ServeApi {
 
 /** Runnable serving process: `runMain graft.serve.ServeMain <sfDir>
   * [port] [modelDir]` — builds the Silver frame once, caches it, loads a
-  * saved PipelineModel when given one, and serves until killed. */
+  * saved PipelineModel when given one, builds both routes' indexes, and
+  * serves until killed. */
 object ServeMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ServeMain <sfDir> [port] [modelDir]")
@@ -287,9 +329,11 @@ object ServeMain {
       .silverFlat(spark, dir, "2024-01-01",
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
       .persist()
-    silver.count() // materialize before accepting traffic
+    // the indexes are built before the server accepts traffic, so no
+    // client waits on a build
     val server = ServeApi.start(silver, model,
-      ServeApi.Config(asOfDate = java.time.LocalDate.now().toString), port)
+      ServeApi.Config(asOfDate = java.time.LocalDate.now().toString), port,
+      ServeIndex.DefaultBound, prebuild = true)
     println(s"[serve] listening on ${server.getAddress}")
     Thread.currentThread().join()
   }

@@ -15,7 +15,7 @@ class BronzeIngestSpec extends SparkTestBase {
   import spark.implicits._
 
   test("malformed JSON lines quarantine as _corrupt_record, good rows survive") {
-    val dir = Files.createTempDirectory("graft_corrupt_").toString
+    val dir = tempDir("graft_corrupt_").toString
     Files.writeString(Path.of(s"$dir/day.json"),
       """{"id":"a","tracking_number":"TN1"}
         |this is not json at all

@@ -158,7 +158,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("incremental dedup: a new batch finds its dups in the index, not in itself") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_").toString
+    val dir = tempDir("graft_idx_").toString
     Dedup.buildNearDupIndex(docs, dir) // corpus: docs 0-4 indexed
     // batch: 10/11 = exact dups of indexed 2 (and j≈0.54 near-dups of 0/1
     // — the same delta-edit the in-corpus LSH test relies on; at j≈0.54 an
@@ -190,7 +190,7 @@ class DedupSpec extends SparkTestBase {
   test("probing or compacting a dir without params.json fails loudly, naming the dir") {
     // the parquet params table alone is not enough: params.json is the
     // index's declaration, and a dir without one is not an index
-    val root = java.nio.file.Files.createTempDirectory("graft_noparams_")
+    val root = tempDir("graft_noparams_")
     val dir = root.toString
     try {
       Dedup.buildNearDupIndex(docs, dir)
@@ -204,7 +204,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("registerInNearDupIndex: tomorrow's batch dedups against today's, idempotently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_reg_").toString
+    val dir = tempDir("graft_reg_").toString
     Dedup.buildNearDupIndex(docs, dir) // base corpus: docs 0-4
     // day 1: doc 20 is fresh text, unseen by the base corpus
     val day1Text = "completely novel sentences appear in the day one drop " * 5
@@ -252,7 +252,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("index verify uses plain count on single-label indexes, distinct past one label") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_agg_").toString
+    val dir = tempDir("graft_agg_").toString
     Dedup.buildNearDupIndex(docs, dir)
     val batch = Seq((10L, base, "s9")).toDF("doc_id", "text", "source")
     def verifyUsesDistinct(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -315,7 +315,7 @@ class DedupSpec extends SparkTestBase {
     // under the single-label plain-count verify a duplicated probe row
     // would double the intersection and push jaccard past 1
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_dup_").toString
+    val dir = tempDir("graft_nd_dup_").toString
     Dedup.buildNearDupIndex(Seq((0L, base, "s1")).toDF("doc_id", "text", "source"), dir)
     val replayed = Seq((10L, base, "d1"), (10L, base, "d1"))
       .toDF("doc_id", "text", "source")
@@ -331,7 +331,7 @@ class DedupSpec extends SparkTestBase {
     // (doc_id, sh) — a record replayed into the build (or one registered
     // batch) must not land twice under a single label
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_wdup_").toString
+    val dir = tempDir("graft_nd_wdup_").toString
     Dedup.buildNearDupIndex(
       Seq((0L, base, "s1"), (0L, base, "s1")).toDF("doc_id", "text", "source"), dir)
     val hits = Dedup.nearDupsAgainstIndex(

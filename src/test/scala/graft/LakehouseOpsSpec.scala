@@ -12,7 +12,7 @@ class LakehouseOpsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("upsert: updates win, inserts append, untouched rows survive") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_").toString + "/t"
+    val dir = tempDir("graft_merge_").toString + "/t"
     VersionedTable.write(spark, dir, Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "name", "v"))
     val updates = Seq((2L, "b2", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
@@ -65,14 +65,14 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("pipeline rerun for the same load date is idempotent (overwrite-per-partition)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_idem_").toString
+    val tmp = tempDir("graft_idem_").toString
     val r1 = graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 300L)
     val r2 = graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 300L)
     assert(r1.map(s => s.stage -> s.rows).toMap === r2.map(s => s.stage -> s.rows).toMap)
   }
 
   test("day-2 pipeline run must NOT wipe day-1's silver partition") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_2day_").toString
+    val tmp = tempDir("graft_2day_").toString
     graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 200L)
     graft.Pipeline.run(spark, tmp, "2024-01-02", nShipments = 200L)
     val dates = spark.read.parquet(s"$tmp/silver/shipments")
@@ -82,7 +82,7 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("gold tables stay fully readable while a rerun republishes them") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_goldv_").toString
+    val tmp = tempDir("graft_goldv_").toString
     val r1 = graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 300L)
     val expected = r1.find(_.stage == "gold/fact_shipment").get.rows
     // reader loops over the versioned gold table while the pipeline reruns;
@@ -105,7 +105,7 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("training export: shard-partitioned, dense positions, idempotent overwrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_texp_").toString + "/corpus"
+    val dir = tempDir("graft_texp_").toString + "/corpus"
     val docs = graft.io.Corpus.documents(spark, sf0001)
     val back = graft.io.TrainingExport.exportTrainingCorpus(docs, dir, nShards = 4)
     // physical layout: one partition dir per shard, prunable by readers
@@ -162,18 +162,18 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("pipeline quarantine stage routes no clean generated rows, reports a stage result") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_quar_").toString
+    val tmp = tempDir("graft_quar_").toString
     val results = graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 200L, quarantine = true)
     val q = results.find(_.stage == "quarantine").get
     assert(q.rows === 0L, "generated bronze satisfies every silver rule")
     // silver output is identical to a quality-off run on the same seed
-    val off = java.nio.file.Files.createTempDirectory("graft_quar_off_").toString
+    val off = tempDir("graft_quar_off_").toString
     val base = graft.Pipeline.run(spark, off, "2024-01-01", nShipments = 200L)
     assert(results.find(_.stage == "silver").get.rows === base.find(_.stage == "silver").get.rows)
   }
 
   test("pipeline run fires the success hook with every stage result") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hooks_").toString
+    val tmp = tempDir("graft_hooks_").toString
     var notified = Seq.empty[graft.Pipeline.StageResult]
     graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 200L,
       hooks = graft.Pipeline.Hooks(onSuccess = notified = _))
@@ -192,7 +192,7 @@ class LakehouseOpsSpec extends SparkTestBase {
     intercept[IllegalArgumentException](PipelineMain.parse(Array("/data/lh", "01-01-2024")))
     intercept[IllegalArgumentException](PipelineMain.parse(Array("/data/lh", "2024-01-01", "--bogus")))
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft_main_").toString
+    val tmp = tempDir("graft_main_").toString
     val results = PipelineMain.run(spark,
       PipelineMain.Args(tmp, "2024-01-01", nShipments = 200L, quarantine = true))
     assert(results.exists(r => r.stage == "silver" && r.rows > 0))
@@ -201,7 +201,7 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("upsert with duplicate update keys reports key-level counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge2_").toString + "/t"
+    val dir = tempDir("graft_merge2_").toString + "/t"
     VersionedTable.write(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "name"))
     // two update rows for the same existing key + one new key
     val updates = Seq((2L, "b2"), (2L, "b3"), (9L, "z")).toDF("k", "name")
@@ -302,7 +302,7 @@ class LakehouseOpsSpec extends SparkTestBase {
       .map(d => d.substring(d.lastIndexOf('=') + 1).toInt -> d).toMap
 
   test("bucketed lww upsert: converges to the per-key argmax and only dirty buckets rewrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_blww_").toString + "/t"
+    val dir = tempDir("graft_blww_").toString + "/t"
     // enough keys that most of the 16 buckets are populated
     val base = (1L to 200L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v")
     val d0 = Merge.lwwUpsertParquetBucketed(spark, dir, base, "k", Seq("v"))
@@ -344,7 +344,7 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("bucketed lww upsert equals the unbucketed merge on the same change set") {
-    val dirB = java.nio.file.Files.createTempDirectory("graft_blww_eq_").toString + "/b"
+    val dirB = tempDir("graft_blww_eq_").toString + "/b"
     val batches = Seq(
       Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "c", 1L)),
       Seq((2L, "b2", 5L), (4L, "d", 1L)),
@@ -360,7 +360,7 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("lww crash recovery: an apply crashed before its marker leaves the prior version, and the replay merges into it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lww_cr_").toString + "/t"
+    val dir = tempDir("graft_lww_cr_").toString + "/t"
     Merge.lwwUpsertParquetBucketed(spark, dir,
       Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "name", "v"), "k", Seq("v"), numBuckets = 4)
     // the crash state: an apply wrote its snapshot dir (a one-row
@@ -378,7 +378,7 @@ class LakehouseOpsSpec extends SparkTestBase {
   }
 
   test("bucketed lww crash recovery: an empty marker from a crashed commit is skipped and no key is lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_blww_cr_").toString + "/t"
+    val dir = tempDir("graft_blww_cr_").toString + "/t"
     val base = (1L to 50L).map(k => (k, s"n$k", 1L)).toDF("k", "name", "v")
     Merge.lwwUpsertParquetBucketed(spark, dir, base, "k", Seq("v"), numBuckets = 8)
     // the crash state: an apply created marker 2 and died before

@@ -19,7 +19,7 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("compaction collapses many small files and preserves every row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_").toString + "/t"
+    val dir = tempDir("graft_compact_").toString + "/t"
     // 64 tiny files
     VersionedTable.write(spark, dir,
       spark.range(10000).select(col("id"), (col("id") % 7).as("k")).repartition(64))
@@ -34,7 +34,7 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("compaction of a partitioned table preserves layout and pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_p_").toString + "/t"
+    val dir = tempDir("graft_compact_p_").toString + "/t"
     committedTable(dir) { snap =>
       spark.range(4000).select(col("id"), (col("id") % 3).cast("string").as("day"))
         .repartition(16).write.partitionBy("day").parquet(snap)
@@ -50,7 +50,7 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("compactParquet refuses a bucketed manifest (self-compacting)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_b_").toString + "/t"
+    val dir = tempDir("graft_compact_b_").toString + "/t"
     graft.io.Merge.lwwUpsertParquetBucketed(spark, dir,
       (1L to 50L).map(kk => (kk, s"n$kk", 1L)).toDF("k", "name", "v"),
       "k", Seq("v"), numBuckets = 4)
@@ -67,7 +67,7 @@ class MaintenanceSpec extends SparkTestBase {
   }
 
   test("a compaction crashed before its marker leaves the prior version, and a re-run compacts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_cr_").toString + "/t"
+    val dir = tempDir("graft_compact_cr_").toString + "/t"
     VersionedTable.write(spark, dir, spark.range(1000).toDF("id").repartition(16))
     // the crash state: the compacted snapshot was written, its marker never was
     spark.range(1000).toDF("id").coalesce(1).write.parquet(s"$dir/d-0rphan000000")
@@ -85,7 +85,7 @@ class MaintenanceSpec extends SparkTestBase {
       (1L, base, "s1"), // exact dup — deterministic banding, see below
       (2L, "one two three four five six seven eight nine ten", "s2"))
       .toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_compact_").toString
+    val dir = tempDir("graft_nd_compact_").toString
     Dedup.buildNearDupIndex(corpus, dir)
     // exact copies: identical shingle sets match every band, so LSH
     // detection is deterministic (edited variants sit near the banding's
@@ -133,7 +133,7 @@ class MaintenanceSpec extends SparkTestBase {
       (2L, "one two three four five six seven eight nine ten", "s2"))
       .toDF("doc_id", "text", "source")
     def mkIndex() = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_nd_heal_").toString
+      val dir = tempDir("graft_nd_heal_").toString
       Dedup.buildNearDupIndex(corpus, dir)
       Dedup.registerInNearDupIndex(
         Seq((10L, base, "d1")).toDF("doc_id", "text", "source"), dir, "day1")
@@ -177,7 +177,7 @@ class MaintenanceSpec extends SparkTestBase {
     // could converge the state).
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     val corpus = Seq((0L, base, "s1")).toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_tmp_").toString
+    val dir = tempDir("graft_nd_tmp_").toString
     Dedup.buildNearDupIndex(corpus, dir)
     val day2 = Seq((20L, base, "d2")).toDF("doc_id", "text", "source")
     val expected = Dedup.nearDupsAgainstIndex(day2, dir, threshold = 0.5)
@@ -203,8 +203,8 @@ class MaintenanceSpec extends SparkTestBase {
     def doc(i: Int) =
       s"hash index compaction fixture document $i with enough body text " +
         s"to score and split deterministically $i"
-    val idx = java.nio.file.Files.createTempDirectory("graft_hc_").toString + "/hashes"
-    val out1 = java.nio.file.Files.createTempDirectory("graft_hm1_").toString + "/m"
+    val idx = tempDir("graft_hc_").toString + "/hashes"
+    val out1 = tempDir("graft_hm1_").toString + "/m"
     StreamingManifest.appendEpoch(
       Seq((1L, doc(1), "en"), (2L, doc(2), "en")).toDF("doc_id", "text", "lang"),
       idx, out1, epochId = 0L, run = "run-A")

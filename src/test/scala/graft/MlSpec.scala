@@ -24,7 +24,7 @@ class MlSpec extends SparkTestBase {
       BronzeGenerator.shipments(spark, 500, 42L, "2024-01-01"), "2024-01-01", ts)
     val feats = DeliveryModel.features(silver).cache()
     val model = DeliveryModel.train(feats).model
-    val dir = java.nio.file.Files.createTempDirectory("graft_model_").toString + "/m"
+    val dir = tempDir("graft_model_").toString + "/m"
     model.write.overwrite().save(dir)
     val loaded = org.apache.spark.ml.PipelineModel.load(dir)
     val a = DeliveryModel.predict(model, feats).select("courier", "status", "predicted_status")

@@ -6,7 +6,7 @@ class PredictionLogSpec extends SparkTestBase {
   import spark.implicits._
 
   test("append-mode log accumulates across writers without clobbering") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_log_").toString + "/log"
+    val dir = tempDir("graft_log_").toString + "/log"
     val r1 = Seq(("TN1", "SUCCESS", "2024-01-01")).toDF("tracking_number", "prediction", "log_date")
     val r2 = Seq(("TN2", "PENDING", "2024-01-01"),
       ("TN3", "SUCCESS", "2024-01-02")).toDF("tracking_number", "prediction", "log_date")
@@ -46,7 +46,7 @@ class PredictionLogSpec extends SparkTestBase {
   }
 
   test("latestRun resolves the newest dated directory") {
-    val root = java.nio.file.Files.createTempDirectory("graft_models_").toString
+    val root = tempDir("graft_models_").toString
     Seq("2024-01-01", "2024-03-05", "2024-02-11").foreach { d =>
       java.nio.file.Files.createDirectories(java.nio.file.Path.of(s"$root/$d"))
     }

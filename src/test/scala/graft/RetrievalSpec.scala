@@ -46,7 +46,7 @@ class RetrievalSpec extends SparkTestBase {
       (2L, "spark broadcast"),
       (3L, "window function frame"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = tempDir("bm25idx").toString
     Retrieval.buildBm25Index(spark, docs, dir, nBuckets = 4, k1 = 1.2, b = 0.75)
     val out = Retrieval.bm25AgainstIndex(spark, dir, Seq("spark"), k = 10)
       .select("doc_id", "n_terms_hit", "bm25").as[(Long, Long, Double)].collect()
@@ -66,7 +66,7 @@ class RetrievalSpec extends SparkTestBase {
     assert(again === Retrieval.bm25AgainstIndex(spark, dir, Seq("spark"), k = 10)
       .collect().toSeq)
     // probing a non-index dir fails loudly; duplicate terms rejected
-    val empty = java.nio.file.Files.createTempDirectory("notidx").toString
+    val empty = tempDir("notidx").toString
     intercept[IllegalArgumentException] {
       Retrieval.bm25AgainstIndex(spark, empty, Seq("spark"), k = 1)
     }
@@ -79,7 +79,7 @@ class RetrievalSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val docs = Seq((1L, "spark shuffle"), (2L, "spark broadcast"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25gen").toString
+    val dir = tempDir("bm25gen").toString
     Retrieval.buildBm25Index(spark, docs, dir, nBuckets = 4)
     assert(Retrieval.bm25AgainstIndex(spark, dir, Seq("spark"), k = 2).count() === 2)
     // poison the rebuild: text evaluation throws once the job runs, so

@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.model.CorpusAdapter
-import graft.serve.{PredictionLog, ServeApi, ServeQueries}
+import graft.serve.{PredictionLog, ServeApi, ServeIndex, ServeQueries}
 
 /** End-to-end HTTP serving (`API/pastapi.py:168-219`): real server on an
   * ephemeral port, real requests, responses checked against the same
@@ -16,8 +16,10 @@ class ServeApiSpec extends SparkTestBase {
       java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
     .cache()
 
+  private lazy val http = HttpClient.newHttpClient()
+
   private def get(server: com.sun.net.httpserver.HttpServer, pathAndQuery: String): (Int, String) = {
-    val resp = HttpClient.newHttpClient().send(
+    val resp = http.send(
       HttpRequest.newBuilder(URI.create(
         s"http://127.0.0.1:${server.getAddress.getPort}$pathAndQuery")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
@@ -25,7 +27,7 @@ class ServeApiSpec extends SparkTestBase {
   }
 
   test("tracking and country routes answer with the oracle-checked query results") {
-    val logDir = java.nio.file.Files.createTempDirectory("graft_serve_log_").toString + "/log"
+    val logDir = tempDir("graft_serve_log_").toString + "/log"
     val server = ServeApi.start(silver, model = None,
       ServeApi.Config(asOfDate = "2024-06-01", logDir = Some(logDir)))
     try {
@@ -117,7 +119,7 @@ class ServeApiSpec extends SparkTestBase {
   }
 
   test("concurrent requests all answer and all land in the prediction log") {
-    val logDir = java.nio.file.Files.createTempDirectory("graft_serve_cc_").toString + "/log"
+    val logDir = tempDir("graft_serve_cc_").toString + "/log"
     val server = ServeApi.start(silver, model = None,
       ServeApi.Config(asOfDate = "2024-06-01", logDir = Some(logDir)))
     try {
@@ -171,5 +173,124 @@ class ServeApiSpec extends SparkTestBase {
   test("json writer escapes control and quote characters") {
     val s = ServeApi.jsonObj(Seq("k" -> "a\"b\\c\nd"))
     assert(s === """{"k":"a\"b\\c\nd"}""".replace("\n", "\\n"))
+  }
+
+  private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+
+  /** GETs every path from both servers, four requests at a time, and
+    * returns the paths whose status or body differ. */
+  private def differences(a: com.sun.net.httpserver.HttpServer,
+      b: com.sun.net.httpserver.HttpServer, paths: Seq[String]): Seq[String] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      Await.result(Future.traverse(paths)(p => Future {
+        val (x, y) = (get(a, p), get(b, p))
+        if (x == y) None else Some(s"$p: $x vs $y")
+      }), 20.minutes).flatten
+    } finally pool.shutdown()
+  }
+
+  private lazy val fitted = graft.ml.DeliveryModel.train(graft.ml.DeliveryModel.features(silver)).model
+
+  test("indexed answers equal the per-request Spark path, byte for byte, on every key") {
+    import spark.implicits._
+    val cfg = ServeApi.Config(asOfDate = "2024-06-01")
+    val indexed = ServeApi.start(silver, Some(fitted), cfg)
+    val direct = ServeApi.start(silver, Some(fitted), cfg, 0, indexBound = 0, prebuild = false)
+    try {
+      val ids = silver.select("tracking_number").distinct().as[String].collect().sorted.toSeq
+      val countries = silver.select("destination_country").distinct().as[String].collect().sorted.toSeq
+      val paths =
+        ids.map(id => s"/predict/tracking/?tracking_id=${enc(id)}") ++
+          (countries ++ Seq(countries.head.toLowerCase, "ATLANTIS", "straße", "Ωmega"))
+            .map(c => s"/predict/country/?country=${enc(c)}") :+
+          "/predict/tracking/?tracking_id=NOPE"
+      assert(ids.size > 1000 && countries.size > 10, s"${ids.size} ids, ${countries.size} countries")
+      val diffs = differences(indexed, direct, paths)
+      assert(diffs.isEmpty, s"${diffs.size} of ${paths.size} differ, e.g. ${diffs.take(3)}")
+      assert(get(indexed, s"/predict/country/?country=${enc(countries.head.toLowerCase)}")._1 === 200)
+      // the default server answered from its indexes, the bound-0 one never built any
+      val (_, health) = get(indexed, "/health")
+      assert(health.contains(s""""tracking":{"indexed":${ids.size}}""") &&
+        health.contains(s""""country":{"indexed":${countries.size}}"""), health)
+      val (_, health0) = get(direct, "/health")
+      assert(health0.contains(""""tracking":"spark"""") && health0.contains(""""country":"spark""""), health0)
+    } finally { indexed.stop(0); direct.stop(0) }
+  }
+
+  test("a shipment without a delivery_status label answers UNKNOWN on both paths, a country without delivery days 422") {
+    import spark.implicits._
+    val day = java.sql.Date.valueOf("2024-01-02")
+    // TN_N has no label (so no prediction row) and no delivery days (so
+    // JAPAN has shipments but no average)
+    val frame = Seq(
+      ("TN_L", "COURIER_A", "DELIVERED", "ASIA", "CHINA", 1.5, Option(3), Option("SUCCESS"), "CITY_1", "EVT-NF", day),
+      ("TN_N", "COURIER_A", "PENDING", "ASIA", "JAPAN", 2.5, None, Option.empty[String], "CITY_2", "EVT-RF", day))
+      .toDF("tracking_number", "courier", "status", "origin_country", "destination_country",
+        "shipment_weight", "delivery_days", "delivery_status", "checkpoint_city",
+        "checkpoint_message", "checkpoint_time")
+    for (model <- Seq(None, Some(fitted))) {
+      val cfg = ServeApi.Config(asOfDate = "2024-06-01")
+      val indexed = ServeApi.start(frame, model, cfg)
+      val direct = ServeApi.start(frame, model, cfg, 0, indexBound = 0, prebuild = false)
+      try {
+        val paths = Seq("TN_L", "TN_N", "TN_X").map(id => s"/predict/tracking/?tracking_id=$id") ++
+          Seq("CHINA", "japan", "NOWHERE").map(c => s"/predict/country/?country=$c")
+        assert(differences(indexed, direct, paths).isEmpty)
+        val (st, body) = get(indexed, "/predict/tracking/?tracking_id=TN_N")
+        assert(st === 200 && body.contains(""""predicted_status":"UNKNOWN""""), s"$model: $body")
+        assert(get(indexed, "/predict/country/?country=japan")._1 === 422)
+      } finally { indexed.stop(0); direct.stop(0) }
+    }
+  }
+
+  test("/metrics counts each read route's answers by status with a latency histogram") {
+    val server = ServeApi.start(silver, model = None, ServeApi.Config(asOfDate = "2024-06-01"))
+    try {
+      val (h0, before) = get(server, "/health")
+      assert(h0 === 200 && before.contains(""""status":"ok"""") &&
+        before.contains(""""tracking":"pending"""") && before.contains(""""country":"pending""""), before)
+      Seq("TN100", "TN101", "NOPE").foreach(id => get(server, s"/predict/tracking/?tracking_id=$id"))
+      val (h1, after) = get(server, "/health")
+      assert(h1 === 200 && after.contains(""""tracking":{"indexed":""") &&
+        after.contains(""""country":"pending""""), after)
+
+      val (st, metrics) = get(server, "/metrics")
+      assert(st === 200, metrics)
+      val tracking = metrics.substring(0, metrics.indexOf(""""country":"""))
+      assert(tracking.contains(""""tracking":{"status":{"200":2,"404":1}"""), metrics)
+      val counts = """"counts":\[([0-9,]+)\]""".r.findFirstMatchIn(tracking).get.group(1)
+        .split(',').map(_.toLong)
+      assert(counts.sum === 3, metrics)
+      assert(metrics.contains(""""country":{"status":{}"""), metrics)
+      assert(get(server, "/")._2.contains("/health, /metrics"))
+      assert(get(server, "/healthz")._1 === 404)
+    } finally server.stop(0)
+  }
+
+  test("prebuild builds both indexes before the server answers a request") {
+    val server = ServeApi.start(silver, None, ServeApi.Config(asOfDate = "2024-06-01"),
+      0, ServeIndex.DefaultBound, prebuild = true)
+    try {
+      val (st, health) = get(server, "/health")
+      assert(st === 200 && health.contains(""""tracking":{"indexed":""") &&
+        health.contains(""""country":{"indexed":"""), health)
+    } finally server.stop(0)
+  }
+
+  test("a failed index build is not retried: the per-key query answers and /health says why") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val index = new ServeIndex[String](10,
+      _ => { builds.incrementAndGet(); throw new IllegalStateException("result too large") },
+      key => Some(s"queried $key"), identity)
+    assert(index.state === "pending")
+    assert(index.lookup("a") === Some("queried a"))
+    assert(index.lookup("b") === Some("queried b"))
+    assert(builds.get() === 1)
+    assert(ServeApi.jsonObj(Seq("tracking" -> index.state)) ===
+      """{"tracking":{"failed":"java.lang.IllegalStateException: result too large"}}""")
   }
 }

@@ -463,7 +463,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("persisted IVF index probe is bit-identical to the in-memory ivfTopK") {
     val emb = Corpus.embeddings(spark, sf0001)
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_idx_")
+    val root = tempDir("graft_ivf_idx_")
     val dir = root.toString
     val fromIndex = try {
       Similarity.buildIvfIndex(spark, emb, dir)
@@ -478,8 +478,8 @@ class SimilaritySpec extends SparkTestBase {
 
   test("quantized IVF index (IVF-SQ8): smaller vector payload, ranking holds") {
     val emb = Corpus.embeddings(spark, sf0001)
-    val full = java.nio.file.Files.createTempDirectory("graft_ivff_").toString
-    val sq = java.nio.file.Files.createTempDirectory("graft_ivfq_").toString
+    val full = tempDir("graft_ivff_").toString
+    val sq = tempDir("graft_ivfq_").toString
     Similarity.buildIvfIndex(spark, emb, full)
     Similarity.buildIvfIndex(spark, emb, sq, quantized = true)
     def dirBytes(d: String): Long = {
@@ -662,7 +662,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("persisted PQ index probe is bit-identical to the in-memory pqTopK") {
     val emb = Corpus.embeddings(spark, sf0001)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_").toString
+    val idx = tempDir("graft_pq_").toString
     Similarity.buildPqIndex(spark, emb, idx, dim = 64, nSub = 8, codebookK = 16)
     val persisted = Similarity.pqTopKAgainstIndex(spark,
       emb.filter(col("vec_id") < 3), idx, k = 8).collect()
@@ -677,11 +677,11 @@ class SimilaritySpec extends SparkTestBase {
 
   test("PQ index probe fails loudly on a non-index dir and on a dim mismatch") {
     val emb = Corpus.embeddings(spark, sf0001)
-    val notIdx = java.nio.file.Files.createTempDirectory("graft_pq_no_").toString
+    val notIdx = tempDir("graft_pq_no_").toString
     intercept[IllegalArgumentException] {
       Similarity.pqTopKAgainstIndex(spark, emb.limit(1), notIdx, k = 5)
     }
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_dim_").toString
+    val idx = tempDir("graft_pq_dim_").toString
     Similarity.buildPqIndex(spark, emb, idx, dim = 64, nSub = 8, codebookK = 4)
     import spark.implicits._
     val badQ = Seq((0L, Array(1.0f, 2.0f), 0)).toDF("vec_id", "embedding", "label")

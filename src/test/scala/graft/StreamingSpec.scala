@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -18,7 +16,7 @@ class StreamingSpec extends SparkTestBase {
   private val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
 
   test("file-source silver stream ≡ batch silver") {
-    val dir = Files.createTempDirectory("graft_stream_").toString
+    val dir = tempDir("graft_stream_").toString
     BronzeGenerator.shipments(spark, 500, 42L, "2024-01-01")
       .write.mode("overwrite").json(dir)
     val batch = SilverTransform.transform(
@@ -244,11 +242,11 @@ class StreamingSpec extends SparkTestBase {
 
   test("foreachBatch sink appends micro-batches as parquet") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_fb_").toString + "/out"
+    val dir = tempDir("graft_fb_").toString + "/out"
     val input = MemoryStream[(Long, Double)]
     val q = SilverStream.appendSink(input.toDF().toDF("k", "v"), dir)
       .trigger(Trigger.ProcessingTime(0))
-      .option("checkpointLocation", Files.createTempDirectory("graft_fb_ck_").toString)
+      .option("checkpointLocation", tempDir("graft_fb_ck_").toString)
       .start()
     input.addData((1L, 1.0), (2L, 2.0)); q.processAllAvailable()
     input.addData((3L, 3.0)); q.processAllAvailable()
@@ -266,15 +264,15 @@ class StreamingSpec extends SparkTestBase {
       (0L, base, "s1"),
       (1L, "one two three four five six seven eight nine ten", "s1"))
       .toDF("doc_id", "text", "source")
-    val idxDir = Files.createTempDirectory("graft_sidx_").toString
+    val idxDir = tempDir("graft_sidx_").toString
     Dedup.buildNearDupIndex(corpus, idxDir)
-    val outDir = Files.createTempDirectory("graft_sidx_out_").toString + "/hits"
+    val outDir = tempDir("graft_sidx_out_").toString + "/hits"
     val input = MemoryStream[(Long, String, String)]
     val q = graft.streaming.StreamingDedup
       .nearDupAuditSink(input.toDF().toDF("doc_id", "text", "source"), idxDir, outDir,
         threshold = 0.5)
       .trigger(Trigger.ProcessingTime(0))
-      .option("checkpointLocation", Files.createTempDirectory("graft_sidx_ck_").toString)
+      .option("checkpointLocation", tempDir("graft_sidx_ck_").toString)
       .start()
     // epoch of arrivals: 10 is a near-dup of indexed 0 (the known-lucky
     // delta edit); 11 is unrelated
@@ -297,13 +295,13 @@ class StreamingSpec extends SparkTestBase {
     import graft.operators.Dedup
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     val corpus = Seq((0L, base, "s1")).toDF("doc_id", "text", "source")
-    val idxDir = Files.createTempDirectory("graft_smd_").toString
+    val idxDir = tempDir("graft_smd_").toString
     Dedup.buildNearDupIndex(corpus, idxDir)
-    val outDir = Files.createTempDirectory("graft_smd_out_").toString + "/hits"
+    val outDir = tempDir("graft_smd_out_").toString + "/hits"
     val input = MemoryStream[(Long, String, String)]
     val q = graft.streaming.StreamingDedup
       .selfMaintainingDedupSink(input.toDF().toDF("doc_id", "text", "source"),
-        idxDir, outDir, Files.createTempDirectory("graft_smd_ck_").toString,
+        idxDir, outDir, tempDir("graft_smd_ck_").toString,
         threshold = 0.5)
       .trigger(Trigger.ProcessingTime(0))
       .start()
@@ -327,13 +325,13 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    val idxDir = Files.createTempDirectory("graft_cmp_").toString
+    val idxDir = tempDir("graft_cmp_").toString
     Dedup.buildNearDupIndex(Seq((0L, base, "s1")).toDF("doc_id", "text", "source"), idxDir)
-    val outDir = Files.createTempDirectory("graft_cmp_out_").toString + "/hits"
+    val outDir = tempDir("graft_cmp_out_").toString + "/hits"
     val input = MemoryStream[(Long, String, String)]
     val q = graft.streaming.StreamingDedup
       .selfMaintainingDedupSink(input.toDF().toDF("doc_id", "text", "source"),
-        idxDir, outDir, Files.createTempDirectory("graft_cmp_ck_").toString,
+        idxDir, outDir, tempDir("graft_cmp_ck_").toString,
         threshold = 0.5, compactEvery = 2)
       .trigger(Trigger.ProcessingTime(0))
       .start()
@@ -359,7 +357,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    val idxDir = Files.createTempDirectory("graft_wdg_").toString
+    val idxDir = tempDir("graft_wdg_").toString
     Dedup.buildNearDupIndex(
       Seq((0L, base, "s1")).toDF("doc_id", "text", "source"), idxDir)
     // crash remnant: the fold reached a complete tmp but cleanup never
@@ -374,11 +372,11 @@ class StreamingSpec extends SparkTestBase {
         Seq((5L, base, "s")).toDF("doc_id", "text", "source"),
         idxDir, threshold = 0.5).collect()
     }
-    val outDir = Files.createTempDirectory("graft_wdg_out_").toString + "/hits"
+    val outDir = tempDir("graft_wdg_out_").toString + "/hits"
     val input = MemoryStream[(Long, String, String)]
     val q = graft.streaming.StreamingDedup
       .selfMaintainingDedupSink(input.toDF().toDF("doc_id", "text", "source"),
-        idxDir, outDir, Files.createTempDirectory("graft_wdg_ck_").toString,
+        idxDir, outDir, tempDir("graft_wdg_ck_").toString,
         threshold = 0.5, compactEvery = 5)
       .trigger(Trigger.ProcessingTime(0))
       .start()
@@ -403,12 +401,12 @@ class StreamingSpec extends SparkTestBase {
       (4L, doc(4), "en"))
     val e2 = Seq((10L, doc(10), "en"), (11L, doc(1), "en"),
       (12L, doc(12), "en"), (13L, doc(12), "en"))
-    val hashIdx = Files.createTempDirectory("graft_mh_").toString + "/hashes"
-    val outDir = Files.createTempDirectory("graft_mo_").toString + "/manifest"
+    val hashIdx = tempDir("graft_mh_").toString + "/hashes"
+    val outDir = tempDir("graft_mo_").toString + "/manifest"
     val input = MemoryStream[(Long, String, String)]
     val q = graft.streaming.StreamingManifest
       .manifestSink(input.toDF().toDF("doc_id", "text", "lang"), hashIdx, outDir,
-        Files.createTempDirectory("graft_mck_").toString)
+        tempDir("graft_mck_").toString)
       .trigger(Trigger.ProcessingTime(0))
       .start()
     input.addData(e1: _*); q.processAllAvailable()
@@ -435,14 +433,14 @@ class StreamingSpec extends SparkTestBase {
     def doc(i: Int) =
       s"manifest compaction fixture document $i carries enough body text " +
         s"to score and split deterministically $i"
-    val hashIdx = Files.createTempDirectory("graft_mc_").toString + "/hashes"
-    val outDir = Files.createTempDirectory("graft_mc_out_").toString + "/manifest"
+    val hashIdx = tempDir("graft_mc_").toString + "/hashes"
+    val outDir = tempDir("graft_mc_out_").toString + "/manifest"
     val input = MemoryStream[(Long, String, String)]
     // threshold 1: every epoch after the first compacts before appending —
     // the maximally adversarial cadence for decision stability
     val q = StreamingManifest
       .manifestSink(input.toDF().toDF("doc_id", "text", "lang"), hashIdx, outDir,
-        Files.createTempDirectory("graft_mc_ck_").toString, compactEveryFiles = 1)
+        tempDir("graft_mc_ck_").toString, compactEveryFiles = 1)
       .trigger(Trigger.ProcessingTime(0))
       .start()
     val epochs = Seq(
@@ -469,8 +467,8 @@ class StreamingSpec extends SparkTestBase {
     def doc(i: Int) =
       s"fresh checkpoint restart fixture document $i with enough body text " +
         s"to score and split deterministically $i"
-    val hashIdx = Files.createTempDirectory("graft_rck_").toString + "/hashes"
-    val outDir = Files.createTempDirectory("graft_rcm_").toString + "/manifest"
+    val hashIdx = tempDir("graft_rck_").toString + "/hashes"
+    val outDir = tempDir("graft_rcm_").toString + "/manifest"
     // run A registers doc 1 at ITS epoch 0
     val e0 = Seq((1L, doc(1), "en"), (2L, doc(2), "en")).toDF("doc_id", "text", "lang")
     StreamingManifest.appendEpoch(e0, hashIdx, outDir, epochId = 0L, run = "run-A")
@@ -490,11 +488,11 @@ class StreamingSpec extends SparkTestBase {
       .filter(col("doc_id") === 11L).count()
     assert(replayKeeps === 2L, "retried epoch re-decides keep identically")
     // run keys are checkpoint-scoped: same dir → same key; fresh dir → fresh key
-    val ck = Files.createTempDirectory("graft_rkk_").toString
+    val ck = tempDir("graft_rkk_").toString
     val k1 = StreamingManifest.runKey(spark, ck)
     assert(StreamingManifest.runKey(spark, ck) === k1)
     assert(StreamingManifest.runKey(spark,
-      Files.createTempDirectory("graft_rkk2_").toString) !== k1)
+      tempDir("graft_rkk2_").toString) !== k1)
   }
 
   test("stream-stream join with watermarks joins within the time bound") {
@@ -896,7 +894,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("windowed courier KPIs run as a stream over generated bronze") {
-    val dir = Files.createTempDirectory("graft_stream_kpi_").toString
+    val dir = tempDir("graft_stream_kpi_").toString
     BronzeGenerator.shipments(spark, 300, 42L, "2024-01-01")
       .write.mode("overwrite").json(dir)
     val silver = SilverStream.silverStream(spark, dir, "2024-01-01", ts)
@@ -920,14 +918,14 @@ class StreamingSpec extends SparkTestBase {
     val expected = Map(
       1L -> (11L, "b", 2.0), 2L -> (12L, "c", 3.0), 3L -> (14L, "e", 5.0))
     def runWith(batches: Seq[Seq[(Long, Long, java.sql.Timestamp, String, Double)]]): Map[Long, (Long, String, Double)] = {
-      val dir = Files.createTempDirectory("graft_cdc_").toString + "/state"
+      val dir = tempDir("graft_cdc_").toString + "/state"
       val input = MemoryStream[(Long, Long, java.sql.Timestamp, String, Double)]
       val q = SilverStream.cdcUpsertSink(
           input.toDF().toDF("user_id", "event_id", "ts", "event_type", "value"),
           dir, "user_id", Seq("ts", "event_id"))
         .trigger(Trigger.ProcessingTime(0))
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_cdc_ck_").toString)
+          tempDir("graft_cdc_ck_").toString)
         .start()
       batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
       q.stop()
@@ -963,13 +961,13 @@ class StreamingSpec extends SparkTestBase {
         .as[(Long, String, String, Option[String], Boolean)].collect().toSet
     }
     def runWith(batches: Seq[Seq[String]]): Set[(Long, String, String, Option[String], Boolean)] = {
-      val dir = Files.createTempDirectory("graft_scd2s_").toString + "/dim"
+      val dir = tempDir("graft_scd2s_").toString + "/dim"
       val input = MemoryStream[(Long, String, String)]
       val q = SilverStream.scd2Sink(
           input.toDF().toDF("k", "attr", "_day"), dir, "k", Seq("attr"), "_day")
         .trigger(Trigger.ProcessingTime(0))
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_scd2s_ck_").toString)
+          tempDir("graft_scd2s_ck_").toString)
         .start()
       batches.foreach { days =>
         input.addData(days.flatMap(d => snaps(d).map { case (k, a) => (k, a, d) }): _*)
@@ -995,13 +993,13 @@ class StreamingSpec extends SparkTestBase {
 
   test("scd2Sink fails LOUDLY on a day split across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_scd2_split_").toString + "/dim"
+    val dir = tempDir("graft_scd2_split_").toString + "/dim"
     val input = MemoryStream[(Long, String, String)]
     val q = SilverStream.scd2Sink(
         input.toDF().toDF("k", "attr", "_day"), dir, "k", Seq("attr"), "_day")
       .trigger(Trigger.ProcessingTime(0))
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_scd2_split_ck_").toString)
+        tempDir("graft_scd2_split_ck_").toString)
       .start()
     input.addData((1L, "a", "2024-01-01"), (3L, "c", "2024-01-01"))
     q.processAllAvailable()
@@ -1023,13 +1021,13 @@ class StreamingSpec extends SparkTestBase {
 
   test("scd2Sink fails LOUDLY when a genuinely new day arrives out of order") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_scd2_ooo_").toString + "/dim"
+    val dir = tempDir("graft_scd2_ooo_").toString + "/dim"
     val input = MemoryStream[(Long, String, String)]
     val q = SilverStream.scd2Sink(
         input.toDF().toDF("k", "attr", "_day"), dir, "k", Seq("attr"), "_day")
       .trigger(Trigger.ProcessingTime(0))
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_scd2_ooo_ck_").toString)
+        tempDir("graft_scd2_ooo_ck_").toString)
       .start()
     input.addData((1L, "a", "2024-01-01"))
     q.processAllAvailable()
@@ -1055,7 +1053,7 @@ class StreamingSpec extends SparkTestBase {
       v((i % 4).toInt) = 1.0f
       (i, v, (i % 4).toInt)
     }.toDF("vec_id", "embedding", "label")
-    val idx = Files.createTempDirectory("graft_annidx_").toString + "/idx"
+    val idx = tempDir("graft_annidx_").toString + "/idx"
     graft.operators.Similarity.buildIvfIndex(spark, emb, idx)
     val queries = (0L until 4L).map { i =>
       val v = Array.fill(8)(0.0f)
@@ -1068,13 +1066,13 @@ class StreamingSpec extends SparkTestBase {
       .as[(Long, Long, Long)].collect().toSet
     assert(expected.nonEmpty)
     def runWith(batches: Seq[Seq[(Long, Array[Float], Int)]]): Set[(Long, Long, Long)] = {
-      val out = Files.createTempDirectory("graft_annout_").toString + "/hits"
+      val out = tempDir("graft_annout_").toString + "/hits"
       val input = MemoryStream[(Long, Array[Float], Int)]
       val q = SilverStream.annProbeSink(
           input.toDF().toDF("vec_id", "embedding", "label"), out, idx, k = 5)
         .trigger(Trigger.ProcessingTime(0))
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_annout_ck_").toString)
+          tempDir("graft_annout_ck_").toString)
         .start()
       batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
       q.stop()
@@ -1101,7 +1099,7 @@ class StreamingSpec extends SparkTestBase {
       v((i % 2).toInt) = 1.0f
       (i, v, (i % 2).toInt)
     }.toDF("vec_id", "embedding", "label")
-    val idx = Files.createTempDirectory("graft_annidx_k100_").toString + "/idx"
+    val idx = tempDir("graft_annidx_k100_").toString + "/idx"
     graft.operators.Similarity.buildIvfIndex(spark, emb, idx, nCells = 2)
     val queries = Seq(100L, 101L).map { i =>
       val v = Array.fill(4)(0.0f)
@@ -1113,13 +1111,13 @@ class StreamingSpec extends SparkTestBase {
       .select("query_id", "rank", "neighbor_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(expected.size === 2 * 120, "each query must rank past 100")
-    val out = Files.createTempDirectory("graft_annout_k100_").toString + "/hits"
+    val out = tempDir("graft_annout_k100_").toString + "/hits"
     val input = MemoryStream[(Long, Array[Float], Int)]
     val q = SilverStream.annProbeSink(
         input.toDF().toDF("vec_id", "embedding", "label"), out, idx, k = 120)
       .trigger(Trigger.ProcessingTime(0))
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_annout_k100_ck_").toString)
+        tempDir("graft_annout_k100_ck_").toString)
       .start()
     input.addData(queries: _*)
     q.processAllAvailable()
@@ -1139,7 +1137,7 @@ class StreamingSpec extends SparkTestBase {
       v(2) = 0.01f * i
       (offset + i, v, (i % 2).toInt)
     }
-    val idx = Files.createTempDirectory("graft_annidx_rb_").toString + "/idx"
+    val idx = tempDir("graft_annidx_rb_").toString + "/idx"
     // first build signs the corpus under HIGH vec_ids (1000+): the
     // rebuild re-signs it under low ids (0..29), so an ordering on
     // neighbor_id alone would keep the stale high-id rows forever
@@ -1147,13 +1145,13 @@ class StreamingSpec extends SparkTestBase {
     val query = Seq({
       val v = Array.fill(4)(0.0f); v(0) = 1.0f; (500L, v, 0)
     })
-    val out = Files.createTempDirectory("graft_annout_rb_").toString + "/hits"
+    val out = tempDir("graft_annout_rb_").toString + "/hits"
     val input = MemoryStream[(Long, Array[Float], Int)]
     val q = SilverStream.annProbeSink(
         input.toDF().toDF("vec_id", "embedding", "label"), out, idx, k = 5)
       .trigger(Trigger.ProcessingTime(0))
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_annout_rb_ck_").toString)
+        tempDir("graft_annout_rb_ck_").toString)
       .start()
     input.addData(query: _*)
     q.processAllAvailable()
@@ -1179,14 +1177,14 @@ class StreamingSpec extends SparkTestBase {
   test("cdcUpsertSink per-batch work tracks the BATCH, not the table (dirty buckets only)") {
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val dir = Files.createTempDirectory("graft_cdc_scale_").toString + "/state"
+    val dir = tempDir("graft_cdc_scale_").toString + "/state"
     val input = MemoryStream[(Long, Long, java.sql.Timestamp, String, Double)]
     val q = SilverStream.cdcUpsertSink(
         input.toDF().toDF("user_id", "event_id", "ts", "event_type", "value"),
         dir, "user_id", Seq("ts", "event_id"))
       .trigger(Trigger.ProcessingTime(0))
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_cdc_scale_ck_").toString)
+        tempDir("graft_cdc_scale_ck_").toString)
       .start()
     // batch 1: 300 users spread across all 16 buckets
     input.addData((1L to 300L).map(u =>

@@ -14,7 +14,7 @@ class VersionedTableSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmpRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_vt_${tag}_").toString + "/t"
+    tempDir(s"graft_vt_${tag}_").toString + "/t"
 
   test("write/read round trip, version numbers increase") {
     val root = tmpRoot("rt")

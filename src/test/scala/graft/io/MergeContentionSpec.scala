@@ -11,7 +11,7 @@ class MergeContentionSpec extends graft.SparkTestBase {
   import spark.implicits._
 
   private def tmp(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft_race_${tag}_").toString + "/t"
+    tempDir(s"graft_race_${tag}_").toString + "/t"
 
   private def snapshotDirs(dir: String) =
     new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("d-")).toSet
