@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.gen.BronzeGenerator
 import graft.gold.StarSchema
+import graft.io.LayerIO.countedWrite
 import graft.silver.SilverTransform
 
 /** End-to-end layered pipeline runner — replaces the reference's Airflow
@@ -15,7 +16,9 @@ import graft.silver.SilverTransform
   *
   * Stage properties preserved from the reference: idempotent
   * overwrite-per-partition writes, bronze-existence precheck, per-stage
-  * row counts. Gold stays typed parquet (the reference writes CSV and
+  * row counts. Every row count is counted by the write that produces the
+  * rows ([[graft.io.LayerIO.countedWrite]]), never by a job that reads
+  * the output back. Gold stays typed parquet (the reference writes CSV and
   * loses every type — SURVEY §1.2); `exportCsv` mirrors to CSV for
   * compatibility.
   *
@@ -26,7 +29,13 @@ import graft.silver.SilverTransform
   */
 object Pipeline {
 
-  final case class StageResult(stage: String, rows: Long, path: String)
+  /** One stage's output: the rows its write wrote, where, and its own
+    * wall time in seconds (retries included). Silver and quarantine share
+    * one stage: `quarantine`'s time is its write's, which also computes
+    * the cached transform, and is part of `silver`'s. A gold table's time
+    * is its write, vacuum and CSV export, which overlap with the other
+    * tables'. */
+  final case class StageResult(stage: String, rows: Long, path: String, wallS: Double = 0.0)
 
   /** Per-stage retry policy (the reference's Airflow tasks run with
     * `retries=1..2, retry_delay=…`, `orchestration.py:124-147`).
@@ -108,60 +117,60 @@ object Pipeline {
     val silverDir = s"$rootDir/silver/shipments"
     val goldDir = s"$rootDir/gold/$loadDate"
 
+    def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
     // gen → bronze JSON (the reference's raw layer is JSON-per-day,
     // extraction.py:114-136)
+    val bronzeT0 = System.nanoTime()
     val bronzeRows = retryStage("bronze", retry, hooks) {
       val bronzeOut = bronzeSource.getOrElse(
         BronzeGenerator.shipments(spark, nShipments, seed, loadDate))
-      bronzeOut.write.mode(SaveMode.Overwrite).json(bronzeDir)
-      // generator row count is nShipments by construction; a provided
-      // source is counted from the written layer as LINES (Spark's JSON
-      // writer emits one record per line) — a schema'd JSON count would
-      // re-PARSE the whole layer, the slowest scan in the pipeline,
-      // just to report a number (measured: a third full JSON pass at
-      // the 100× decade)
-      bronzeSource.fold(nShipments)(_ =>
-        spark.read.text(bronzeDir).count())
+      countedWrite(bronzeOut)(_.write.mode(SaveMode.Overwrite).json(bronzeDir))
     }
+    val bronzeS = secondsSince(bronzeT0)
 
-    val (silverRows, quarantinedRows) = retryStage("silver", retry, hooks) {
-      // precheck (orchestration.py:51-83) then bronze JSON → silver
+    val silverT0 = System.nanoTime()
+    val (silverRows, quarantinedRows, quarantineS) = retryStage("silver", retry, hooks) {
+      // precheck (orchestration.py:51-83) then bronze JSON → silver. The
+      // emptiness guard (reference `Silver_tranformation.py:67`) reads
+      // the bronze stage's count, and both checks run before the silver
+      // overwrite, so a missing or empty bronze cannot wipe the partition
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(bronzeDir), spark.sparkContext.hadoopConfiguration)
       require(fs.exists(new org.apache.hadoop.fs.Path(bronzeDir)), s"bronze missing: $bronzeDir")
+      require(bronzeRows > 0, s"bronze empty for $loadDate")
 
       val bronze = spark.read.schema(graft.model.Schemas.bronzeShipment).json(bronzeDir)
-      // emptiness guard (reference `Silver_tranformation.py:67`): Dataset
-      // .isEmpty, not rdd.isEmpty — no RDD conversion, stops at first row
-      require(!bronze.isEmpty, s"bronze empty for $loadDate")
       val transformed = SilverTransform.transform(bronze, loadDate, loadTs)
       // row-level quarantine replaces the reference's try/except-per-file
       // (a bad record there silently drops the whole day): bad rows land
-      // inspectable under quarantine/, good rows proceed
-      // with quarantine on, the transform output feeds three consumers
-      // (bad count, bad write, clean write) — persist it once so the
-      // transform runs a single time and the rule filters scan the cache
-      // the finally covers every consumer of the cache (bad count, bad
-      // write, clean write): a failure in any of them — each retryable —
-      // must not leak a persisted copy per attempt
+      // inspectable under quarantine/, good rows proceed.
+      // With quarantine on, the transform output feeds two consumers (bad
+      // write, clean write): persist it once so the transform runs a
+      // single time and the rule filters scan the cache. The finally
+      // covers both: a failure in either — each retryable — must not leak
+      // a persisted copy per attempt
       val cached = if (quarantine) Some(transformed.persist()) else None
       try {
-        val (silver, quarantined) = if (!quarantine) (transformed, 0L) else {
+        val (silver, quarantined, badS) = if (!quarantine) (transformed, 0L, 0.0) else {
           val split = graft.silver.DataQuality.check(transformed, graft.silver.DataQuality.silverRules)
           val bad = split.quarantine.withColumn("violations",
             org.apache.spark.sql.functions.concat_ws(",",
               org.apache.spark.sql.functions.col("violations")))
-          val nBad = bad.count()
           // overwrite even when empty: a rerun of a date that previously had
           // bad rows must not leave the stale quarantine dir on disk
           // contradicting the rows=0 stage result
-          bad.write.mode(SaveMode.Overwrite).parquet(s"$rootDir/quarantine/silver/$loadDate")
-          (split.clean, nBad)
+          val badT0 = System.nanoTime()
+          val nBad = countedWrite(bad)(
+            _.write.mode(SaveMode.Overwrite).parquet(s"$rootDir/quarantine/silver/$loadDate"))
+          (split.clean, nBad, secondsSince(badT0))
         }
-        silver.write.mode(SaveMode.Overwrite).partitionBy("load_date").parquet(silverDir)
-        (spark.read.parquet(silverDir).where(s"load_date = '$loadDate'").count(), quarantined)
+        (countedWrite(silver)(
+          _.write.mode(SaveMode.Overwrite).partitionBy("load_date").parquet(silverDir)),
+          quarantined, badS)
       } finally cached.foreach(_.unpersist())
     }
+    val silverS = secondsSince(silverT0)
 
     // silver → gold: the silver scan fans out to 7 outputs UNCACHED —
     // each gold table re-reads the parquet with its OWN pruned column
@@ -198,7 +207,7 @@ object Pipeline {
       // submit them from a small thread pool (guide §2.6 overlap) so the
       // next table's tasks back-fill executors freed by the current
       // table's write/commit tail, instead of paying 7 sequential
-      // scan→write→count job latencies. Each write is a VersionedTable
+      // scan→write job latencies. Each write is a VersionedTable
       // snapshot+marker commit on its OWN root (no shared state across
       // tables), the data written per table is identical to the
       // sequential form, and result order is pinned by the table list,
@@ -213,12 +222,13 @@ object Pipeline {
           scala.concurrent.ExecutionContext.fromExecutorService(pool)
         val futures = goldTables.map { case (name, df) =>
           scala.concurrent.Future {
+            val t0 = System.nanoTime()
             val tableRoot = s"$goldDir/$name"
-            graft.io.VersionedTable.write(spark, tableRoot, df)
+            val rows = countedWrite(df)(graft.io.VersionedTable.write(spark, tableRoot, _))
             graft.io.VersionedTable.vacuum(spark, tableRoot, keep = 2)
             if (exportCsv)
               df.write.mode(SaveMode.Overwrite).option("header", "true").csv(s"$goldDir/csv/$name")
-            StageResult(s"gold/$name", readGold(spark, rootDir, loadDate, name).count(), tableRoot)
+            StageResult(s"gold/$name", rows, tableRoot, secondsSince(t0))
           }
         }
         val out = scala.concurrent.Await.result(
@@ -244,10 +254,10 @@ object Pipeline {
     }
 
     val results = Seq(
-      StageResult("bronze", bronzeRows, bronzeDir),
-      StageResult("silver", silverRows, silverDir)) ++
-      (if (quarantine)
-        Seq(StageResult("quarantine", quarantinedRows, s"$rootDir/quarantine/silver/$loadDate"))
+      StageResult("bronze", bronzeRows, bronzeDir, bronzeS),
+      StageResult("silver", silverRows, silverDir, silverS)) ++
+      (if (quarantine) Seq(StageResult("quarantine", quarantinedRows,
+        s"$rootDir/quarantine/silver/$loadDate", quarantineS))
       else Seq.empty) ++
       goldResults
     hooks.onSuccess(results)

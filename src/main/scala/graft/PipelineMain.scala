@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   *     [--export-csv] [--quarantine] [--retries N]
   * }}}
   *
-  * Exit code 0 with per-stage rows on stdout on success; non-zero after
+  * Exit code 0 with one JSON object per stage on stdout on success
+  * (`stage`, `rows`, `path`, `wall_s`; see [[stageJson]]); non-zero after
   * retries are exhausted (the retry/backoff semantics live in
   * [[Pipeline.retryStage]]). Under `spark-submit` the cluster's master is
   * respected; standalone it falls back to `local[SPARK_GRAFT_CPUS]`.
@@ -67,6 +68,13 @@ object PipelineMain {
           System.err.println(s"[pipeline] $stage exhausted retries")),
       quarantine = a.quarantine)
 
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** One stage's record as the single-line JSON object [[main]] prints. */
+  private[graft] def stageJson(r: Pipeline.StageResult): String =
+    Json.writeValueAsString(Json.createObjectNode()
+      .put("stage", r.stage).put("rows", r.rows).put("path", r.path).put("wall_s", r.wallS))
+
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
     // under spark-submit the master comes from the launcher; standalone
@@ -80,7 +88,7 @@ object PipelineMain {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val results = run(spark, a)
-      results.foreach(r => println(s"[pipeline] ${r.stage}: ${r.rows} rows -> ${r.path}"))
+      results.foreach(r => println(stageJson(r)))
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[pipeline] FAILED: ${e.getMessage}")

@@ -208,11 +208,11 @@ object VersionedTable {
     val target = read(spark, root)
     val plan = Merge.mergePlan(target, updates, key)
     val dir = freshDir()
-    try {
-      plan.merged.write.parquet(new Path(root, dir).toString)
+    val after = try {
+      val n = LayerIO.countedWrite(plan.merged)(_.write.parquet(new Path(root, dir).toString))
       commit(spark, root, b, Manifest(Seq(dir)))
+      n
     } finally plan.cached.unpersist()
-    val after = load(spark, root, Seq(dir)).count()
     (plan.before, after, plan.matchedKeys, plan.updateKeys - plan.matchedKeys)
   }
 

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,30 +42,6 @@ class FixpointSpec extends SparkTestBase {
     }
     assert(PhaseTimer.drainCounts() ===
       Map("fixpoint_spec_a_rounds" -> 3L, "fixpoint_spec_b_rounds" -> 2L))
-  }
-
-  /** Jobs submitted while `f` runs. Listener delivery is asynchronous,
-    * so a marked sentinel job runs after `f`: events arrive in order, so
-    * once the sentinel's start is seen every earlier start has been. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("fixpoint.spec.sentinel") != null))
-          sentinel.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setLocalProperty("fixpoint.spec.sentinel", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("fixpoint.spec.sentinel", null)
-      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job start never delivered")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a lazily cut step costs its one action; an eager cut adds one job per round") {
