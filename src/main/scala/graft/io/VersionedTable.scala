@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-version parquet table: the one way every table in the engine is
   * published (gold, the MERGE upsert, the streaming LWW and SCD2 sinks,
-  * compaction), so a concurrent reader always finds a complete table.
+  * compaction, the persisted near-dup index), so a concurrent reader
+  * always finds a complete table.
   *
   * Layout under `root/`:
   * {{{
@@ -19,13 +20,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   _log/000000002
   *   d-5f3a…/         ← immutable parquet snapshot dirs, unique names
   *   d-81c0…/_b=3/    ← (bucketed tables: one leaf dir per bucket)
+  *   d-9e27…/bands/   ← (the near-dup index: two leaf dirs per label)
   * }}}
   *
   * A manifest is the version's data dirs (relative to `root`) plus small
-  * metadata, e.g. a bucketed table's bucket count or an SCD2 dimension's
-  * last applied day. A single dir with no metadata is stored as the bare
-  * dir name; anything else as one JSON object, so a marker caught
-  * half-written never parses as a smaller table.
+  * metadata, e.g. a bucketed table's bucket count, an SCD2 dimension's
+  * last applied day or the near-dup index's batch label → snapshot dir
+  * map. A single dir with no metadata is stored as the bare dir name;
+  * anything else as one JSON object, so a marker caught half-written
+  * never parses as a smaller table.
   *
   * Commit protocol (the Delta/Iceberg idea reduced to its kernel):
   * a writer materializes NEW uniquely-named snapshot dirs, then
@@ -38,11 +41,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the old one, so a writer that loses the marker race retries at
   *     n+1;
   *   - read-modify-write ([[base]] then [[commit]], used by [[upsert]],
-  *     the LWW and SCD2 applies and compaction): the new manifest was
-  *     computed from the version the writer read, so it commits only at
-  *     that base + 1. If another writer got there first the commit fails
-  *     loudly and publishes nothing — the single-writer contract, checked
-  *     instead of assumed, so a lost update cannot happen silently.
+  *     the LWW and SCD2 applies, compaction and the near-dup index's
+  *     build, register and compact): the new manifest was computed from
+  *     the version the writer read, so it commits only at that base + 1.
+  *     If another writer got there first the commit fails loudly and
+  *     publishes nothing — the single-writer contract, checked instead of
+  *     assumed, so a lost update cannot happen silently.
   *
   * Old snapshots stay readable until [[vacuum]] — retention is what
   * bounds storage, exactly like table formats' VACUUM. */
@@ -117,7 +121,7 @@ object VersionedTable {
 
   /** A fresh snapshot dir name; a writer materializes its data under
     * `root/<name>` before it commits a manifest naming it. */
-  private[io] def freshDir(): String =
+  private[graft] def freshDir(): String =
     s"d-${java.util.UUID.randomUUID().toString.take(12)}"
 
   /** Writes `df` as a new immutable snapshot and publishes it atomically
@@ -166,7 +170,7 @@ object VersionedTable {
     * version exists another writer committed after `base` was taken: the
     * commit throws, publishes nothing and deletes the snapshot dirs this
     * writer staged (those `base` does not list). */
-  private[io] def commit(spark: SparkSession, root: String, base: Base, manifest: Manifest): Long = {
+  private[graft] def commit(spark: SparkSession, root: String, base: Base, manifest: Manifest): Long = {
     val f = fs(spark, root)
     val n = base.head + 1
     f.mkdirs(new Path(root, LogDir))
@@ -184,7 +188,7 @@ object VersionedTable {
 
   /** Reads `dirs` of the table at `root` as one frame. The dirs are the
     * read's root paths, so no partition column is inferred above them. */
-  private[io] def load(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame =
+  private[graft] def load(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame =
     spark.read.parquet(dirs.map(d => new Path(root, d).toString): _*)
 
   /** Reads the current committed snapshot. Always sees a complete table:

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.io.VersionedTable
 import graft.util.Fixpoint
 
 /** Document deduplication family for training-data pipelines — exact,
@@ -467,13 +468,24 @@ object Dedup {
       .orderBy(col("j_bucket"))
   }
 
-  /** Builds a persisted near-dup INDEX under `dir`: `bands/` holds the
-    * per-document LSH band keys, `shingles/` the exploded shingle rows the
-    * exact verification needs. This is the production shape of dedup at
-    * corpus scale — the full corpus is signed ONCE, and each new batch is
+  /** Builds a persisted near-dup INDEX under `dir`: per-document LSH band
+    * keys (`bands`) and the exploded shingle rows the exact verification
+    * needs (`shingles`). This is the production shape of dedup at corpus
+    * scale — the full corpus is signed ONCE, and each new batch is
     * checked against the index ([[nearDupsAgainstIndex]]) instead of
     * re-mining all pairs daily. On a cluster, bucket both tables by their
-    * join keys (band_hash / sh) so the daily probe is a co-located join. */
+    * join keys (band_hash / sh) so the daily probe is a co-located join.
+    *
+    * The index is one [[graft.io.VersionedTable]] rooted at `dir`. Each
+    * batch label — `__base__` for this build, one per
+    * [[registerInNearDupIndex]] call — owns a snapshot dir holding its
+    * `bands/` and `shingles/` tables; a version's manifest lists every
+    * live label's two leaf dirs and maps each label to its snapshot dir.
+    * Every writer stages a fresh snapshot dir and then commits the next
+    * manifest at the version it read + 1, so a probe always reads a
+    * complete index and a crash before the marker leaves the prior
+    * version as it was. The build replaces `__base__` and keeps the
+    * registered labels. */
   def buildNearDupIndex(docs: DataFrame, dir: String, shingleSize: Int = 3,
       numHashes: Int = 32, bands: Int = 8): Unit =
     graft.util.PhaseTimer.time("index_build") {
@@ -486,6 +498,7 @@ object Dedup {
       s"numHashes ($numHashes) must divide evenly into bands ($bands), " +
         "or trailing signature hashes are silently ignored")
     val spark = docs.sparkSession
+    val base = VersionedTable.base(spark, dir)
     // uniqueById mirrors the probe side: the single-label plain-count
     // verify assumes index rows are unique per (doc_id, sh) — an
     // at-least-once source replaying a record into the build input would
@@ -493,61 +506,77 @@ object Dedup {
     // Enforce the uniqueness invariant at WRITE time, not just at probe.
     val ex = tracked(withShingles(uniqueById(docs), shingleSize)
       .select(col("doc_id"), size(col("shingles")).as("sz"), explode(col("shingles")).as("sh")))
-    // both tables are partitioned by a batch label ("__base__" for the
-    // initial build) so later registrations ([[registerInNearDupIndex]])
-    // land as their own partitions: a replayed batch OVERWRITES its own
-    // partition (idempotent) instead of appending duplicates, and a probe
-    // can partition-prune its own batch out (replay stability).
-    bandKeys(minhashSignatures(ex, numHashes), bands, numHashes / bands)
-      .withColumn("_batch", lit(BaseBatch))
-      .write.partitionBy("_batch").mode("overwrite").parquet(s"$dir/bands")
-    ex.withColumn("_batch", lit(BaseBatch))
-      .write.partitionBy("_batch").mode("overwrite").parquet(s"$dir/shingles")
+    val snap = VersionedTable.freshDir()
+    writeBatch(ex, dir, snap, numHashes, bands)
+    commitLabels(spark, dir, base, labels(base) + (BaseBatch -> snap))
     // the signing parameters ARE the index format: a probe with different
     // ones finds zero candidates with no error, so persist them and let
-    // the probe fail loudly on a mismatch. Written twice: a parquet table
-    // (queryable, engine-agnostic) and a tiny JSON side file the probe
-    // can re-read on EVERY call without a Spark job — so a concurrent
+    // the probe fail loudly on a mismatch. A tiny JSON side file the
+    // probe re-reads on EVERY call without a Spark job — so a concurrent
     // rebuild with different parameters is seen by long-lived probers
     // (e.g. the streaming audit sink).
-    import spark.implicits._
-    Seq((shingleSize, numHashes, bands))
-      .toDF("shingle_size", "num_hashes", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
     graft.io.ParamsFile.write(spark, dir,
       "shingle_size" -> shingleSize, "num_hashes" -> numHashes, "bands" -> bands)
   }
 
-  /** Partition label of the initial [[buildNearDupIndex]] contents. */
+  /** Label of the initial [[buildNearDupIndex]] contents. */
   val BaseBatch = "__base__"
+
+  private val IndexTables = Seq("bands", "shingles")
+
+  /** Writes one batch's two index tables under the snapshot dir `snap`. */
+  private def writeBatch(ex: DataFrame, dir: String, snap: String,
+      numHashes: Int, bands: Int): Unit = {
+    bandKeys(minhashSignatures(ex, numHashes), bands, numHashes / bands)
+      .write.parquet(s"$dir/$snap/bands")
+    ex.write.parquet(s"$dir/$snap/shingles")
+  }
+
+  /** Batch label → snapshot dir, as `base`'s committed manifest maps them. */
+  private def labels(base: VersionedTable.Base): Map[String, String] =
+    base.current.fold(Map.empty[String, String])(_.meta)
+
+  /** The `table` leaf dirs of `labels`' snapshots, relative to the index dir. */
+  private def leafDirs(labels: Map[String, String], table: String): Seq[String] =
+    labels.values.toSeq.sorted.map(d => s"$d/$table")
+
+  /** Publishes `labels` as the index version after `base` (failing loudly
+    * if another writer committed since), then keeps the newest two. */
+  private def commitLabels(spark: org.apache.spark.sql.SparkSession, dir: String,
+      base: VersionedTable.Base, labels: Map[String, String]): Unit = {
+    VersionedTable.commit(spark, dir, base,
+      VersionedTable.Manifest(IndexTables.flatMap(leafDirs(labels, _)), labels))
+    VersionedTable.vacuum(spark, dir, keep = 2)
+  }
 
   /** Registers a new batch of documents INTO a persisted near-dup index —
     * the write half of the daily incremental-dedup cycle (probe the batch
     * with [[nearDupsAgainstIndex]], then register it so TOMORROW's batch
     * dedups against today's). Signs the batch with the index's own
     * persisted parameters (validated — a silent mismatch would make the
-    * docs unfindable) and writes its band keys and shingles as the
-    * `_batch=batchId` partitions of the two index tables.
+    * docs unfindable), writes its band keys and shingles into a fresh
+    * snapshot dir, and commits a manifest that maps `batchId` to it.
     *
-    * Idempotent per batchId: the write is a dynamic-partition OVERWRITE,
-    * so a replayed batch (at-least-once sinks, retried jobs) replaces its
-    * own partition instead of appending duplicate rows. Shingles commit
-    * BEFORE band keys: a candidate can only form from a band key, so a
-    * crash between the writes leaves unfindable shingles (harmless,
-    * healed by the retry's overwrite), never a candidate that fails
-    * verification. Cost scales with the batch — the existing index is
+    * Idempotent per batchId: a replayed batch (at-least-once sinks,
+    * retried jobs) maps its label to the new dir, replacing its own
+    * earlier rows instead of adding duplicates. A register that commits
+    * after this one read the index makes this one fail loudly and
+    * publish nothing. Cost scales with the batch — the existing index is
     * never read or rewritten. */
   def registerInNearDupIndex(newDocs: DataFrame, dir: String, batchId: String,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8): Unit = {
     require(batchId.nonEmpty && batchId != BaseBatch &&
         batchId.forall(c => c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
       s"batchId must be a filesystem-safe label, not '$batchId'")
-    val stored = readParams(newDocs.sparkSession, dir)
+    val spark = newDocs.sparkSession
+    val stored = readParams(spark, dir)
     require(stored == ((shingleSize, numHashes, bands)),
       s"index at $dir was built with (shingleSize, numHashes, bands) = $stored " +
         s"but registration asked for ($shingleSize, $numHashes, $bands) — " +
         "the docs would be unfindable")
     graft.util.PhaseTimer.time("index_register") {
+      // taken before newDocs is read: the commit goes at this version + 1
+      val base = VersionedTable.base(spark, dir)
       // locally-scoped persist (NOT the tracked registry): the explode
       // feeds both writes, but long-lived callers (the streaming sink)
       // register every epoch and a registry entry per epoch would pile up
@@ -558,113 +587,54 @@ object Dedup {
       val ex = withShingles(uniqueById(newDocs), shingleSize)
         .select(col("doc_id"), size(col("shingles")).as("sz"), explode(col("shingles")).as("sh"))
         .persist()
-      try {
-        def overwriteBatch(df: DataFrame, table: String): Unit =
-          df.withColumn("_batch", lit(batchId))
-            .write.partitionBy("_batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(s"$dir/$table")
-        overwriteBatch(ex, "shingles")
-        overwriteBatch(bandKeys(minhashSignatures(ex, numHashes), bands, numHashes / bands), "bands")
-      } finally ex.unpersist()
+      val snap = VersionedTable.freshDir()
+      try writeBatch(ex, dir, snap, numHashes, bands) finally ex.unpersist()
+      commitLabels(spark, dir, base, labels(base) + (batchId -> snap))
     }
   }
 
   /** Rebases every registered batch of a persisted near-dup index into
-    * the `__base__` partition — the maintenance half of the daily
-    * incremental-dedup cycle. Registrations ([[registerInNearDupIndex]])
-    * and streaming epochs ([[graft.streaming.StreamingDedup]]) append one
-    * small `_batch` partition each, forever: compaction folds them so the
-    * partition inventory, file count, and listing cost stay bounded, and
-    * the probe's verify drops back to the cheap single-label plain-count
-    * aggregate.
+    * `__base__` — the maintenance half of the daily incremental-dedup
+    * cycle. Registrations ([[registerInNearDupIndex]]) and streaming
+    * epochs ([[graft.streaming.StreamingDedup]]) add one small snapshot
+    * each, forever: compaction folds them so the label count, file count
+    * and listing cost stay bounded, and the probe's verify drops back to
+    * the cheap single-label plain-count aggregate.
     *
     * Probe results are IDENTICAL before and after (asserted in
-    * MaintenanceSpec): rows are `distinct`-folded per table, so a doc that
-    * was registered under two labels collapses to one row set — exactly
-    * the state the single-label verify assumes. Crash-safe at every
-    * window: the fold lands in `__base__` via dynamic-partition overwrite
-    * BEFORE the source batch partitions are dropped; a crash inside that
-    * overwrite itself (the one state where the table alone is
-    * incomplete) is healed on re-run by unioning the surviving COMPLETE
-    * tmp generation back in; and any other mid-crash state (one table
-    * folded, the other not; `__base__` folded, batch partitions still
-    * present) is still multi-label wherever duplicates are possible, so
-    * the inventory-driven verify stays duplicate-immune. Re-running
-    * compaction always converges to the clean layout. Run it between probe/register
-    * cycles (a maintenance window, like any OPTIMIZE): folding a batch
-    * out from under a STILL-RETRYING epoch's `excludeBatch` would let a
-    * retried batch see its own prior registration's non-identity rows —
-    * when compacting from WITHIN a stream, pass that epoch's label in
-    * `keepBatches` (its partitions are left live, everything committed
-    * folds) — that is exactly what
-    * [[graft.streaming.StreamingDedup.selfMaintainingDedupSink]]'s
+    * MaintenanceSpec): the rows of `__base__` and every folded label are
+    * `distinct`-folded per table into one new `__base__` snapshot, so a
+    * doc that was registered under two labels collapses to one row set —
+    * exactly the state the single-label verify assumes. The fold is
+    * published by one manifest commit, so a crash at any point before
+    * the marker leaves the prior version readable, and a re-run compacts
+    * from it. Run it between probe/register cycles (a maintenance
+    * window, like any OPTIMIZE): folding a batch out from under a
+    * STILL-RETRYING epoch's `excludeBatch` would let a retried batch see
+    * its own prior registration's non-identity rows — when compacting
+    * from WITHIN a stream, pass that epoch's label in `keepBatches` (its
+    * snapshot stays listed unchanged, everything else folds) — that is
+    * exactly what [[graft.streaming.StreamingDedup.selfMaintainingDedupSink]]'s
     * epoch-start trigger does. Returns the number of batch labels folded. */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, keepBatches: Set[String] = Set.empty): Int = {
     readParams(spark, dir) // fail loudly on a dir that is not an index
     graft.util.PhaseTimer.time("index_compact") {
-      val folded = Seq(("bands", Seq("doc_id", "band_idx", "band_hash")),
-          ("shingles", Seq("doc_id", "sz", "sh"))).map { case (table, cols) =>
-        val labels = batchInventory(spark, dir, table)
-          .filter(b => b != BaseBatch && !keepBatches.contains(b))
-        val path = s"$dir/$table"
-        // can't overwrite what's being read: spill the fold to a tmp
-        // generation (scan → write → scan → write; compaction is a
-        // maintenance op, the 2× IO is the price of never holding the
-        // fold in memory — this must work on a 100 TB index)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Heal-on-rerun: the one window where the table alone is NOT
-        // the full row set is a crash inside the `__base__` dynamic
-        // overwrite (its partition dir is dropped before the staged
-        // files land). The fold that overwrite was drawing from
-        // survives as a COMPLETE tmp generation (_SUCCESS present), so
-        // a re-run unions any such tmp back in instead of re-deriving
-        // from the damaged table. Stale complete tmps are harmless —
-        // their rows were folded into `__base__` already and index
-        // rows are append-only, so union+distinct is a no-op for them.
-        // Two alternating tmp names keep the write target disjoint
-        // from any tmp being read.
-        val tmps = Seq(s"$dir/_compacting_$table", s"$dir/_compacting2_$table")
-        def complete(t: String) =
-          fs.exists(new org.apache.hadoop.fs.Path(t, "_SUCCESS"))
-        val target = if (complete(tmps.head)) tmps(1) else tmps.head
-        val priors = tmps.filter(t => t != target && complete(t))
-        // The fold must ALSO run when labels is empty but a complete tmp
-        // survives: a crash AFTER the partition deletes but BEFORE the
-        // tmp cleanup leaves exactly that state, and skipping it would
-        // strand the tmp forever — probes refuse while a complete tmp
-        // exists, so an early return here would be a permanent wedge no
-        // re-run could clear.
-        if (labels.isEmpty && priors.isEmpty) 0
-        else {
-          // Kept labels stay OUT of the fold (partition-pruned, not just
-          // undeleted): folding a kept batch's rows into `__base__` while
-          // its partition stays live would put them beyond the probe's
-          // `excludeBatch` filter — the exact self-exclusion the keep
-          // exists to preserve.
-          val whole = spark.read.parquet(path)
-          val cur = (if (keepBatches.isEmpty) whole
-            else whole.filter(!col("_batch").isin(keepBatches.toSeq: _*)))
-            .select(cols.map(col): _*)
-          priors.foldLeft(cur) { (acc, t) =>
-              acc.unionByName(spark.read.parquet(t).select(cols.map(col): _*))
-            }
-            .distinct()
-            .write.mode("overwrite").parquet(target)
-          spark.read.parquet(target)
-            .withColumn("_batch", lit(BaseBatch))
-            .write.partitionBy("_batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(path)
-          labels.foreach(b => // batchIds are fs-safe by construction
-            fs.delete(new org.apache.hadoop.fs.Path(path, s"_batch=$b"), true))
-          tmps.foreach(t => fs.delete(new org.apache.hadoop.fs.Path(t), true))
-          labels.size
+      val base = VersionedTable.base(spark, dir)
+      val (kept, fold) = labels(base).partition { case (l, _) =>
+        l != BaseBatch && keepBatches.contains(l) }
+      val folded = (fold - BaseBatch).size
+      if (folded > 0) {
+        // scan → write; the fold is never held in memory, so this works
+        // on an index of any size
+        val snap = VersionedTable.freshDir()
+        IndexTables.foreach { t =>
+          VersionedTable.load(spark, dir, leafDirs(fold, t)).distinct()
+            .write.parquet(s"$dir/$snap/$t")
         }
+        commitLabels(spark, dir, base, kept + (BaseBatch -> snap))
       }
-      folded.max
+      folded
     }
   }
 
@@ -676,62 +646,25 @@ object Dedup {
     (field("shingle_size").toInt, field("num_hashes").toInt, field("bands").toInt)
   }
 
-  /** Number of non-base batch labels currently registered in the index —
-    * the inventory size a maintenance trigger thresholds on
-    * ([[graft.streaming.StreamingDedup.selfMaintainingDedupSink]]). A
-    * filesystem listing, no Spark job. */
+  /** Number of non-base batch labels the index's current manifest lists —
+    * the count a maintenance trigger thresholds on
+    * ([[graft.streaming.StreamingDedup.selfMaintainingDedupSink]]). Reads
+    * the manifest, no Spark job. */
   private[graft] def registeredBatchCount(
       spark: org.apache.spark.sql.SparkSession, dir: String): Int =
-    batchInventory(spark, dir, "bands").count(_ != BaseBatch)
-
-  /** Complete (`_SUCCESS`-marked) `_compacting*` tmp generations under
-    * the index dir — evidence that a compaction crashed before its
-    * cleanup. Probes refuse to run in this state (the table may be
-    * missing rows); the self-maintaining streaming sink uses the same
-    * check to trigger a healing compaction at epoch start, since its
-    * count-based trigger alone can never re-fire after the crash
-    * deleted the batch partitions (the count is back under the
-    * threshold, but the guard would fail every epoch — a permanent
-    * wedge). A filesystem listing, no Spark job. */
-  private[graft] def pendingCompactionGenerations(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for {
-      table <- Seq("bands", "shingles")
-      tmp <- Seq(s"$dir/_compacting_$table", s"$dir/_compacting2_$table")
-      if fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-    } yield tmp
-  }
-
-  /** Batch labels currently present in the index `table`'s `_batch=`
-    * partitioning — a filesystem listing, no Spark job. */
-  private def batchInventory(spark: org.apache.spark.sql.SparkSession,
-      dir: String, table: String): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_batch="))
-      // Spark escapes partition values with escapePathName (percent-hex
-      // of reserved chars), NOT URL encoding: URLDecoder would map '+'
-      // to space and throw on a stray '%'. Harmless for today's
-      // fs-safe-restricted batchIds, but the inventory→compare→delete
-      // chain must survive any future relaxation of that restriction.
-      .map(s => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(s.getPath.getName.stripPrefix("_batch=")))
-  }
+    (labels(VersionedTable.base(spark, dir)) - BaseBatch).size
 
   /** Near-dup pairs between `newDocs` and the corpus indexed at `dir`
     * (same parameters as at [[buildNearDupIndex]] time): band keys of the
     * new batch equi-join the index's band table for candidates, then exact
-    * Jaccard verifies against the index's shingle table. Output:
-    * (doc_a = indexed id, doc_b = new id, jaccard), ascending. Cost scales
-    * with the BATCH, not the corpus: the corpus-side tables are only
-    * probed at their join keys, never re-signed. `sorted = false` skips
-    * the trailing global orderBy (a range shuffle + full sort) for sinks
-    * where row order carries no meaning — e.g. a per-epoch streaming
-    * parquet append. */
+    * Jaccard verifies against the index's shingle table. Both tables are
+    * read from the dirs of ONE committed manifest, minus `excludeBatch`'s.
+    * Output: (doc_a = indexed id, doc_b = new id, jaccard), ascending.
+    * Cost scales with the BATCH, not the corpus: the corpus-side tables
+    * are only probed at their join keys, never re-signed. `sorted = false`
+    * skips the trailing global orderBy (a range shuffle + full sort) for
+    * sinks where row order carries no meaning — e.g. a per-epoch
+    * streaming parquet append. */
   def nearDupsAgainstIndex(newDocs: DataFrame, dir: String, shingleSize: Int = 3,
       threshold: Double = 0.8, numHashes: Int = 32, bands: Int = 8,
       cacheIntermediates: Boolean = true, sorted: Boolean = true,
@@ -746,22 +679,11 @@ object Dedup {
       s"index at $dir was built with (shingleSize, numHashes, bands) = $stored " +
         s"but the probe asked for ($shingleSize, $numHashes, $bands) — " +
         "results would be silently empty")
-    // A COMPLETE `_compacting*` generation under the index dir means a
-    // compaction run never reached its cleanup: either the `__base__`
-    // overwrite itself crashed (the table is silently MISSING ROWS — the
-    // one damaged state, which under-reports near-dups with no error) or
-    // the crash fell between the overwrite and the tmp delete (table
-    // fine). Indistinguishable from here, so refuse to probe and point
-    // at the heal — one compactNearDupIndex call converges either state
-    // to the clean layout.
-    locally {
-      val pending = pendingCompactionGenerations(spark, dir)
-      if (pending.nonEmpty) throw new IllegalStateException(
-        s"index at $dir has a pending compaction generation " +
-          s"(${pending.mkString(", ")}) — a prior compactNearDupIndex run " +
-          "crashed before cleanup and the index table may be missing rows; " +
-          "run Dedup.compactNearDupIndex to heal before probing")
-    }
+    // excludeBatch: replay stability for probe-then-register cycles — a
+    // retried batch must not see its OWN registration from the failed
+    // attempt. Its dirs are left out of the read, so they aren't even listed.
+    val live = labels(VersionedTable.base(spark, dir)) -- excludeBatch
+    def indexTable(t: String): DataFrame = VersionedTable.load(spark, dir, leafDirs(live, t))
     // cacheIntermediates=false for callers that probe repeatedly in one
     // JVM (a streaming micro-batch sink): the batch-side explode is cheap
     // to recompute and per-epoch persists would accumulate in the
@@ -775,12 +697,7 @@ object Dedup {
       .select(col("doc_id"), size(col("shingles")).as("sz"), explode(col("shingles")).as("sh"))
     val exNew = if (cacheIntermediates) tracked(exNewRaw) else exNewRaw
     val newKeys = bandKeys(minhashSignatures(exNew, numHashes), bands, numHashes / bands)
-    // excludeBatch: replay stability for probe-then-register cycles — a
-    // retried batch must not see its OWN registration from the failed
-    // attempt. A partition filter, so the excluded batch isn't even read.
-    def minusBatch(df: DataFrame): DataFrame =
-      excludeBatch.fold(df)(b => df.filter(col("_batch") =!= b))
-    val idxKeys = minusBatch(spark.read.parquet(s"$dir/bands"))
+    val idxKeys = indexTable("bands")
     val cand = newKeys.as("n")
       .join(idxKeys.as("o"),
         col("n.band_idx") === col("o.band_idx") &&
@@ -790,23 +707,21 @@ object Dedup {
           col("n.doc_id") =!= col("o.doc_id"))
       .select(col("o.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"))
       .distinct()
-    val idxShingles = minusBatch(spark.read.parquet(s"$dir/shingles"))
+    val idxShingles = indexTable("shingles")
       .select(col("doc_id").as("doc_a"), col("sz").as("sza"), col("sh"))
     // Verify aggregate: per-doc shingles are unique by construction and a
-    // batch partition is replaced wholesale on replay, so duplicate index
+    // label's snapshot is replaced wholesale on replay, so duplicate index
     // rows for one doc require that doc registered under TWO batch labels
     // (fresh checkpoint re-run over old drops). When the surviving
-    // inventory is a single label — fresh single-build indexes, or a
+    // labels are a single one — fresh single-build indexes, or a
     // first-epoch probe after excludeBatch — a plain count is exact and
     // skips Spark's expand-based two-phase distinct over the
     // candidate×shingle join output (measured 3.3× on the contamination
     // audit, which probes 20% of the corpus against an 80% index).
     // Multi-label indexes (daily registrations, streaming epochs) keep
     // the duplicate-immune countDistinct.
-    val survivingLabels =
-      batchInventory(spark, dir, "shingles").filterNot(excludeBatch.contains)
     val interAgg =
-      if (survivingLabels.lengthCompare(1) > 0) countDistinct(col("sh"))
+      if (live.size > 1) countDistinct(col("sh"))
       else count(col("sh"))
     val verified = cand
       .join(idxShingles, "doc_a")

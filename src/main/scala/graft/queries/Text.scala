@@ -1554,8 +1554,9 @@ object Text {
   /** Incremental-dedup LIFECYCLE — the register half (t15 proves the
     * probe half): a day-0 corpus is indexed once, the day-1 drop is
     * registered into the index ([[graft.operators.Dedup.registerInNearDupIndex]]
-    * — batch-partition append, existing index never rewritten), and the
-    * day-2 drop probes the extended index. Half of the expected hits
+    * — one new labelled snapshot committed beside the base, existing
+    * index never rewritten), and the day-2 drop probes the extended
+    * index. Half of the expected hits
     * (8 of 16 at sf0.01) pair day-2 docs with DAY-1 docs — rows that
     * exist only because registration extended the index past the base
     * build. Oracle: brute-force cross-set Jaccard of day-2 against

@@ -39,21 +39,22 @@ object ServeApi {
       logDir: Option[String] = None)
 
   /** Starts the server on `port` (0 = ephemeral) and returns it; callers
-    * stop it with `server.stop(0)`. `silver` should be cached by the
-    * caller: each read route's [[ServeIndex]] is built from it on that
-    * route's first request, which waits for the build. */
+    * stop it with `server.stop(0)`. Both read routes' [[ServeIndex]]es
+    * are built from `silver` before this returns, so no request waits on
+    * a build; `silver` should be cached by the caller. */
   def start(silver: DataFrame, model: Option[PipelineModel],
       config: Config, port: Int = 0): HttpServer =
-    start(silver, model, config, port, ServeIndex.DefaultBound, prebuild = false)
+    start(silver, model, config, port, ServeIndex.DefaultBound)
 
   /** [[start]] with the routes' [[ServeIndex]] bound (0 answers every
-    * request through the per-key Spark queries); `prebuild` builds both
-    * indexes before the server accepts a request. */
+    * request through the per-key Spark queries). */
   private[graft] def start(silver: DataFrame, model: Option[PipelineModel],
-      config: Config, port: Int, indexBound: Int, prebuild: Boolean): HttpServer = {
+      config: Config, port: Int, indexBound: Int): HttpServer = {
+    // the two builds are independent batch jobs: run them side by side
+    val countryBuild = java.util.concurrent.CompletableFuture.supplyAsync(
+      () => ServeIndex.country(silver, config.asOfDate, indexBound))
     val tracking = ServeIndex.tracking(silver, model, indexBound)
-    val country = ServeIndex.country(silver, config.asOfDate, indexBound)
-    if (prebuild) { tracking.prepare(); country.prepare() }
+    val country = countryBuild.join()
     val trackingStats, countryStats = new RouteStats
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/predict/tracking/",
@@ -329,11 +330,8 @@ object ServeMain {
       .silverFlat(spark, dir, "2024-01-01",
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
       .persist()
-    // the indexes are built before the server accepts traffic, so no
-    // client waits on a build
     val server = ServeApi.start(silver, model,
-      ServeApi.Config(asOfDate = java.time.LocalDate.now().toString), port,
-      ServeIndex.DefaultBound, prebuild = true)
+      ServeApi.Config(asOfDate = java.time.LocalDate.now().toString), port)
     println(s"[serve] listening on ${server.getAddress}")
     Thread.currentThread().join()
   }

@@ -13,47 +13,37 @@ import graft.ml.DeliveryModel
   * `bound` keys or the build fails.
   *
   * The served frame and model do not change while a server runs, so
-  * the map is built once, by running the route's [[ServeQueries]]
-  * all-keys form as a batch. An answer is therefore the one the per-key
-  * query gives: the same expressions, over the same rows. A request
-  * that finds its key in the map runs no Spark job; a miss runs none
-  * either.
+  * the map is built once, when the index is constructed, by running the
+  * route's [[ServeQueries]] all-keys form as a batch. An answer is
+  * therefore the one the per-key query gives: the same expressions, over
+  * the same rows. A request that finds its key in the map runs no Spark
+  * job; a miss runs none either.
   *
   * `build` collects at most `bound + 1` rows; more than `bound` means the
   * keys would not fit in memory, and `query` answers instead. A build
   * that throws (a driver out of memory, a result over
   * `spark.driver.maxResultSize`) is not retried: `query` answers every
-  * later request and [[state]] reports the error. `mapKey` turns a
-  * request key into the map's key.
+  * request and [[state]] reports the error. `mapKey` turns a request key
+  * into the map's key.
   */
 final class ServeIndex[A] private[graft] (bound: Int, build: Int => Seq[(String, A)],
     query: String => Option[A], mapKey: String => String) {
 
-  @volatile private var built = false
-  @volatile private var failure: Option[Throwable] = None
+  /** The map (None past the bound), or the error the build threw. */
+  private val built: Either[Throwable, Option[Map[String, A]]] =
+    try Right(Some(build(bound + 1)).filter(_.size <= bound).map(_.toMap))
+    catch { case e @ (NonFatal(_) | _: OutOfMemoryError) => Left(e) }
 
-  private lazy val index: Option[Map[String, A]] = {
-    val entries =
-      try Some(build(bound + 1))
-      catch { case e @ (NonFatal(_) | _: OutOfMemoryError) => failure = Some(e); None }
-    built = true
-    entries.filter(_.size <= bound).map(_.toMap)
+  def lookup(key: String): Option[A] =
+    built.toOption.flatten.fold(query(key))(_.get(mapKey(key)))
+
+  /** `{"indexed":<entries>}` when built, `"spark"` when the keys exceed
+    * the bound, `{"failed":<error>}` when the build threw. */
+  def state: Any = built match {
+    case Right(Some(m)) => ServeApi.Obj(Seq("indexed" -> m.size))
+    case Right(None) => "spark"
+    case Left(e) => ServeApi.Obj(Seq("failed" -> e.toString))
   }
-
-  /** Builds the map now rather than on the first lookup. */
-  def prepare(): Unit = index
-
-  def lookup(key: String): Option[A] = index.fold(query(key))(_.get(mapKey(key)))
-
-  /** `"pending"` before the build, `{"indexed":<entries>}` once built,
-    * `"spark"` when the keys exceed the bound, `{"failed":<error>}` when
-    * the build threw. */
-  def state: Any =
-    if (!built) "pending"
-    else index match {
-      case Some(m) => ServeApi.Obj(Seq("indexed" -> m.size))
-      case None => failure.fold[Any]("spark")(e => ServeApi.Obj(Seq("failed" -> e.toString)))
-    }
 }
 
 object ServeIndex {

@@ -48,30 +48,32 @@ object StreamingDedup {
     *
     * Replay stability: registrations are keyed `run-epoch` (the run id
     * is checkpoint-scoped, like [[StreamingManifest]]'s), so a replayed
-    * epoch overwrites its own index partition instead of duplicating it,
-    * and the probe excludes exactly that partition — a retry that
+    * epoch maps its own label to a fresh snapshot instead of adding a
+    * second one, and the probe excludes exactly that label — a retry that
     * crashed after registering re-emits the same hits. In-batch
     * near-dup pairs are intentionally NOT emitted (same contract as
     * [[nearDupAuditSink]]: hits pair the batch against PRIOR documents);
     * run whole-corpus [[Dedup.minhashNearDups]] for intra-batch pairs.
     * `checkpointDir` is set on the writer here because the run id lives
-    * inside it.
+    * inside it. The sink is the index's one writer while it runs: a
+    * second writer's commit would make the sink's next commit fail.
     *
-    * Maintenance: each epoch adds one small `_batch` partition to the
-    * index, forever — so the sink bounds its OWN inventory. When
+    * Maintenance: each epoch adds one small labelled snapshot to the
+    * index, forever — so the sink bounds its OWN label count. When
     * `compactEvery > 0` and an epoch starts with at least that many
-    * registered batch partitions, the sink first runs
-    * [[Dedup.compactNearDupIndex]] (probe results provably unchanged —
-    * MaintenanceSpec), keeping partition inventory, file count, and
-    * listing cost bounded for an unbounded stream. The epoch START is
-    * the one point where the fold is always safe: Structured Streaming
-    * commits epoch N before constructing N+1, so every label in the
-    * inventory except the CURRENT epoch's belongs to a committed epoch
-    * (or a prior run). The current label — present only when this epoch
-    * is a replay whose register already ran — is passed as a
-    * `keepBatches` so the replay's `excludeBatch` self-exclusion keeps
-    * working. Manual [[Dedup.compactNearDupIndex]] runs between clean
-    * stops remain valid (`compactEvery = 0` disables the trigger). */
+    * registered labels, the sink first runs [[Dedup.compactNearDupIndex]]
+    * (probe results provably unchanged — MaintenanceSpec), keeping the
+    * label count, file count and listing cost bounded for an unbounded
+    * stream. The epoch START is the one point where the fold is always
+    * safe: Structured Streaming commits epoch N before constructing N+1,
+    * so every label in the manifest except the CURRENT epoch's belongs to
+    * a committed epoch (or a prior run). The current label — present only
+    * when this epoch is a replay whose register already ran — is passed
+    * as a `keepBatches` so the replay's `excludeBatch` self-exclusion
+    * keeps working. A compaction that crashed left the prior version
+    * readable, so the next trigger simply compacts again. Manual
+    * [[Dedup.compactNearDupIndex]] runs between clean stops remain valid
+    * (`compactEvery = 0` disables the trigger). */
   def selfMaintainingDedupSink(docs: DataFrame, indexDir: String,
       outDir: String, checkpointDir: String,
       threshold: Double = 0.8, compactEvery: Int = 0): DataStreamWriter[Row] =
@@ -81,15 +83,7 @@ object StreamingDedup {
         val spark = batch.sparkSession
         val run = StreamingManifest.runKey(spark, checkpointDir)
         val batchLabel = s"$run-$epochId"
-        // Pending-generation check: a compaction that crashed between
-        // its partition deletes and tmp cleanup leaves the batch count
-        // UNDER the threshold (the partitions are gone) while the probe
-        // guard refuses every epoch — the count-based trigger alone
-        // would wedge the stream permanently. A complete tmp generation
-        // therefore also triggers the (healing) compaction.
-        if (compactEvery > 0 &&
-            (Dedup.registeredBatchCount(spark, indexDir) >= compactEvery ||
-              Dedup.pendingCompactionGenerations(spark, indexDir).nonEmpty))
+        if (compactEvery > 0 && Dedup.registeredBatchCount(spark, indexDir) >= compactEvery)
           Dedup.compactNearDupIndex(spark, indexDir,
             keepBatches = Set(batchLabel))
         val b = batch.persist() // probed then signed again for registration

@@ -67,11 +67,11 @@ object StreamingManifest {
     *
     * When `compactEveryFiles > 0`, the sink bounds its own index: any
     * epoch that finds at least that many data files under `hashIndexDir`
-    * runs [[compactHashIndex]] before appending. Unlike the near-dup
-    * index's fold, this compaction is crash-safe at ANY boundary
-    * (append-then-delete; the probe's `distinct()` absorbs duplicate
-    * rows and the `(text_hash, _epoch, _run)` key is never collapsed),
-    * so no epoch needs to be excluded from it — dedup decisions are
+    * runs [[compactHashIndex]] before appending. This compaction is
+    * crash-safe at ANY boundary (append-then-delete; the probe's
+    * `distinct()` absorbs duplicate rows), and unlike the near-dup
+    * index's fold it never collapses the `(text_hash, _epoch, _run)`
+    * key, so no epoch needs to be excluded from it — dedup decisions are
     * provably unchanged mid-stream. `0` disables the trigger for manual
     * between-stop maintenance. */
   def manifestSink(docs: DataFrame, hashIndexDir: String, outDir: String,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only probe (not part of the engine surface): runs each named
@@ -30,23 +29,18 @@ object PlanDump {
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",").map(_.trim).filter(_.nonEmpty)
     require(names.nonEmpty, "SPARK_GRAFT_ONLY must name at least one declared query")
     val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    })
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         throw new IllegalArgumentException(s"unknown query $n"))
-      val j0 = jobs.get()
-      val t0 = System.nanoTime()
-      val df = fn(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are async — let the bus drain before reading
-      Thread.sleep(500)
-      println(f"[plandump] $n jobs=${jobs.get() - j0} time=$sec%.2f s")
+      val ((df, sec), jobs) = graft.util.Jobs.count(spark) {
+        val t0 = System.nanoTime()
+        val df = fn(spark, dir)
+        df.write.format("noop").mode("overwrite").save()
+        (df, (System.nanoTime() - t0) / 1e9)
+      }
+      println(f"[plandump] $n jobs=$jobs time=$sec%.2f s")
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       java.nio.file.Files.write(outDir.resolve(s"${n}_$suffix.txt"),
         plan.getBytes("UTF-8"))

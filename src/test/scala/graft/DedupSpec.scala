@@ -188,8 +188,8 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("probing or compacting a dir without params.json fails loudly, naming the dir") {
-    // the parquet params table alone is not enough: params.json is the
-    // index's declaration, and a dir without one is not an index
+    // params.json is the index's declaration: a dir without one is not
+    // an index, even with a committed manifest and data
     val root = tempDir("graft_noparams_")
     val dir = root.toString
     try {
@@ -249,6 +249,58 @@ class DedupSpec extends SparkTestBase {
       Dedup.registerInNearDupIndex(day1, dir, batchId = "a/b"))
     intercept[IllegalArgumentException](
       Dedup.registerInNearDupIndex(day1, dir, batchId = "ok", numHashes = 64, bands = 16))
+  }
+
+  test("a register crashed before its marker leaves probes unchanged; its replay converges") {
+    val day1Text = "completely novel sentences appear in the day one drop " * 5
+    val day1 = Seq((20L, day1Text, "d1")).toDF("doc_id", "text", "source")
+    val day2 = Seq((30L, day1Text, "d2")).toDF("doc_id", "text", "source")
+    def probe(dir: String) = Dedup.nearDupsAgainstIndex(day2, dir, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    val clean = tempDir("graft_reg_clean_").toString
+    Dedup.buildNearDupIndex(docs, clean)
+    Dedup.registerInNearDupIndex(day1, clean, batchId = "day1")
+    assert(probe(clean) === Set((20L, 30L, 1.0)), "fixture sanity")
+    val dir = tempDir("graft_reg_crash_").toString
+    Dedup.buildNearDupIndex(docs, dir)
+    val before = probe(dir)
+    // the crash state: day1's snapshot was written, its marker never was
+    // (a clean register with its marker removed again)
+    Dedup.registerInNearDupIndex(day1, dir, batchId = "day1")
+    assert(new java.io.File(s"$dir/_log/000000002").delete())
+    assert(probe(dir) === before, "an uncommitted register is invisible to probes")
+    assert(Dedup.registeredBatchCount(spark, dir) === 0)
+    Dedup.registerInNearDupIndex(day1, dir, batchId = "day1")
+    assert(probe(dir) === probe(clean), "the replay converges to the clean run")
+    assert(graft.io.VersionedTable.base(spark, dir).current.get.meta.keySet ===
+      Set(Dedup.BaseBatch, "day1"))
+  }
+
+  test("two registers on one base: the second fails loudly, the first's rows survive") {
+    val dir = tempDir("graft_reg_race_").toString
+    Dedup.buildNearDupIndex(docs, dir)
+    val day1Text = "completely novel sentences appear in the day one drop " * 5
+    val day2Text = "another unseen drop of words arrives on the second day " * 5
+    // register B takes base v1 and is held before it reads its batch;
+    // register A commits v2 in that window, so B's commit at v2 must fail
+    val b = PausedWriter.race(Seq((40L, day2Text, "d2")).toDF("doc_id", "text", "source")) { u =>
+      Dedup.registerInNearDupIndex(u, dir, batchId = "day2")
+    } {
+      Dedup.registerInNearDupIndex(
+        Seq((20L, day1Text, "d1")).toDF("doc_id", "text", "source"), dir, batchId = "day1")
+    }
+    assert(b.isFailure && b.failed.get.isInstanceOf[IllegalStateException], b.toString)
+    assert(b.failed.get.getMessage.contains("concurrent commit"), b.failed.get.getMessage)
+    val m = graft.io.VersionedTable.base(spark, dir).current.get
+    assert(m.meta.keySet === Set(Dedup.BaseBatch, "day1"), m.toString)
+    assert(graft.io.VersionedTable.currentVersion(spark, dir) === Some(2L), "B committed nothing")
+    // B's staged snapshot was deleted with its failed commit
+    assert(new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("d-")).toSet ===
+      m.meta.values.toSet)
+    val hits = Dedup.nearDupsAgainstIndex(
+        Seq((30L, day1Text, "d3")).toDF("doc_id", "text", "source"), dir, threshold = 0.5)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(hits === Set((20L, 30L)), s"A's registration is findable: $hits")
   }
 
   test("index verify uses plain count on single-label indexes, distinct past one label") {
@@ -344,8 +396,9 @@ class DedupSpec extends SparkTestBase {
     Dedup.registerInNearDupIndex(
       Seq((20L, base, "d2"), (20L, base, "d2")).toDF("doc_id", "text", "source"),
       dir, "day1")
-    val shingleRows = spark.read.parquet(s"$dir/shingles")
-      .filter(col("_batch") === "day1").groupBy("doc_id", "sh").count()
+    val day1Dir = graft.io.VersionedTable.base(spark, dir).current.get.meta("day1")
+    val shingleRows = spark.read.parquet(s"$dir/$day1Dir/shingles")
+      .groupBy("doc_id", "sh").count()
       .filter(col("count") > 1).count()
     assert(shingleRows === 0L, "replayed registration must write unique rows per label")
   }

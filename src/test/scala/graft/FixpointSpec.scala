@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.{Fixpoint, PhaseTimer}
+import graft.util.{Fixpoint, Jobs, PhaseTimer}
 
 /** The loop combinator's contract: round bound, stop rule, round count,
   * and the one-action-per-round cost of a lazily cut step. */
@@ -46,17 +46,17 @@ class FixpointSpec extends SparkTestBase {
 
   test("a lazily cut step costs its one action; an eager cut adds one job per round") {
     val fixed = spark.range(0, 2000, 1, 4).toDF("x").localCheckpoint()
-    val oneCount = jobsOf(fixed.count())
+    val (_, oneCount) = Jobs.count(spark)(fixed.count())
     assert(oneCount >= 1)
     // narrow, exchange-free step; the round's one action is the count
-    def loop(eager: Boolean): Int = jobsOf {
+    def loop(eager: Boolean): Int = Jobs.count(spark) {
       val r = Fixpoint.iterate("fixpoint_spec_rounds", fixed, 5) { (df: DataFrame, _) =>
         val next = df.select((col("x") + 1).as("x")).localCheckpoint(eager)
         next.count()
         Fixpoint.Next(next)
       }
       assert(r.rounds === 5)
-    }
+    }._2
     assert(loop(eager = false) === 5 * oneCount)
     assert(loop(eager = true) === 5 * oneCount + 5)
   }

@@ -106,15 +106,14 @@ class MaintenanceSpec extends SparkTestBase {
       "probe results (including jaccard against the double-registered doc) " +
         "must be identical after compaction")
     // the fold restores the single-label layout: cheap plain-count verify,
-    // only __base__ on disk
+    // only __base__ in the manifest
     assert(!afterDf.queryExecution.optimizedPlan.toString.toLowerCase
         .contains("count(distinct"),
       "compacted index must plan the plain-count verify")
-    for (t <- Seq("bands", "shingles")) {
-      val parts = new java.io.File(s"$dir/$t").listFiles()
-        .filter(_.getName.startsWith("_batch=")).map(_.getName).toSet
-      assert(parts === Set("_batch=__base__"), s"$t: $parts")
-    }
+    val m = VersionedTable.base(spark, dir).current.get
+    assert(m.meta.keySet === Set(Dedup.BaseBatch), m.toString)
+    assert(m.dirs.toSet === Set("bands", "shingles").map(t => s"${m.meta(Dedup.BaseBatch)}/$t"),
+      m.toString)
     // idempotent: a second run is a no-op
     assert(Dedup.compactNearDupIndex(spark, dir) === 0)
     assert(probe().as[(Long, Long, Double)].collect().toSet === before)
@@ -126,76 +125,36 @@ class MaintenanceSpec extends SparkTestBase {
     assert(laterHits.contains(20L), s"post-compaction registration findable: $laterHits")
   }
 
-  test("compactNearDupIndex heals a crash inside the __base__ overwrite") {
+  test("a near-dup compaction with no marker leaves the old version; a re-run folds") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     val corpus = Seq(
       (0L, base, "s1"),
       (2L, "one two three four five six seven eight nine ten", "s2"))
       .toDF("doc_id", "text", "source")
-    def mkIndex() = {
-      val dir = tempDir("graft_nd_heal_").toString
-      Dedup.buildNearDupIndex(corpus, dir)
-      Dedup.registerInNearDupIndex(
-        Seq((10L, base, "d1")).toDF("doc_id", "text", "source"), dir, "day1")
-      dir
-    }
-    val ref = mkIndex()
-    val damaged = mkIndex()
-    val day2 = Seq((20L, base, "d2")).toDF("doc_id", "text", "source")
-    Dedup.compactNearDupIndex(spark, ref)
-    val expected = Dedup.nearDupsAgainstIndex(day2, ref, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(expected.map(_._1) === Set(0L, 10L), s"fixture sanity: $expected")
-    // simulate the crash: the fold completed to the tmp generation, then
-    // the __base__ dynamic overwrite died after dropping the partition
-    // dir — doc 0 now exists ONLY in the surviving tmp
-    spark.read.parquet(s"$damaged/shingles").select("doc_id", "sz", "sh").distinct()
-      .write.parquet(s"$damaged/_compacting_shingles")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(new java.io.File(s"$damaged/shingles/_batch=__base__"))
-    // a probe against the half-overwritten table must refuse, not
-    // silently under-report (the damaged window has no other signal)
-    val refused = intercept[IllegalStateException] {
-      Dedup.nearDupsAgainstIndex(day2, damaged, threshold = 0.5).collect()
-    }
-    assert(refused.getMessage.contains("pending compaction"),
-      s"probe must name the pending generation: ${refused.getMessage}")
-    Dedup.compactNearDupIndex(spark, damaged)
-    val healed = Dedup.nearDupsAgainstIndex(day2, damaged, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(healed === expected,
-      "re-run must union the surviving tmp fold back in, not re-derive from the damaged table")
-  }
-
-  test("compactNearDupIndex clears a complete tmp even with no batch partitions left") {
-    // the OTHER crash window: fold done, __base__ overwritten, batch
-    // partitions deleted — only the tmp cleanup never ran. The batch
-    // inventory is empty, so a labels-only short-circuit would skip the
-    // fold, strand the tmp, and leave probes refusing forever (no re-run
-    // could converge the state).
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    val corpus = Seq((0L, base, "s1")).toDF("doc_id", "text", "source")
-    val dir = tempDir("graft_nd_tmp_").toString
+    val dir = tempDir("graft_nd_crash_").toString
     Dedup.buildNearDupIndex(corpus, dir)
+    Dedup.registerInNearDupIndex(
+      Seq((10L, base, "d1")).toDF("doc_id", "text", "source"), dir, "day1")
     val day2 = Seq((20L, base, "d2")).toDF("doc_id", "text", "source")
-    val expected = Dedup.nearDupsAgainstIndex(day2, dir, threshold = 0.5)
+    def probe() = Dedup.nearDupsAgainstIndex(day2, dir, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    assert(expected.map(_._1) === Set(0L), s"fixture sanity: $expected")
-    // recreate the post-delete state: a complete tmp whose rows are
-    // already folded into __base__ (stale-but-complete)
-    spark.read.parquet(s"$dir/shingles").select("doc_id", "sz", "sh").distinct()
-      .write.parquet(s"$dir/_compacting_shingles")
-    intercept[IllegalStateException] {
-      Dedup.nearDupsAgainstIndex(day2, dir, threshold = 0.5).collect()
-    }
-    Dedup.compactNearDupIndex(spark, dir)
-    assert(Dedup.pendingCompactionGenerations(spark, dir).isEmpty,
-      "the heal run must clear the stranded tmp generation")
-    val healed = Dedup.nearDupsAgainstIndex(day2, dir, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(healed === expected, "probe results unchanged after the heal")
+    val expected = probe()
+    assert(expected.map(_._1) === Set(0L, 10L), s"fixture sanity: $expected")
+    val prior = VersionedTable.base(spark, dir).current.get
+    // the crash state: the fold's snapshot was written, its marker never
+    // was (a clean compaction with its marker removed again)
+    assert(Dedup.compactNearDupIndex(spark, dir) === 1)
+    val v = VersionedTable.currentVersion(spark, dir).get
+    val marker = new java.io.File(s"$dir/_log", f"$v%09d")
+    assert(marker.delete())
+    assert(VersionedTable.base(spark, dir).current.get === prior,
+      "readers resolve the prior version")
+    assert(Dedup.registeredBatchCount(spark, dir) === 1)
+    assert(probe() === expected, "the prior version answers as before")
+    assert(Dedup.compactNearDupIndex(spark, dir) === 1, "the re-run folds day1 again")
+    assert(VersionedTable.currentVersion(spark, dir) === Some(v))
+    assert(VersionedTable.base(spark, dir).current.get.meta.keySet === Set(Dedup.BaseBatch))
+    assert(probe() === expected, "probe results unchanged after the re-run")
   }
 
   test("compactHashIndex folds epoch appends; dedup decisions identical") {

@@ -9,6 +9,7 @@ import graft.gen.BronzeGenerator
 import graft.io.LayerIO
 import graft.model.Schemas
 import graft.silver.SilverTransform
+import graft.util.Jobs
 
 /** `Pipeline.run` counts each stage's rows in the write that produces
   * them: the counts equal what a reader finds, an empty bronze still
@@ -87,7 +88,7 @@ class PipelineCountsSpec extends SparkTestBase {
 
   test("a quarantine load runs 17 Spark jobs: no job reads a count back") {
     val root = tempDir("graft_counts_jobs_").toString
-    val jobs = jobsOf(Pipeline.run(spark, root, Date, nShipments = 200L, quarantine = true))
+    val (_, jobs) = Jobs.count(spark)(Pipeline.run(spark, root, Date, nShipments = 200L, quarantine = true))
     assert(jobs === 17)
   }
 

@@ -199,7 +199,7 @@ class ServeApiSpec extends SparkTestBase {
     import spark.implicits._
     val cfg = ServeApi.Config(asOfDate = "2024-06-01")
     val indexed = ServeApi.start(silver, Some(fitted), cfg)
-    val direct = ServeApi.start(silver, Some(fitted), cfg, 0, indexBound = 0, prebuild = false)
+    val direct = ServeApi.start(silver, Some(fitted), cfg, 0, indexBound = 0)
     try {
       val ids = silver.select("tracking_number").distinct().as[String].collect().sorted.toSeq
       val countries = silver.select("destination_country").distinct().as[String].collect().sorted.toSeq
@@ -235,7 +235,7 @@ class ServeApiSpec extends SparkTestBase {
     for (model <- Seq(None, Some(fitted))) {
       val cfg = ServeApi.Config(asOfDate = "2024-06-01")
       val indexed = ServeApi.start(frame, model, cfg)
-      val direct = ServeApi.start(frame, model, cfg, 0, indexBound = 0, prebuild = false)
+      val direct = ServeApi.start(frame, model, cfg, 0, indexBound = 0)
       try {
         val paths = Seq("TN_L", "TN_N", "TN_X").map(id => s"/predict/tracking/?tracking_id=$id") ++
           Seq("CHINA", "japan", "NOWHERE").map(c => s"/predict/country/?country=$c")
@@ -250,13 +250,13 @@ class ServeApiSpec extends SparkTestBase {
   test("/metrics counts each read route's answers by status with a latency histogram") {
     val server = ServeApi.start(silver, model = None, ServeApi.Config(asOfDate = "2024-06-01"))
     try {
-      val (h0, before) = get(server, "/health")
-      assert(h0 === 200 && before.contains(""""status":"ok"""") &&
-        before.contains(""""tracking":"pending"""") && before.contains(""""country":"pending""""), before)
+      // start builds both indexes before it returns: the first request
+      // on either route waits on no build
+      val (h0, health) = get(server, "/health")
+      assert(h0 === 200 && health.contains(""""status":"ok"""") &&
+        health.contains(""""tracking":{"indexed":""") &&
+        health.contains(""""country":{"indexed":"""), health)
       Seq("TN100", "TN101", "NOPE").foreach(id => get(server, s"/predict/tracking/?tracking_id=$id"))
-      val (h1, after) = get(server, "/health")
-      assert(h1 === 200 && after.contains(""""tracking":{"indexed":""") &&
-        after.contains(""""country":"pending""""), after)
 
       val (st, metrics) = get(server, "/metrics")
       assert(st === 200, metrics)
@@ -271,22 +271,11 @@ class ServeApiSpec extends SparkTestBase {
     } finally server.stop(0)
   }
 
-  test("prebuild builds both indexes before the server answers a request") {
-    val server = ServeApi.start(silver, None, ServeApi.Config(asOfDate = "2024-06-01"),
-      0, ServeIndex.DefaultBound, prebuild = true)
-    try {
-      val (st, health) = get(server, "/health")
-      assert(st === 200 && health.contains(""""tracking":{"indexed":""") &&
-        health.contains(""""country":{"indexed":"""), health)
-    } finally server.stop(0)
-  }
-
   test("a failed index build is not retried: the per-key query answers and /health says why") {
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val index = new ServeIndex[String](10,
       _ => { builds.incrementAndGet(); throw new IllegalStateException("result too large") },
       key => Some(s"queried $key"), identity)
-    assert(index.state === "pending")
     assert(index.lookup("a") === Some("queried a"))
     assert(index.lookup("b") === Some("queried b"))
     assert(builds.get() === 1)

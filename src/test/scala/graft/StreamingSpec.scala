@@ -353,40 +353,40 @@ class StreamingSpec extends SparkTestBase {
       "epochs 0/1 folded into __base__; only epoch 2's own label survives")
   }
 
-  test("self-maintaining sink heals a crashed compaction instead of wedging") {
+  test("self-maintaining sink re-compacts after a compaction crashed before its marker") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    val idxDir = tempDir("graft_wdg_").toString
+    val fresh = "completely novel sentences arrive in the first epoch drop " * 5
+    val idxDir = tempDir("graft_crc_").toString
     Dedup.buildNearDupIndex(
       Seq((0L, base, "s1")).toDF("doc_id", "text", "source"), idxDir)
-    // crash remnant: the fold reached a complete tmp but cleanup never
-    // ran, and the batch partitions are already gone — the registered
-    // count is back under ANY compactEvery threshold, so the count-based
-    // trigger alone can never fire again while the probe guard fails
-    // every epoch: a permanent wedge without the pending-generation check
-    spark.read.parquet(s"$idxDir/shingles").select("doc_id", "sz", "sh").distinct()
-      .write.parquet(s"$idxDir/_compacting_shingles")
-    intercept[IllegalStateException] {
-      Dedup.nearDupsAgainstIndex(
-        Seq((5L, base, "s")).toDF("doc_id", "text", "source"),
-        idxDir, threshold = 0.5).collect()
-    }
-    val outDir = tempDir("graft_wdg_out_").toString + "/hits"
+    Dedup.registerInNearDupIndex(
+      Seq((10L, fresh, "d1")).toDF("doc_id", "text", "source"), idxDir, "day1")
+    Dedup.registerInNearDupIndex(
+      Seq((11L, "unrelated words fill this registered drop " * 5, "d2"))
+        .toDF("doc_id", "text", "source"), idxDir, "day2")
+    // crash remnant: a compaction wrote its fold but never its marker —
+    // the two labels are still listed, so the count-based trigger fires
+    assert(Dedup.compactNearDupIndex(spark, idxDir) === 2)
+    val v = graft.io.VersionedTable.currentVersion(spark, idxDir).get
+    assert(new java.io.File(s"$idxDir/_log", f"$v%09d").delete())
+    assert(Dedup.registeredBatchCount(spark, idxDir) === 2)
+    val outDir = tempDir("graft_crc_out_").toString + "/hits"
     val input = MemoryStream[(Long, String, String)]
     val q = graft.streaming.StreamingDedup
       .selfMaintainingDedupSink(input.toDF().toDF("doc_id", "text", "source"),
-        idxDir, outDir, tempDir("graft_wdg_ck_").toString,
-        threshold = 0.5, compactEvery = 5)
+        idxDir, outDir, tempDir("graft_crc_ck_").toString,
+        threshold = 0.5, compactEvery = 2)
       .trigger(Trigger.ProcessingTime(0))
       .start()
-    input.addData((30L, base, "s9")); q.processAllAvailable(); q.stop()
-    assert(Dedup.pendingCompactionGenerations(spark, idxDir).isEmpty,
-      "epoch start must heal the stranded compaction generation")
+    input.addData((30L, base, "s9"), (31L, fresh, "s9")); q.processAllAvailable(); q.stop()
+    assert(Dedup.registeredBatchCount(spark, idxDir) === 1,
+      "the epoch compacted day1/day2 and registered only itself")
     val hits = spark.read.parquet(outDir)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(hits === Set((0L, 30L)),
-      s"the healed epoch still probes the full corpus: $hits")
+    assert(hits === Set((0L, 30L), (10L, 31L)),
+      s"the compacted epoch still probes the full corpus: $hits")
   }
 
   test("streaming manifest ≡ batch t25 manifest across two epochs") {
