@@ -271,6 +271,16 @@ class ServeApiSpec extends SparkTestBase {
     } finally server.stop(0)
   }
 
+  test("prebuild builds both indexes before the server answers a request") {
+    val server = ServeApi.start(silver, None, ServeApi.Config(asOfDate = "2024-06-01"),
+      0, ServeIndex.DefaultBound)
+    try {
+      val (st, health) = get(server, "/health")
+      assert(st === 200 && health.contains(""""tracking":{"indexed":""") &&
+        health.contains(""""country":{"indexed":"""), health)
+    } finally server.stop(0)
+  }
+
   test("a failed index build is not retried: the per-key query answers and /health says why") {
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val index = new ServeIndex[String](10,
