@@ -19,10 +19,6 @@ object GraftSession {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // dynamic partition overwrite: an overwrite write replaces only the
-    // partitions present in the incoming data — without this, a daily
-    // rerun of one load_date would truncate ALL silver partitions.
-    .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // ObjectHashAggregate (collect_list/collect_set paths) falls back to
     // sort-based aggregation after only 128 distinct keys per task —
     // sorting + possibly disk-spilling the whole partition. Shuffled aggs

@@ -5,27 +5,38 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.gen.BronzeGenerator
 import graft.gold.StarSchema
 import graft.io.LayerIO.countedWrite
+import graft.io.VersionedTable
 import graft.silver.SilverTransform
 
 /** End-to-end layered pipeline runner — replaces the reference's Airflow
   * DAG (`scheduling/orchestration.py:164-167`: generate → check → silver →
-  * gold) with one driver:
+  * gold) with one driver, which writes these layers under `rootDir` for
+  * a load date `d`:
+  * {{{
+  *   bronze/shipments/<d>/            plain JSON, overwritten per load
+  *   silver/shipments/load_date=<d>/  VersionedTable
+  *   quarantine/silver/<d>/           VersionedTable (quarantine loads)
+  *   gold/<d>/<table>/                VersionedTable, one per gold table
+  *   gold/<d>/csv/<table>/            CSV mirror (exportCsv)
+  * }}}
   *
-  *   gen → bronze JSON → silver parquet (partitioned by load_date) →
-  *   gold versioned parquet (dims/facts/KPIs, per-table [[graft.io.VersionedTable]]s)
-  *
-  * Stage properties preserved from the reference: idempotent
-  * overwrite-per-partition writes, bronze-existence precheck, per-stage
-  * row counts. Every row count is counted by the write that produces the
-  * rows ([[graft.io.LayerIO.countedWrite]]), never by a job that reads
-  * the output back. Gold stays typed parquet (the reference writes CSV and
+  * Stage properties preserved from the reference: idempotent per-date
+  * reloads, bronze-existence precheck, per-stage row counts. Every parquet
+  * table a load writes is a [[graft.io.VersionedTable]] committed by
+  * [[publish]], so a reload publishes a new snapshot next to the live one
+  * and a reader never sees a date missing or half-written. Every row count
+  * is counted by the write that produces the rows
+  * ([[graft.io.LayerIO.countedWrite]]), never by a job that reads the
+  * output back. Gold stays typed parquet (the reference writes CSV and
   * loses every type — SURVEY §1.2); `exportCsv` mirrors to CSV for
   * compatibility.
   *
-  * Scale notes: silver is written partitioned by load_date so daily
-  * reruns replace one partition; the 7 gold outputs reuse one cached
-  * silver scan instead of re-reading 7× like the reference
-  * (`starschema.py:75-146`).
+  * Scale notes: each date's silver is its own table root, so a daily
+  * rerun replaces one date and touches no other; `load_date` stays a
+  * data column in the files. Each of the 7 gold outputs re-scans that
+  * date's silver snapshot with its own pruned column subset, as the
+  * reference re-reads silver 7× (`starschema.py:75-146`; see the fan-out
+  * note in [[run]]).
   */
 object Pipeline {
 
@@ -56,7 +67,8 @@ object Pipeline {
   /** Runs `body`, retrying per `policy`; every failure is reported to
     * `hooks.onStageFailure`, exhaustion to `hooks.onExhausted` before
     * the final error propagates. Stages must be idempotent to be
-    * retryable — which the overwrite-per-partition writes here are. */
+    * retryable — which the per-date bronze overwrite and the
+    * [[publish]] commits here are. */
   private[graft] def retryStage[T](stage: String, policy: RetryPolicy, hooks: Hooks)(
       body: => T): T = {
     var attempt = 0
@@ -88,12 +100,31 @@ object Pipeline {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Commits `df` as the next version of the [[graft.io.VersionedTable]]
+    * at `root` and returns the rows it wrote. `vacuum(keep = 2)` bounds
+    * storage across reruns while leaving the previous snapshot alive for
+    * readers that resolved it before the commit. */
+  private def publish(df: DataFrame, root: String): Long = {
+    val rows = countedWrite(df)(VersionedTable.write(df.sparkSession, root, _))
+    VersionedTable.vacuum(df.sparkSession, root, keep = 2)
+    rows
+  }
+
+  private def silverRoot(rootDir: String, loadDate: String): String =
+    s"$rootDir/silver/shipments/load_date=$loadDate"
+
+  /** Reads the current committed snapshot of one date's silver written by
+    * [[run]] (a [[graft.io.VersionedTable]]: read through the marker log,
+    * not the raw path). */
+  def readSilver(spark: SparkSession, rootDir: String, loadDate: String): DataFrame =
+    VersionedTable.read(spark, silverRoot(rootDir, loadDate))
+
   /** Reads the current committed snapshot of a gold table written by
     * [[run]] (gold tables are [[graft.io.VersionedTable]]s, not plain
     * parquet dirs — read through the marker log, not the raw path). */
   def readGold(spark: SparkSession, rootDir: String, loadDate: String,
       table: String): DataFrame =
-    graft.io.VersionedTable.read(spark, s"$rootDir/gold/$loadDate/$table")
+    VersionedTable.read(spark, s"$rootDir/gold/$loadDate/$table")
 
   /** `bronzeSource`: when provided, the bronze stage ingests THIS frame
     * (written as the same JSON-per-day layer) instead of generating one
@@ -114,7 +145,8 @@ object Pipeline {
       bronzeSource: Option[DataFrame] = None): Seq[StageResult] = {
     val loadTs = java.sql.Timestamp.valueOf(s"$loadDate 00:00:00")
     val bronzeDir = s"$rootDir/bronze/shipments/$loadDate"
-    val silverDir = s"$rootDir/silver/shipments"
+    val silverDir = silverRoot(rootDir, loadDate)
+    val quarantineDir = s"$rootDir/quarantine/silver/$loadDate"
     val goldDir = s"$rootDir/gold/$loadDate"
 
     def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
@@ -134,7 +166,7 @@ object Pipeline {
       // precheck (orchestration.py:51-83) then bronze JSON → silver. The
       // emptiness guard (reference `Silver_tranformation.py:67`) reads
       // the bronze stage's count, and both checks run before the silver
-      // overwrite, so a missing or empty bronze cannot wipe the partition
+      // commit, so a missing or empty bronze cannot replace the date
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(bronzeDir), spark.sparkContext.hadoopConfiguration)
       require(fs.exists(new org.apache.hadoop.fs.Path(bronzeDir)), s"bronze missing: $bronzeDir")
@@ -157,24 +189,21 @@ object Pipeline {
           val bad = split.quarantine.withColumn("violations",
             org.apache.spark.sql.functions.concat_ws(",",
               org.apache.spark.sql.functions.col("violations")))
-          // overwrite even when empty: a rerun of a date that previously had
-          // bad rows must not leave the stale quarantine dir on disk
+          // publish even when empty: a rerun of a date that previously had
+          // bad rows must not leave the stale quarantine rows current,
           // contradicting the rows=0 stage result
           val badT0 = System.nanoTime()
-          val nBad = countedWrite(bad)(
-            _.write.mode(SaveMode.Overwrite).parquet(s"$rootDir/quarantine/silver/$loadDate"))
+          val nBad = publish(bad, quarantineDir)
           (split.clean, nBad, secondsSince(badT0))
         }
-        (countedWrite(silver)(
-          _.write.mode(SaveMode.Overwrite).partitionBy("load_date").parquet(silverDir)),
-          quarantined, badS)
+        (publish(silver, silverDir), quarantined, badS)
       } finally cached.foreach(_.unpersist())
     }
     val silverS = secondsSince(silverT0)
 
-    // silver → gold: the silver scan fans out to 7 outputs UNCACHED —
-    // each gold table re-reads the parquet with its OWN pruned column
-    // subset, which beats materializing the full-width frame once
+    // silver → gold: the date's silver snapshot fans out to 7 outputs
+    // UNCACHED — each gold table re-reads the parquet with its OWN pruned
+    // column subset, which beats materializing the full-width frame once
     // (r17 A/B, SURVEY.md; the GoldFanoutAB harness is at commit
     // 1451c40: at 100× sf0.1 no-persist reads
     // 17.9–23.9 s / GC 0.2–0.5 s vs MEMORY_AND_DISK 41.8–49.4 s /
@@ -185,16 +214,9 @@ object Pipeline {
     // where the shared input is a pruned-columnar on-disk table; the
     // dedup/ANN operators keep their persists, where the shared frame
     // is an expensive computed intermediate, not a scan.)
-    // One retryable stage. Each gold table is a VersionedTable
-    // (snapshot + atomic marker commit), so a rerun publishes a NEW
-    // snapshot instead of deleting the live one — a reader mid-rerun
-    // always resolves a complete committed table, never the
-    // partial/missing window a plain overwrite opens. vacuum(keep = 2)
-    // bounds storage across reruns while leaving the previous snapshot
-    // alive for readers that resolved it pre-commit.
+    // One retryable stage; each gold table is published like silver.
     val goldResults = retryStage("gold", retry, hooks) {
-      val silverBack = spark.read.parquet(silverDir)
-        .where(s"load_date = '$loadDate'")
+      val silverBack = readSilver(spark, rootDir, loadDate)
       val goldTables: Seq[(String, DataFrame)] = Seq(
         "dim_courier" -> StarSchema.dimCourier(silverBack),
         "dim_location" -> StarSchema.dimLocation(silverBack),
@@ -224,8 +246,7 @@ object Pipeline {
           scala.concurrent.Future {
             val t0 = System.nanoTime()
             val tableRoot = s"$goldDir/$name"
-            val rows = countedWrite(df)(graft.io.VersionedTable.write(spark, tableRoot, _))
-            graft.io.VersionedTable.vacuum(spark, tableRoot, keep = 2)
+            val rows = publish(df, tableRoot)
             if (exportCsv)
               df.write.mode(SaveMode.Overwrite).option("header", "true").csv(s"$goldDir/csv/$name")
             StageResult(s"gold/$name", rows, tableRoot, secondsSince(t0))
@@ -256,8 +277,7 @@ object Pipeline {
     val results = Seq(
       StageResult("bronze", bronzeRows, bronzeDir, bronzeS),
       StageResult("silver", silverRows, silverDir, silverS)) ++
-      (if (quarantine) Seq(StageResult("quarantine", quarantinedRows,
-        s"$rootDir/quarantine/silver/$loadDate", quarantineS))
+      (if (quarantine) Seq(StageResult("quarantine", quarantinedRows, quarantineDir, quarantineS))
       else Seq.empty) ++
       goldResults
     hooks.onSuccess(results)

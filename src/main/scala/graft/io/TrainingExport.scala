@@ -23,8 +23,9 @@ import graft.operators.Sampling
   */
 object TrainingExport {
 
-  /** Writes the selected corpus under `dir` (overwrite) and returns the
-    * read-back frame — evidence of what landed on disk, not intent.
+  /** Writes the selected corpus under `dir`, replacing all of it (an
+    * earlier export's shards go too, whatever its `nShards`), and returns
+    * the read-back frame — evidence of what landed on disk, not intent.
     * Columns: doc_id, text, lang, n_tokens, pos, global_pos, shard
     * (partition column).
     *

@@ -10,9 +10,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-version parquet table: the one way every table in the engine is
-  * published (gold, the MERGE upsert, the streaming LWW and SCD2 sinks,
-  * compaction, the persisted near-dup index), so a concurrent reader
-  * always finds a complete table.
+  * published (the pipeline's silver, quarantine and gold, the MERGE
+  * upsert, the streaming LWW and SCD2 sinks, compaction, the persisted
+  * near-dup index), so a concurrent reader always finds a complete table.
   *
   * Layout under `root/`:
   * {{{

@@ -75,10 +75,26 @@ class LakehouseOpsSpec extends SparkTestBase {
     val tmp = tempDir("graft_2day_").toString
     graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 200L)
     graft.Pipeline.run(spark, tmp, "2024-01-02", nShipments = 200L)
-    val dates = spark.read.parquet(s"$tmp/silver/shipments")
-      .select("load_date").distinct().as[String].collect().toSet
-    assert(dates === Set("2024-01-01", "2024-01-02"),
-      "dynamic partition overwrite must preserve other load_dates")
+    val dates = Seq("2024-01-01", "2024-01-02").map(d => d ->
+      graft.Pipeline.readSilver(spark, tmp, d).select("load_date").distinct().as[String].collect().toSeq)
+    assert(dates === Seq("2024-01-01" -> Seq("2024-01-01"), "2024-01-02" -> Seq("2024-01-02")),
+      "a load must leave every other load_date's silver readable")
+  }
+
+  /** Runs `body` while a second thread loops `read`; returns every value
+    * the thread read and its failure, if any. */
+  private def readsDuring(read: => Long)(body: => Unit): (Seq[Long], Option[Throwable]) = {
+    val observed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = new Thread(() =>
+      try while (!stop.get()) observed.add(read)
+      catch { case t: Throwable => failure.set(t) })
+    reader.start()
+    try body
+    finally { stop.set(true); reader.join(30000) }
+    import scala.jdk.CollectionConverters._
+    (observed.asScala.toSeq, Option(failure.get()))
   }
 
   test("gold tables stay fully readable while a rerun republishes them") {
@@ -87,21 +103,53 @@ class LakehouseOpsSpec extends SparkTestBase {
     val expected = r1.find(_.stage == "gold/fact_shipment").get.rows
     // reader loops over the versioned gold table while the pipeline reruns;
     // with a plain overwrite this window shows a missing/partial table
-    val observed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val reader = new Thread(() =>
-      try while (!stop.get()) observed.add(
-        graft.Pipeline.readGold(spark, tmp, "2024-01-01", "fact_shipment").count())
-      catch { case t: Throwable => failure.set(t) })
-    reader.start()
-    try graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 300L)
-    finally { stop.set(true); reader.join(30000) }
-    assert(failure.get() === null, s"reader failed mid-rerun: ${failure.get()}")
-    import scala.jdk.CollectionConverters._
-    assert(observed.size() > 0, "reader must have completed at least one read")
-    assert(observed.asScala.toSet === Set(expected),
+    val (observed, failure) = readsDuring(
+      graft.Pipeline.readGold(spark, tmp, "2024-01-01", "fact_shipment").count()) {
+      graft.Pipeline.run(spark, tmp, "2024-01-01", nShipments = 300L)
+    }
+    assert(failure.isEmpty, s"reader failed mid-rerun: $failure")
+    assert(observed.nonEmpty, "reader must have completed at least one read")
+    assert(observed.toSet === Set(expected),
       "every read during the rerun must see a complete committed snapshot")
+  }
+
+  test("silver stays fully readable while re-loads republish its date") {
+    val tmp = tempDir("graft_silverv_").toString
+    val date = "2024-01-01"
+    def load() = graft.Pipeline.run(spark, tmp, date, nShipments = 3000L)
+    val expected = load().find(_.stage == "silver").get.rows
+    val (observed, failure) = readsDuring(graft.Pipeline.readSilver(spark, tmp, date).count()) {
+      (1 to 5).foreach(_ => load())
+    }
+    assert(failure.isEmpty, s"reader failed mid-reload: $failure")
+    assert(observed.nonEmpty, "reader must have completed at least one read")
+    assert(observed.toSet === Set(expected),
+      "every read during the re-loads must see the clean load's rows")
+  }
+
+  test("silver crash state: a load whose marker never landed is invisible, and a re-run commits") {
+    val tmp = tempDir("graft_silvercrash_").toString
+    val date = "2024-01-01"
+    val root = s"$tmp/silver/shipments/load_date=$date"
+    def silverRows(r: Seq[graft.Pipeline.StageResult]) = r.find(_.stage == "silver").get.rows
+    val first = silverRows(graft.Pipeline.run(spark, tmp, date, nShipments = 200L))
+    // the crash state: the second load's snapshot was written, its marker
+    // never was (a clean load with its marker removed again)
+    val clean = silverRows(graft.Pipeline.run(spark, tmp, date, nShipments = 300L))
+    assert(clean !== first, "fixture sanity: the two loads differ")
+    val marker = new java.io.File(root, "_log").listFiles().maxBy(_.getName)
+    val orphan = new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim
+    assert(marker.delete())
+    assert(graft.Pipeline.readSilver(spark, tmp, date).count() === first,
+      "an uncommitted load is invisible to readers")
+    val rerun = silverRows(graft.Pipeline.run(spark, tmp, date, nShipments = 300L))
+    assert(rerun === clean)
+    assert(graft.Pipeline.readSilver(spark, tmp, date).count() === clean,
+      "the re-run converges to the clean load")
+    assert(new java.io.File(root, orphan).isDirectory, "the load's own vacuum spares young dirs")
+    VersionedTable.vacuum(spark, root, orphanAgeMs = 0)
+    assert(!new java.io.File(root, orphan).exists(), "vacuum sweeps the orphan snapshot")
+    assert(graft.Pipeline.readSilver(spark, tmp, date).count() === clean)
   }
 
   test("training export: shard-partitioned, dense positions, idempotent overwrite") {
@@ -128,6 +176,15 @@ class LakehouseOpsSpec extends SparkTestBase {
     val again = graft.io.TrainingExport.exportTrainingCorpus(docs, dir, nShards = 4)
     val second = again.select("doc_id", "global_pos").as[(Long, Long)].collect().toSet
     assert(second === first, "re-export is bit-stable")
+    // a re-export with fewer shards replaces every shard of the one before
+    graft.io.TrainingExport.exportTrainingCorpus(docs, dir, nShards = 8)
+    val fewer = graft.io.TrainingExport.exportTrainingCorpus(docs, dir, nShards = 4)
+    val fewerRows = fewer.select("doc_id", "global_pos").as[(Long, Long)].collect().toSeq
+    assert(fewerRows.size === first.size && fewerRows.toSet === first,
+      "a fewer-shards re-export reads back exactly its own rows")
+    assert(fewer.select("shard").distinct().as[Int].collect().sorted.toSeq === (0 until 4))
+    assert(new java.io.File(dir).list().filter(_.startsWith("shard=")).sorted.toSeq ===
+      (0 until 4).map(i => s"shard=$i"), "no shard dir of the 8-shard export survives")
   }
 
   test("retryStage: transient failure succeeds on retry, each failure observed") {

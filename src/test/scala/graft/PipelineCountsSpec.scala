@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.gen.BronzeGenerator
-import graft.io.LayerIO
+import graft.io.{LayerIO, VersionedTable}
 import graft.model.Schemas
 import graft.silver.SilverTransform
 import graft.util.Jobs
@@ -23,8 +23,8 @@ class PipelineCountsSpec extends SparkTestBase {
   /** The rows a reader finds at each stage's output. */
   private def readBack(root: String, r: Pipeline.StageResult): Long = r.stage match {
     case "bronze" => spark.read.text(r.path).count() // one JSON record per line
-    case "silver" => spark.read.parquet(r.path).where(col("load_date") === Date).count()
-    case "quarantine" => spark.read.parquet(r.path).count()
+    case "silver" => Pipeline.readSilver(spark, root, Date).count()
+    case "quarantine" => VersionedTable.read(spark, r.path).count()
     case gold => Pipeline.readGold(spark, root, Date, gold.stripPrefix("gold/")).count()
   }
 
@@ -59,7 +59,7 @@ class PipelineCountsSpec extends SparkTestBase {
       spark.read.schema(Schemas.bronzeShipment).json(s"$root/bronze/shipments/$Date"),
       Date, java.sql.Timestamp.valueOf(s"$Date 00:00:00")).count()
     assert(rows("silver") + rows("quarantine") === transformed)
-    assert(spark.read.parquet(s"$root/quarantine/silver/$Date")
+    assert(VersionedTable.read(spark, s"$root/quarantine/silver/$Date")
       .select("shipment_id").distinct().count() === 3L, "exactly the three broken shipments")
 
     val again = load()
@@ -70,8 +70,7 @@ class PipelineCountsSpec extends SparkTestBase {
   test("an empty bronze fails with `bronze empty` before silver is written") {
     val root = tempDir("graft_counts_empty_").toString
     Pipeline.run(spark, root, Date, nShipments = 200L, retry = NoRetry)
-    def silverRows() = spark.read.parquet(s"$root/silver/shipments")
-      .where(col("load_date") === Date).count()
+    def silverRows() = Pipeline.readSilver(spark, root, Date).count()
     val loaded = silverRows()
     assert(loaded > 0L)
     val empty = spark.createDataFrame(

@@ -99,4 +99,43 @@ class RetrievalSpec extends SparkTestBase {
     Retrieval.buildBm25Index(spark, docs, dir, nBuckets = 4)
     assert(Retrieval.bm25AgainstIndex(spark, dir, Seq("spark"), k = 2).count() === 2)
   }
+
+  test("an index rebuilt into the same dir over another corpus equals a fresh build: bm25, ivf") {
+    def dirs(d: String, sub: String) = new java.io.File(d, sub).list().filter(_.contains("=")).sorted.toSeq
+    locally {
+      val old = Seq(
+        (1L, "apple banana cherry date elder"),
+        (2L, "apple fig grape honey"),
+        (3L, "apple kiwi lemon mango nut"),
+        (4L, "kiwi olive pear quince rye zebra")).toDF("doc_id", "text")
+      val docs = Seq((1L, "zebra"), (2L, "zebra zebra")).toDF("doc_id", "text")
+      val dir = tempDir("bm25re").toString
+      val fresh = tempDir("bm25fresh").toString
+      Retrieval.buildBm25Index(spark, old, dir, nBuckets = 8)
+      Retrieval.buildBm25Index(spark, docs, dir, nBuckets = 8)
+      Retrieval.buildBm25Index(spark, docs, fresh, nBuckets = 8)
+      def probe(d: String, term: String) =
+        Retrieval.bm25AgainstIndex(spark, d, Seq(term), k = 10).collect().toSeq
+      Seq("apple", "zebra", "kiwi").foreach(t => assert(probe(dir, t) === probe(fresh, t), s"probe $t"))
+      assert(dirs(dir, "postings") === dirs(fresh, "postings"), "only the fresh build's buckets are left")
+    }
+    locally {
+      import graft.operators.Similarity
+      val old = (0 until 8).map(i => (i.toLong, Seq(math.cos(i * 0.7), math.sin(i * 0.7), i * 0.1)))
+        .toDF("vec_id", "embedding")
+      // three equal vectors: both initial centroids are that vector, so
+      // every vector joins cell 0 and cell 1 stays empty
+      val docs = (10L to 12L).map(i => (i, Seq(1.0, 0.0, 0.0))).toDF("vec_id", "embedding")
+      val dir = tempDir("ivfre").toString
+      val fresh = tempDir("ivffresh").toString
+      Similarity.buildIvfIndex(spark, old, dir, nCells = 2)
+      Similarity.buildIvfIndex(spark, docs, dir, nCells = 2)
+      Similarity.buildIvfIndex(spark, docs, fresh, nCells = 2)
+      val q = Seq((100L, Seq(1.0, 0.0, 0.0))).toDF("vec_id", "embedding")
+      def probe(d: String) =
+        Similarity.ivfTopKAgainstIndex(spark, q, d, k = 20, nProbe = 2).collect().toSeq
+      assert(probe(dir) === probe(fresh), "a probe of the empty cell finds no old vector")
+      assert(dirs(dir, "assigned") === dirs(fresh, "assigned"), "only the fresh build's cells are left")
+    }
+  }
 }
