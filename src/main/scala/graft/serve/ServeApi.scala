@@ -26,9 +26,13 @@ import org.apache.spark.sql.DataFrame
   *    shifting encodings with every filtered subset);
   *  - time is injected (`asOfDate`) instead of `datetime.now()`, so
   *    responses are deterministic and testable;
-  *  - predictions append to a typed parquet log ([[PredictionLog]])
-  *    instead of 1-row CSVs serialized to the object store
+  *  - each prediction is one typed parquet file in a `log_date`-partitioned
+  *    log ([[PredictionLog.write]], on the request thread, no Spark job and
+  *    no lock) instead of a 1-row CSV serialized to the object store
   *    (`pastapi.py:146-163`);
+  *  - the socket runs with `TCP_NODELAY` (`sun.net.httpserver.nodelay`),
+  *    so a keep-alive client does not wait out Nagle's algorithm and its
+  *    own delayed ACK (~40 ms) for each response body;
   *  - `/health` reports each route's index state and `/metrics` each read
   *    route's status counts and latency histogram.
   */
@@ -56,6 +60,11 @@ object ServeApi {
     val tracking = ServeIndex.tracking(silver, model, indexBound)
     val country = countryBuild.join()
     val trackingStats, countryStats = new RouteStats
+    // the JDK server sends a response's headers and body as two writes;
+    // with Nagle on, the body waits for the client's delayed ACK of the
+    // headers (~40 ms on Linux) on every keep-alive request. The JDK reads
+    // this property once, when the first server in the JVM is created.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/predict/tracking/",
       readRoute(trackingStats)(trackingRoute(tracking, silver, config, _)))
@@ -158,16 +167,17 @@ object ServeApi {
         }
     }
 
-  /** Append-mode prediction log (S9) — typed parquet, date-partitioned. */
+  /** Append-mode prediction log (S9) — typed parquet, date-partitioned.
+    * The row goes straight to the log's driver-side writer: no frame to
+    * analyse, no Spark job. */
   private def logPrediction(silver: DataFrame, config: Config,
       route: String, key: String, prediction: String): Unit =
     config.logDir.foreach { dir =>
-      val spark = silver.sparkSession
-      import spark.implicits._
-      PredictionLog.append(
-        Seq((route, key, prediction, config.asOfDate))
-          .toDF("route", "lookup_key", "prediction", "log_date"), dir)
+      PredictionLog.write(silver.sparkSession.sparkContext.hadoopConfiguration, dir,
+        LogColumns, Seq(Seq(route, key, prediction, config.asOfDate)))
     }
+
+  private val LogColumns = Seq("route", "lookup_key", "prediction", "log_date")
 
   /** The thin HTML frontend (`API/delivery-frontend.html:1-74` in the
     * reference): a one-field form over `/predict/country/`. Served from

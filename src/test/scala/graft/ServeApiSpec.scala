@@ -133,8 +133,22 @@ class ServeApiSpec extends SparkTestBase {
       val codes = Await.result(
         Future.sequence(paths.map(p => Future(get(server, p)._1))), 120.seconds)
       assert(codes.forall(_ == 200), s"statuses: $codes")
-      // every request logged — concurrent appends serialized, none clobbered
+      // every request logged — each append its own file, none clobbered
       assert(PredictionLog.read(spark, logDir).count() === 8)
+    } finally server.stop(0)
+  }
+
+  test("sequential keep-alive requests answer without a Nagle stall") {
+    // the server sends headers and body as two writes: with Nagle on, the
+    // body waits for the client's delayed ACK, a 40 ms floor on Linux
+    val server = ServeApi.start(silver, model = None, ServeApi.Config(asOfDate = "2024-06-01"))
+    try {
+      val ms = (0 until 21).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(server, "/health")._1 === 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"median ${ms(10)} ms of ${ms.map(m => f"$m%.1f")}")
     } finally server.stop(0)
   }
 
