@@ -39,6 +39,10 @@ object GraftSession {
     .config("spark.sql.parquet.compression.codec", "zstd")
     .config("spark.ui.enabled", "false")
 
+  /** The core count a main's local session runs on: `SPARK_GRAFT_CPUS`,
+    * default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** A local session whose managed tables live in a fresh temp
     * warehouse. Every session of the context shares that warehouse, so
     * it is deleted when the context's application ends, not at any

@@ -82,8 +82,8 @@ object PipelineMain {
     val base = GraftSession.configure(SparkSession.builder().appName("graft-pipeline"))
     val spark = (if (sys.props.contains("spark.master")) base
       else {
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        base.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
+        val cpus = GraftSession.cpus
+        base.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus.toString)
       }).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

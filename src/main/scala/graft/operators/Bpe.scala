@@ -80,7 +80,7 @@ object Bpe {
     // generation, which no argmax reads, is never materialized.
     // State: (words, merges so far); no pair occurring twice stops early.
     val init = (wordTable(docs, textCol).localCheckpoint(eager = false), Vector.empty[Merge])
-    Fixpoint.iterate("bpe_rounds", init, nMerges) { case (s @ (words, merges), round) =>
+    Fixpoint.iterate(docs.sparkSession, "bpe_rounds", init, nMerges) { case (s @ (words, merges), round) =>
       val top = words
         .select(col("n"), explode(adjacentPairs(col("syms"))).as("p"))
         .groupBy(col("p")).agg(sum(col("n")).as("freq"))

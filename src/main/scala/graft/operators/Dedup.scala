@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.io.VersionedTable
-import graft.util.Fixpoint
+import graft.util.{CacheRegistry, Fixpoint}
 
 /** Document deduplication family for training-data pipelines — exact,
   * MinHash+LSH, SimHash, and blocked n-gram Jaccard.
@@ -26,10 +26,6 @@ import graft.util.Fixpoint
   *    (e.g. `source`) when the domain provides one.
   */
 object Dedup {
-
-  // Persisted intermediates are created per call (no memoization) and
-  // owned by the session's query scope; see graft.util.CacheRegistry.
-  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
 
   /** One row per doc_id with a DETERMINISTIC text pick (min). Replaces
     * `dropDuplicates("doc_id")` in the index write/probe paths:
@@ -251,10 +247,10 @@ object Dedup {
     // k-long signatures feeding the band self-join. (Persisting the
     // shingle ARRAYS instead measures slower: columnar-caching
     // array<string> costs more than the pass it saves.)
-    val ex = tracked(withShingles(docs, shingleSize)
+    val ex = CacheRegistry.track(withShingles(docs, shingleSize)
       .select(col("doc_id"), size(col("shingles")).as("sz"),
         explode(col("shingles")).as("sh")))
-    val sigs = tracked(minhashSignatures(ex, numHashes))
+    val sigs = CacheRegistry.track(minhashSignatures(ex, numHashes))
     val cand = lshCandidates(sigs, bands, numHashes / bands)
     // Exact Jaccard on the candidates by counting shared shingles (same
     // count-based identity as [[blockedJaccardPairs]]): candidates sharing
@@ -295,10 +291,10 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    val exT = tracked(withShingles(train, shingleSize)
+    val exT = CacheRegistry.track(withShingles(train, shingleSize)
       .select(col("doc_id"), size(col("shingles")).as("sz"),
         explode(col("shingles")).as("sh")))
-    val exE = tracked(withShingles(evalDocs, shingleSize)
+    val exE = CacheRegistry.track(withShingles(evalDocs, shingleSize)
       .select(col("doc_id"), size(col("shingles")).as("sz"),
         explode(col("shingles")).as("sh")))
     // hash-ONCE discipline (the t73 lesson, applied to the signature
@@ -488,7 +484,7 @@ object Dedup {
     * registered labels. */
   def buildNearDupIndex(docs: DataFrame, dir: String, shingleSize: Int = 3,
       numHashes: Int = 32, bands: Int = 8): Unit =
-    graft.util.PhaseTimer.time("index_build") {
+    CacheRegistry.time(docs.sparkSession, "index_build") {
       buildNearDupIndexImpl(docs, dir, shingleSize, numHashes, bands)
     }
 
@@ -504,7 +500,7 @@ object Dedup {
     // at-least-once source replaying a record into the build input would
     // otherwise write duplicate rows and double intersection counts.
     // Enforce the uniqueness invariant at WRITE time, not just at probe.
-    val ex = tracked(withShingles(uniqueById(docs), shingleSize)
+    val ex = CacheRegistry.track(withShingles(uniqueById(docs), shingleSize)
       .select(col("doc_id"), size(col("shingles")).as("sz"), explode(col("shingles")).as("sh")))
     val snap = VersionedTable.freshDir()
     writeBatch(ex, dir, snap, numHashes, bands)
@@ -574,7 +570,7 @@ object Dedup {
       s"index at $dir was built with (shingleSize, numHashes, bands) = $stored " +
         s"but registration asked for ($shingleSize, $numHashes, $bands) — " +
         "the docs would be unfindable")
-    graft.util.PhaseTimer.time("index_register") {
+    CacheRegistry.time(spark, "index_register") {
       // taken before newDocs is read: the commit goes at this version + 1
       val base = VersionedTable.base(spark, dir)
       // locally-scoped persist (NOT the tracked registry): the explode
@@ -619,7 +615,7 @@ object Dedup {
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, keepBatches: Set[String] = Set.empty): Int = {
     readParams(spark, dir) // fail loudly on a dir that is not an index
-    graft.util.PhaseTimer.time("index_compact") {
+    CacheRegistry.time(spark, "index_compact") {
       val base = VersionedTable.base(spark, dir)
       val (kept, fold) = labels(base).partition { case (l, _) =>
         l != BaseBatch && keepBatches.contains(l) }
@@ -695,7 +691,7 @@ object Dedup {
     // inflate jaccard past 1. Same id ⇒ same document, one verdict.
     val exNewRaw = withShingles(uniqueById(newDocs), shingleSize)
       .select(col("doc_id"), size(col("shingles")).as("sz"), explode(col("shingles")).as("sh"))
-    val exNew = if (cacheIntermediates) tracked(exNewRaw) else exNewRaw
+    val exNew = if (cacheIntermediates) CacheRegistry.track(exNewRaw) else exNewRaw
     val newKeys = bandKeys(minhashSignatures(exNew, numHashes), bands, numHashes / bands)
     val idxKeys = indexTable("bands")
     val cand = newKeys.as("n")
@@ -767,7 +763,7 @@ object Dedup {
     // joins edges on src, so pre-partitioning makes each round's join
     // one-sided — only the node-sized label table moves, the edge-sized
     // side never re-shuffles.
-    val edges = tracked(pairs
+    val edges = CacheRegistry.track(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
@@ -787,7 +783,7 @@ object Dedup {
     // rounds-as-data: the scale argument for this operator is its round
     // count (∝ diameter here, log n in the fallback), so it is recorded
     // as cc_prop_rounds where the bench JSON picks it up
-    val prop = Fixpoint.iterate("cc_prop_rounds", seed, maxIter) { (prev, _) =>
+    val prop = Fixpoint.iterate(pairs.sparkSession, "cc_prop_rounds", seed, maxIter) { (prev, _) =>
       // a node's next label: min over itself and all neighbors' labels.
       // SHUFFLE_HASH on the node-sized label side (the labelPropagation
       // lesson, Graph.scala): a sort-merge join would re-sort the
@@ -873,7 +869,7 @@ object Dedup {
     // not 3) and the anti-join then reads its blocks
     val init = (edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")),
       Option.empty[(DataFrame, Long)])
-    val alt = Fixpoint.iterate("cc_alt_rounds", init, maxRounds + 1) { case ((raw, prev), _) =>
+    val alt = Fixpoint.iterate(edges.sparkSession, "cc_alt_rounds", init, maxRounds + 1) { case ((raw, prev), _) =>
       val dir = orientedMin(raw).localCheckpoint(eager = false)
       val dirCount = dir.count()
       val stable = prev.exists { case (dirPrev, prevCount) =>
@@ -948,7 +944,7 @@ object Dedup {
       threshold: Double = 0.3): DataFrame = {
     // persisted: the self-join would otherwise recompute the shingle
     // explosion once per side (no cross-branch CSE in Catalyst)
-    val ex = tracked(withShingles(docs, shingleSize)
+    val ex = CacheRegistry.track(withShingles(docs, shingleSize)
       .select(col(blockCol).as("blk"), col("doc_id"),
         size(col("shingles")).as("sz"), explode(col("shingles")).as("sh")))
     ex.as("x").join(ex.as("y"),
@@ -1001,7 +997,7 @@ object Dedup {
     // (which the hash gate would surface). The one persisted frame is
     // corpus-ROW-sized: one row per doc with its sorted hash array (sz
     // stays the distinct-STRING count, the oracle's denominator).
-    val docsArr = tracked(withShingles(docs, shingleSize)
+    val docsArr = CacheRegistry.track(withShingles(docs, shingleSize)
       .select(col("doc_id"), size(col("shingles")).as("sz"),
         array_sort(transform(col("shingles"), s => xxhash64(s))).as("shs")))
     // exploded view for the df table + rare-shingle candidate join only
@@ -1019,7 +1015,7 @@ object Dedup {
     // SHUFFLE_HASH on the filtered-shingle side: it is rare-shingle-
     // sized, while a sort-merge join would sort the FULL exploded
     // frame — the corpus-scale side — to join it.
-    val rare = tracked(ex.join(
+    val rare = CacheRegistry.track(ex.join(
       ex.groupBy(col("sh")).agg(count(lit(1)).as("_df"))
         .filter(col("_df") >= 2 && col("_df") <= maxDf)
         .select(col("sh"))
@@ -1028,7 +1024,7 @@ object Dedup {
     // persisted: referenced by the doc_b build-side filter AND the
     // first verify join — unpersisted, the candidate self-join would
     // run twice (no cross-branch CSE)
-    val cand = tracked(rare.as("x").join(rare.as("y").hint("SHUFFLE_HASH"),
+    val cand = CacheRegistry.track(rare.as("x").join(rare.as("y").hint("SHUFFLE_HASH"),
         col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct())
@@ -1116,7 +1112,7 @@ object Dedup {
     // persisted: referenced by 4 union branches × 2 self-join sides — 8
     // recomputations of the signature aggregation without it (measured 21s
     // vs 2.5s for one pass at sf0.1)
-    val sh = tracked(simhashes(docs))
+    val sh = CacheRegistry.track(simhashes(docs))
     val banded = (0 until 4)
       .map(b => sh.select(col("doc_id"), col("simhash"), lit(b).as("band_idx"),
         shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xffffL)).as("band_val")))
@@ -1222,7 +1218,7 @@ object Dedup {
     // codegen'd distinct grams (graft_shingles = sorted-distinct
     // variant; every consumer below is set-based, so the order change
     // vs array_distinct(ngramsAll(...)) is immaterial)
-    val grams = tracked(docs
+    val grams = CacheRegistry.track(docs
       .select(col("doc_id"),
         explode(call_function("graft_shingles", col("text"), lit(gramSize))).as("gram"))
       .select(col("doc_id"), xxhash64(col("gram")).as("gh")))
@@ -1290,7 +1286,7 @@ object Dedup {
     // duplicated gram starts, 0-based token positions; gram
     // construction is the codegen'd graft_ngrams (order-preserving,
     // so posexplode's start indices are unchanged)
-    val starts = tracked(base
+    val starts = CacheRegistry.track(base
       .select(col("doc_id"),
         posexplode(call_function("graft_ngrams", col("text"), lit(spanTokens)))
           .as(Seq("start", "gram")))
@@ -1299,7 +1295,8 @@ object Dedup {
     val dupGh = starts.groupBy(col("gh")).agg(count(lit(1)).as("occ"))
       .filter(col("occ") > 1)
       .select(col("gh"))
-    val dupStarts = tracked(starts.join(dupGh, "gh").select(col("doc_id"), col("start")))
+    val dupStarts = CacheRegistry.track(
+      starts.join(dupGh, "gh").select(col("doc_id"), col("start")))
     val covered = dupStarts
       .select(col("doc_id"),
         explode(sequence(col("start"), col("start") + lit(spanTokens - 1))).as("pos"))

@@ -83,7 +83,7 @@ object Graph {
     val base = (1.0 - damping) / n
     val init = nodes.withColumn("pagerank", lit(1.0 / n))
       .localCheckpoint(eager = false)
-    Fixpoint.iterate("pagerank_rounds", init, iterations) { (pr, _) =>
+    Fixpoint.iterate(edges.sparkSession, "pagerank_rounds", init, iterations) { (pr, _) =>
       Fixpoint.Next(pageRankRound(ew, nodes, pr, nodeSide, base, damping)
         .localCheckpoint(eager = false))
     }.state.orderBy(col("node"))
@@ -234,7 +234,8 @@ object Graph {
       else (df: DataFrame) => df.hint("SHUFFLE_HASH")
     // each generation materializes inside the next round's
     // broadcast/hash build; the last one inside the caller's action
-    Fixpoint.iterate("label_propagation_rounds", nodes.withColumn("label", col("node")),
+    Fixpoint.iterate(edges.sparkSession, "label_propagation_rounds",
+        nodes.withColumn("label", col("node")),
         rounds) { (labels, _) =>
       Fixpoint.Next(lpRound(sym, labels, nodeSide).localCheckpoint(eager = false))
     }.state.orderBy(col("node"))
@@ -289,7 +290,7 @@ object Graph {
     // inside that one action
     val init = canonSym(edges).localCheckpoint(eager = false)
     // no round bound: every non-final round peels ≥ 1 node
-    Fixpoint.iterate("kcore_rounds", init, Int.MaxValue) { (sym, _) =>
+    Fixpoint.iterate(edges.sparkSession, "kcore_rounds", init, Int.MaxValue) { (sym, _) =>
       val degs = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .localCheckpoint(eager = false)
       // coalesce: sum over the empty frame is NULL, and an emptied graph
@@ -394,7 +395,8 @@ object Graph {
     val seeded = seeds.select(col("node"), lit(0L).as("dist"))
       .distinct().localCheckpoint()
     // state: (visited, frontier); an empty frontier is the fixpoint
-    Fixpoint.iterate("bfs_rounds", (seeded, seeded.select(col("node"))), maxHops) {
+    Fixpoint.iterate(sym.sparkSession, "bfs_rounds",
+        (seeded, seeded.select(col("node"))), maxHops) {
       case (s @ (_, frontier), _) if frontier.isEmpty => Fixpoint.Done(s)
       case ((visited, frontier), round) =>
         val hop = round + 1L

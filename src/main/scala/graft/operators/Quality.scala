@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.queries.Num.{davg, dsum}
+import graft.util.CacheRegistry
 
 /** Model-based corpus quality scoring — the two published selection
   * recipes built on hashed n-gram language models:
@@ -34,8 +36,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Quality {
 
-  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
-
   /** Whitespace unigrams ++ adjacent bigrams of a token-array column —
     * the hashed n-gram feature set of DSIR/CCNet-style bucket LMs (the
     * fixture corpus carries its language signal in token TRANSITIONS,
@@ -55,7 +55,7 @@ object Quality {
   private def hashedGrams(docs: DataFrame, textCol: String, idCol: String,
       carry: Seq[(String, Column)], buckets: Int): DataFrame = {
     import graft.functions.TextFunctions.tokens
-    tracked(docs
+    CacheRegistry.track(docs
       .select(col(idCol).as("doc_id") +:
         carry.map { case (n, c) => c.as(n) } :+
         tokens(col(textCol)).as("sp"): _*)
@@ -105,7 +105,7 @@ object Quality {
     // the target slice degrades to the uniform LM rather than diverging
     val logp = log((coalesce(col("ct"), lit(0L)).cast("double") + lit(1.0))
       / (coalesce(col("nt"), lit(0L)) + lit(buckets)))
-    val scored = tracked(g
+    val scored = CacheRegistry.track(g
       .join(broadcast(tc), Seq("lang", "b"), "left")
       .join(broadcast(nt), Seq("lang"), "left")
       .withColumn("_lp", logp)
@@ -115,8 +115,7 @@ object Quality {
       // below the 10⁻⁶ grid only if one gram held e^(−10⁻⁶) ≈ all of its
       // language's probability mass, which the bucket smoothing forbids.
       .agg(count(lit(1)).as("n_grams"),
-        (lit(0.0) - sum(col("_lp").cast(DecimalType(30, 6))).cast("double")
-          / count(col("_lp"))).as("logpp")))
+        (lit(0.0) - davg(col("_lp"))).as("logpp")))
     // threshold sample: k smallest fold(seed:doc_id) per language via the
     // bounded k-heap (k-element buffers cross the shuffle; a ranking
     // window would sort an entire language in one task)
@@ -216,7 +215,7 @@ object Quality {
       // and the ≤ 5·10⁻⁷ quantization matches its own order (no term
       // class sits wholly below the grid, unlike q34's rank mass).
       .agg(count(lit(1)).as("n_grams"),
-        sum(col("_lo").cast(DecimalType(30, 6))).cast("double").as("_s"))
+        dsum(col("_lo")).as("_s"))
       .crossJoin(broadcast(prior))
       .withColumn("log_odds", col("prior") + col("_s"))
     val u = (Sampling.portableUniformFingerprint(
@@ -249,7 +248,6 @@ object Quality {
       .filter(col("rank") <= topRanks)
       .withColumn("x", log(col("rank").cast("double")))
       .withColumn("y", log(col(freqCol).cast("double")))
-    def dsum(c: Column) = sum(c.cast(DecimalType(30, 6))).cast("double")
     ranked.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_ranks"),
         dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
@@ -325,7 +323,6 @@ object Quality {
     val pts = vAt.join(nAt, Seq(groupCol, "ckpt"))
       .withColumn("x", log(col("n_tokens").cast("double")))
       .withColumn("y", log(col("v_words").cast("double")))
-    def dsum(c: Column) = sum(c.cast(DecimalType(30, 6))).cast("double")
     val fit = pts.groupBy(col(groupCol))
       .agg(count(lit(1)).as("_k"),
         dsum(col("x")).as("_sx"), dsum(col("y")).as("_sy"),
@@ -501,7 +498,7 @@ object Quality {
     // A/B at 100×: 67.5 s with vs 69.6 s without — the gram-df join
     // dominates); in t73, whose filter wrapped the full perturbation
     // chain on two union branches, the same sink cost 277→3.6 s.
-    val dg = tracked(docs
+    val dg = CacheRegistry.track(docs
       .withColumn("_toks", graft.functions.TextFunctions.tokens(col(textCol)))
       .select(col(idCol).as("doc_id"),
         explode(graft.functions.TextFunctions.shingles(col("_toks"), n)).as("_g"))
@@ -603,13 +600,13 @@ object Quality {
     // three consumers share.
     val byPos = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("j"))
-    val occ = tracked(toks
+    val occ = CacheRegistry.track(toks
       .withColumn("grp", sum(when(col("is_stop"), 1L).otherwise(0L)).over(byPos))
       .filter(!col("is_stop"))
       .select(col("doc_id"), col("grp"), col("j"), col("tok")))
     // one row per phrase RUN (duplicate strings collapse only at the end,
     // after scoring -- RAKE's word stats count every occurrence)
-    val runs = tracked(occ.groupBy(col("doc_id"), col("grp"))
+    val runs = CacheRegistry.track(occ.groupBy(col("doc_id"), col("grp"))
       .agg(
         concat_ws(" ", transform(
           array_sort(collect_list(struct(col("j"), col("tok")))),
@@ -622,7 +619,7 @@ object Quality {
     val scored = occ
       .join(wordScore, Seq("doc_id", "tok"))
       .groupBy(col("doc_id"), col("grp"))
-      .agg(graft.queries.Num.dsum(col("wscore")).as("score"))
+      .agg(dsum(col("wscore")).as("score"))
       .join(runs, Seq("doc_id", "grp"))
       .select(col("doc_id"), col("phrase"), col("n_words"), col("score"))
       .distinct()

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.queries.Num.dsum
 
 /** Rank-fusion algebra for hybrid retrieval. */
 object Retrieval {
@@ -43,15 +44,12 @@ object Retrieval {
         (lit(1.0) / (lit(kRrf) + col(rankCol))).as("_c")))
       .reduce(_ unionByName _)
     contribs.groupBy(col(idCol))
-      // DECIMAL(30,6) detour inline (operator layer can't depend on the
-      // query layer's Num; the mirror contract is Num.dsumSql — the
-      // Sampling/Quality operators carry the same inlined copy).
       // Magnitude bound (the Num.dsum precondition): every summand is
       // 1/(kRrf + rank) ≥ 1/(kRrf + topN) — ~1/110 at the defaults,
       // and bounded below by the callers' finite list lengths, four
       // orders above the 10⁻⁶ grid.
       .agg(count(lit(1)).as("n_systems"),
-        sum(col("_c").cast(DecimalType(30, 6))).cast("double").as("rrf"))
+        dsum(col("_c")).as("rrf"))
       .orderBy(desc("rrf"), col(idCol))
       .limit(topK)
   }
@@ -92,7 +90,7 @@ object Retrieval {
   def buildBm25Index(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       dir: String, nBuckets: Int = 32,
       k1: Double = 1.2, b: Double = 0.75): Unit =
-    graft.util.PhaseTimer.time("index_build") {
+    graft.util.CacheRegistry.time(spark, "index_build") {
       require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
       import graft.functions.TextFunctions.tokens
       // Rebuild atomicity: params.json is the index's validity marker
@@ -173,7 +171,7 @@ object Retrieval {
       // discriminative term's O(1), so zeroing it is semantically a
       // no-op (bounded by the value itself), not a q34-style mass loss.
       .agg(count(lit(1)).as("n_terms_hit"),
-        sum(col("contrib").cast(DecimalType(30, 6))).cast("double").as("bm25"))
+        dsum(col("contrib")).as("bm25"))
       .orderBy(desc("bm25"), col("doc_id"))
       .limit(k)
   }

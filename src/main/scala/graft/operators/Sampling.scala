@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Num.dsum
+import graft.util.CacheRegistry
+
 /** Deterministic, engine-portable dataset splitting for training pipelines.
   *
   * `df.randomSplit` / `df.sample` are seed-AND-partitioning dependent: the
@@ -217,7 +220,7 @@ object Sampling {
     // referenced several times below — without the cache each reference
     // re-aggregates, i.e. re-SCANS the corpus (4 scans for 5 numbers at
     // 100 TB); cached, the corpus is scanned once for stats
-    val counts = tracked(df.groupBy(col(stratumCol)).agg(count(lit(1)).as("_n")))
+    val counts = CacheRegistry.track(df.groupBy(col(stratumCol)).agg(count(lit(1)).as("_n")))
     val stats = counts
       .crossJoin(broadcast(counts.select(sum(col("_n")).as("_total"))))
       .withColumn("_q", pow(col("_n").cast("double") / col("_total"), lit(alpha)))
@@ -233,8 +236,7 @@ object Sampling {
     // smallest-term behavior at the documented edge).
     val rates = stats
       .crossJoin(broadcast(stats.select(
-        sum(col("_q").cast(org.apache.spark.sql.types.DecimalType(30, 6)))
-          .cast("double").as("_z"))))
+        dsum(col("_q")).as("_z"))))
       .select(col(stratumCol),
         least(lit(1.0),
           lit(targetRows.toDouble) * (col("_q") / col("_z")) / col("_n")).as("rate"))
@@ -247,11 +249,6 @@ object Sampling {
       .drop("_stratum")
       .withColumn("kept", u < col("rate"))
   }
-
-  // Frames shared by several aggregation branches of dsirResample persist
-  // here; Bench releases them between queries (same lifecycle as the
-  // Dedup/Text frames).
-  private def tracked(df: DataFrame): DataFrame = graft.util.CacheRegistry.track(df)
 
   /** Deterministic K-sample per stratum — the "carve a fixed eval/debug
     * set per domain" operation: the `k` rows of each stratum whose keys
@@ -322,7 +319,7 @@ object Sampling {
     // tracked: the strata frame feeds two branches (the capped-sum
     // aggregate and the output join); uncached each branch would rescan
     // the corpus for the same tiny aggregate
-    val counts = tracked(df.groupBy(col(stratumCol))
+    val counts = CacheRegistry.track(df.groupBy(col(stratumCol))
       .agg(sum(col(tokenCol)).cast("long").as("stratum_tokens"))
       .withColumn("_cap", col("stratum_tokens") * lit(maxEpochs.toLong)))
     // single-task window: the frame is one row per STRATUM (languages /
@@ -410,7 +407,7 @@ object Sampling {
           slice(col("sp"), lit(2), size(col("sp")) - 1),
           (a, b) => concat(a, lit(" "), b)))
       .otherwise(array().cast("array<string>"))
-    val grams = tracked(docs
+    val grams = CacheRegistry.track(docs
       .select(col(idCol).as("doc_id"), isTarget.as("is_target"), sp.as("sp"))
       .filter(size(col("sp")) > 0)
       .select(col("doc_id"), col("is_target"),
@@ -439,8 +436,7 @@ object Sampling {
       // per-term quantization is of the same order as the value itself
       // (no q34-style mass class sits wholly below the grid).
       .agg(count(lit(1)).as("n_grams"),
-        sum(col("logratio").cast(org.apache.spark.sql.types.DecimalType(30, 6)))
-          .cast("double").as("weight"))
+        dsum(col("logratio")).as("weight"))
     val u = (portableUniformFingerprint(
         concat(lit(seed + ":"), col("doc_id").cast("string"))) + lit(1))
       .cast("double") / lit(2147483647.0)

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftExpressions
+import graft.queries.Num.{davg, dsum}
 import graft.util.Fixpoint
 
 /** Similarity search over an embedding column (`Array[Float]`).
@@ -533,7 +533,7 @@ object Similarity {
     * full-precision index is asserted in SimilaritySpec. */
   def buildIvfIndex(spark: SparkSession, emb: DataFrame, dir: String,
       nCells: Int = 16, quantized: Boolean = false): Unit =
-    graft.util.PhaseTimer.time("index_build") {
+    graft.util.CacheRegistry.time(spark, "index_build") {
       GraftExpressions.register(spark)
       val (assigned, centroidDf) = fitIvf(spark, emb, nCells)
       centroidDf.write.mode("overwrite").parquet(s"$dir/centroids")
@@ -702,7 +702,7 @@ object Similarity {
     // State: (vectors with running min, picks so far); round r picks r + 2.
     val init = (n.withColumn("mind", distTo(first.getSeq[Double](1)))
       .localCheckpoint(eager = false), Vector((1L, first.getLong(0), 0.0)))
-    Fixpoint.iterate("kcenter_rounds", init, k - 1) { case (s @ (state, picks), round) =>
+    Fixpoint.iterate(spark, "kcenter_rounds", init, k - 1) { case (s @ (state, picks), round) =>
       val rows = state
         .filter(!col("vec_id").isInCollection(picks.map(_._2)))
         .orderBy(col("mind").desc, col("vec_id")).limit(1)
@@ -856,11 +856,10 @@ object Similarity {
           concat(lit(s"$seed:$r:"), col("vec_id").cast("string"))) + lit(1))
         .cast("double") / lit(2147483647.0)
     def centDf(cv: Seq[Double]) = broadcast(Seq(Tuple1(cv)).toDF("cv"))
-    // decimal-detour inertia (Num.dsum contract inlined at operator
-    // layer): D² terms are O(1) on any unit-ish embedding scale — far
-    // above the 10⁻⁶ grid; a seed's own 0.0 contributes zero identically
-    def inertia(b: DataFrame): Double =
-      b.agg(sum(col("d").cast(DecimalType(30, 6))).cast("double")).head().getDouble(0)
+    // decimal-detour inertia: D² terms are O(1) on any unit-ish
+    // embedding scale — far above the 10⁻⁶ grid; a seed's own 0.0
+    // contributes zero identically
+    def inertia(b: DataFrame): Double = b.agg(dsum(col("d"))).head().getDouble(0)
     val firstRows = n.withColumn("_u", u(1))
       .orderBy(col("_u").desc, col("vec_id")).limit(1)
       .select(col("vec_id"), col("v")).collect()
@@ -871,7 +870,7 @@ object Similarity {
       .localCheckpoint(eager = false)
     // State: (D² frame, seeds so far); round i draws seed r = i + 2.
     val init = (best1, Vector((1L, first.getLong(0), inertia(best1))))
-    Fixpoint.iterate("kmeanspp_rounds", init, k - 1) { case ((best, out), round) =>
+    Fixpoint.iterate(spark, "kmeanspp_rounds", init, k - 1) { case ((best, out), round) =>
       val r = round + 2
       val cand = best.filter(col("d") > 0)
         .withColumn("_key", log(u(r)) / col("d"))
@@ -926,21 +925,20 @@ object Similarity {
         .localCheckpoint(eager = false)
     // `iterations` assignments with a recenter between each two: the
     // loop's rounds are the iterations − 1 assign+recenter pairs
-    val cents = Fixpoint.iterate("lloyd_rounds",
+    val cents = Fixpoint.iterate(spark, "lloyd_rounds",
         init.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq,
         iterations - 1) { (cents, _) =>
       val means = assign(cents)
         .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "val")))
         .groupBy(col("cluster"), col("dim"))
-        // decimal-detour mean (the Num.davg contract, operator-layer
-        // copy). Magnitude bound (the Num.dsum precondition): summands
-        // are raw embedding components (~0.1 scale on the fixture);
+        // decimal-detour mean. Magnitude bound (the Num.dsum
+        // precondition): summands are raw embedding components (~0.1
+        // scale on the fixture);
         // components below the 10⁻⁶ grid contribute a deterministic
         // ≤ 5·10⁻⁷ per-dim centroid error — noise relative to any
         // component scale a clustering is meaningful at, not a
         // q34-style collapse of a whole summand class.
-        .agg((sum(col("val").cast(DecimalType(30, 6))).cast("double") /
-          count(col("val"))).as("mv"))
+        .agg(davg(col("val")).as("mv"))
         .collect()
         .groupBy(_.getLong(0))
         .map { case (cid, rows) =>
@@ -1083,7 +1081,7 @@ object Similarity {
     * the in-memory result bit for bit). */
   def buildPqIndex(spark: SparkSession, emb: DataFrame, dir: String,
       dim: Int = 64, nSub: Int = 8, codebookK: Int = 16): Unit =
-    graft.util.PhaseTimer.time("index_build") {
+    graft.util.CacheRegistry.time(spark, "index_build") {
       GraftExpressions.register(spark)
       require(nSub > 0 && dim % nSub == 0, s"dim $dim not a multiple of nSub $nSub")
       require(codebookK > 0, s"codebookK must be positive")
@@ -1499,7 +1497,6 @@ object Similarity {
     val cnt = n.count()
     require(cnt > 0, "pcaTopComponent needs a non-empty corpus")
     val d = n.select(size(col("v"))).head().getInt(0)
-    def dsum(c: Column): Column = sum(c.cast(DecimalType(30, 6))).cast("double")
     val mu = n.select(posexplode(col("v"))).toDF("i", "x")
       .groupBy(col("i")).agg(dsum(col("x")).as("sx"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1) / cnt).toMap
@@ -1514,7 +1511,7 @@ object Similarity {
     val d0 = scat.filter(col("i") === col("j"))
       .orderBy(col("sv").desc, col("i")).select(col("i")).head().getInt(0)
     val start = Array.tabulate(d)(i => if (i == d0) 1.0 else 0.0)
-    val vec = Fixpoint.iterate("pca_rounds", start, iterations) { (vec, _) =>
+    val vec = Fixpoint.iterate(spark, "pca_rounds", start, iterations) { (vec, _) =>
       val vLit = array(vec.map(lit): _*)
       // ONE job per round (r19): the matvec's d per-i sums, their
       // decimal-detoured squared norm and the driver pull ride a single

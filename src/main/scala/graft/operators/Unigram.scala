@@ -153,7 +153,7 @@ object Unigram {
         p => col("word").substr(p, lit(1)))).as("piece"))
       .distinct().collect().map(_.getString(0)).toSet
     val seed = selectFromWords(words, vocabSize * seedMultiplier, maxPieceLen)
-    Fixpoint.iterate("unigram_rounds", seed, rounds) { (vocab, _) =>
+    Fixpoint.iterate(docs.sparkSession, "unigram_rounds", seed, rounds) { (vocab, _) =>
       val counts = words
         .withColumn("_p", explode(
           call_function("graft_unigram_encode", col("word"), lit(pieceSpec(vocab)))))

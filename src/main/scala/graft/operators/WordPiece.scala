@@ -107,7 +107,7 @@ object WordPiece {
     val init = (Unigram.wordFrequencies(docs, textCol)
       .select(col("wfreq").as("n"), initialSymbols(col("word")).as("syms"))
       .localCheckpoint(eager = false), Vector.empty[Merge])
-    Fixpoint.iterate("wordpiece_rounds", init, nMerges) { case (s @ (words, merges), round) =>
+    Fixpoint.iterate(docs.sparkSession, "wordpiece_rounds", init, nMerges) { case (s @ (words, merges), round) =>
       val symCounts = words
         .select(explode(col("syms")).as("s"), col("n"))
         .groupBy(col("s")).agg(sum(col("n")).as("cnt"))

@@ -720,7 +720,7 @@ object Domain {
     // phase-split (r19): the bench attributes the snapshot staging write
     // separately from the streamed SCD2 apply, so a p16 reading says
     // which half moved — the input prep or the stream under measure
-    graft.util.PhaseTimer.time("stage_input") {
+    CacheRegistry.time(spark, "stage_input") {
       Relational.scd2Snapshots(spark, dir)
         .map { case (d, df) => df.withColumn("_day", lit(d)) }
         .reduce(_ unionByName _)
@@ -729,7 +729,7 @@ object Domain {
     val src = spark.readStream
       .schema(spark.read.parquet(in).schema)
       .parquet(in)
-    graft.util.PhaseTimer.time("scd2_stream") {
+    CacheRegistry.time(spark, "scd2_stream") {
       val q = SilverStream.scd2Sink(src, out, "c_custkey", Seq("seg", "nat"), "_day")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", ck)
@@ -906,7 +906,7 @@ object Domain {
   private def p19(spark: SparkSession, dir: String): DataFrame = {
     // phase-split (r19): staging pays once per (session, sfDir) — the
     // phase shows when a reading carried that first-invocation cost
-    val in = graft.util.PhaseTimer.time("stage_input") {
+    val in = CacheRegistry.time(spark, "stage_input") {
       stageTwoBatchEvents(spark, dir)
     }
     val src = spark.readStream
@@ -928,7 +928,7 @@ object Domain {
       "left_outer")
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"))
-    val out = graft.util.PhaseTimer.time("stream_join") {
+    val out = CacheRegistry.time(spark, "stream_join") {
       SilverStream.runToMemory(joined,
           s"p19_stream_${System.nanoTime()}", "append",
         statePartitions = streamStateShards(spark, dir))
@@ -952,7 +952,7 @@ object Domain {
     * sentinel whose mtime is explicitly later). Oracle: the batch FULL
     * JOIN — nulls on both sides hash-gated. */
   private def p20(spark: SparkSession, dir: String): DataFrame = {
-    val in = graft.util.PhaseTimer.time("stage_input") {
+    val in = CacheRegistry.time(spark, "stage_input") {
       stageTwoBatchEvents(spark, dir)
     }
     val src = spark.readStream
@@ -974,7 +974,7 @@ object Domain {
       "full_outer")
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("purchase_id"), col("p_user_id"), col("purchase_ts"))
-    val out = graft.util.PhaseTimer.time("stream_join") {
+    val out = CacheRegistry.time(spark, "stream_join") {
       SilverStream.runToMemory(joined,
           s"p20_stream_${System.nanoTime()}", "append",
         statePartitions = streamStateShards(spark, dir))

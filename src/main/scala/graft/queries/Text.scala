@@ -43,11 +43,6 @@ object Text {
   private[queries] def mixSql(e: String): String =
     s"((${foldSql(e)}) * 2654435761) % 2147483647"
 
-  // Frames shared by multiple plan branches persist in the session's
-  // query scope and are freed by its releaseQuery; see
-  // CacheRegistry for the lifecycle.
-  private def tracked(df: DataFrame): DataFrame = CacheRegistry.track(df)
-
   /** Token counting: whitespace tokens, BPE-ish subword count, mean token
     * length. */
   private def t01(spark: SparkSession, dir: String): DataFrame =
@@ -391,7 +386,7 @@ object Text {
     // not CSE across branches, so without the persist the explode + tf
     // aggregation runs twice (measured ~2× at sf0.1). Released with
     // the session's query scope (same lifecycle as the Dedup caches).
-    val terms = tracked(docs
+    val terms = CacheRegistry.track(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf")))
@@ -541,7 +536,7 @@ object Text {
     * agg per doc; swap the broadcast for a shuffle join when the vocab
     * outgrows it. */
   private def t17(spark: SparkSession, dir: String): DataFrame = {
-    val terms = tracked(Corpus.documents(spark, dir)
+    val terms = CacheRegistry.track(Corpus.documents(spark, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term")))
     val lm = terms.groupBy(col("term")).agg(count(lit(1)).as("c"))
     val n = terms.select(count(lit(1)).as("n_total"))
@@ -1999,12 +1994,12 @@ object Text {
     // by construction bounded. Both rank lists feed TWO plan branches
     // (the fusion and the rank join-back) — tracked, or each system's
     // full corpus scan would execute twice.
-    val bmTop = tracked(bm25Scores(spark, dir)
+    val bmTop = CacheRegistry.track(bm25Scores(spark, dir)
       .orderBy(desc("bm25"), col("doc_id")).limit(50)
       .select(col("doc_id"),
         row_number().over(Window.orderBy(desc("bm25"), col("doc_id")))
           .cast("long").as("bm25_rank")))
-    val vecTop = tracked(Similarity.cosineTopKForQueries(spark,
+    val vecTop = CacheRegistry.track(Similarity.cosineTopKForQueries(spark,
         Corpus.embeddings(spark, dir), col("vec_id") === 0, k = 50)
       .select(col("neighbor_id").as("doc_id"), col("rank").as("vec_rank")))
     val fused = Retrieval.rrfFuse(

@@ -334,8 +334,7 @@ object ServeMain {
     val dir = args(0)
     val port = if (args.length > 1) args(1).toInt else 8080
     val model = if (args.length > 2) Some(PipelineModel.load(args(2))) else None
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val silver = graft.model.CorpusAdapter
       .silverFlat(spark, dir, "2024-01-01",
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))

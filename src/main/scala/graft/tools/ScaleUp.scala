@@ -40,7 +40,7 @@ object ScaleUp {
     // arg 4: optional comma-list restricting which tables are written
     // (a single-query scale corpus needs only the tables it reads)
     val tableFilter = args.lift(4).map(_.split(",").toSet)
-    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val OFF = 100000000L
     val reps = spark.range(replicas).select(col("id").as("_r"))
 

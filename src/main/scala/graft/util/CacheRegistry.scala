@@ -17,9 +17,13 @@ import org.apache.spark.storage.StorageLevel
   *      frame with [[register]]).
   *    - on-disk scratch dirs ([[scratchDir]]): the indexes, exports,
   *      stream sinks and checkpoints a query entry writes and reads back.
-  *    A query's result frame reads those files lazily, so callers must
-  *    read the result (write it, collect it) BEFORE `releaseQuery`: the
-  *    files are deleted there.
+  *    - the run record: wall seconds per named phase ([[time]]) and
+  *      integer counts such as loop rounds ([[count]]). `releaseQuery`
+  *      returns it, so [[graft.QueryRunner]] reports each query's own
+  *      record, and two sessions running at once never mix theirs.
+  *    A query's result frame reads its scratch dirs lazily, so callers
+  *    must read the result (write it, collect it) BEFORE `releaseQuery`:
+  *    the dirs are deleted there.
   *  - session-scoped memos ([[memo]]): values built once per session and
   *    reused by every later query — the shared silver frame, scan-split
   *    decisions, staged stream inputs. Each carries its own release.
@@ -34,6 +38,8 @@ object CacheRegistry {
     val frames = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val memos = scala.collection.mutable.Map.empty[Any, (Any, () => Unit)]
     val dirs = scala.collection.mutable.ListBuffer.empty[Path]
+    val phases = scala.collection.mutable.Map.empty[String, Double]
+    val counts = scala.collection.mutable.Map.empty[String, Long]
   }
   private val owners = scala.collection.mutable.Map.empty[SparkSession, Owned]
 
@@ -96,21 +102,49 @@ object CacheRegistry {
       df.unpersist()
   }
 
-  /** Frees the frames and scratch dirs `spark` owns; its memos survive. */
-  def releaseQuery(spark: SparkSession): Unit = {
-    val (fs, ds) = synchronized {
+  /** Runs `f` and adds its wall seconds to `phase` in `spark`'s record.
+    * Phases are seconds only: the bench subtracts their sum from a
+    * query's elapsed time to get the remainder, so counts go to
+    * [[count]] instead. */
+  def time[T](spark: SparkSession, phase: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      val sec = (System.nanoTime() - t0) / 1e9
+      synchronized {
+        val p = owned(spark).phases
+        p(phase) = p.getOrElse(phase, 0.0) + sec
+      }
+    }
+  }
+
+  /** Adds `n` to the count `key` in `spark`'s record. */
+  def count(spark: SparkSession, key: String, n: Long): Unit = synchronized {
+    val c = owned(spark).counts
+    c(key) = c.getOrElse(key, 0L) + n
+  }
+
+  /** Frees the frames and scratch dirs `spark` owns, and clears and
+    * returns its record: the phase seconds and counts since its last
+    * `releaseQuery`. Its memos survive. */
+  def releaseQuery(spark: SparkSession): (Map[String, Double], Map[String, Long]) = {
+    val (fs, ds, record) = synchronized {
       owners.get(spark).map { o =>
-        val taken = (o.frames.toList, o.dirs.toList)
+        val taken = (o.frames.toList, o.dirs.toList, (o.phases.toMap, o.counts.toMap))
         o.frames.clear()
         o.dirs.clear()
+        o.phases.clear()
+        o.counts.clear()
         taken
-      }.getOrElse((Nil, Nil))
+      }.getOrElse((Nil, Nil, (Map.empty[String, Double], Map.empty[String, Long])))
     }
     fs.foreach(unpersist)
     ds.foreach(d => quietly(deleteRecursively(d)))
+    record
   }
 
-  /** Frees everything `spark` owns: its frames, scratch dirs and memos. */
+  /** Frees everything `spark` owns: its frames, scratch dirs, memos and
+    * record. */
   def release(spark: SparkSession): Unit =
     synchronized(owners.remove(spark)).foreach { o =>
       o.frames.foreach(unpersist)

@@ -1,5 +1,7 @@
 package graft.util
 
+import org.apache.spark.sql.SparkSession
+
 /** The round loop of every iterative operator (the graph walks, the
   * connected-components schemes, the tokenizer learners, the clustering
   * and PCA iterations): it owns the round bound, the stop rule and the
@@ -29,9 +31,9 @@ object Fixpoint {
 
   /** Calls `step(state, round)` for round = 0, 1, … until it returns
     * [[Done]] or has been called `maxRounds` times, and records the
-    * round count under `key` with [[PhaseTimer.count]]. `maxRounds ≤ 0`
-    * runs no step and returns `init`. */
-  def iterate[S](key: String, init: S, maxRounds: Int)(
+    * round count under `key` in `spark`'s record ([[CacheRegistry.count]]).
+    * `maxRounds ≤ 0` runs no step and returns `init`. */
+  def iterate[S](spark: SparkSession, key: String, init: S, maxRounds: Int)(
       step: (S, Int) => Step[S]): Result[S] = {
     @annotation.tailrec
     def go(s: S, round: Int): Result[S] =
@@ -41,7 +43,7 @@ object Fixpoint {
         case Next(t) => go(t, round + 1)
       }
     val res = go(init, 0)
-    PhaseTimer.count(key, res.rounds.toLong)
+    CacheRegistry.count(spark, key, res.rounds.toLong)
     res
   }
 }

@@ -122,7 +122,7 @@ class DedupSpec extends SparkTestBase {
   test("dupClusters: 100-node chain exceeds the propagation bound and converges via star fallback") {
     // diameter 99 ≫ maxIter — min-label propagation cannot close this;
     // the alternating large-star/small-star fallback must take over
-    graft.util.PhaseTimer.drainCounts() // isolate this run's counts
+    graft.util.CacheRegistry.releaseQuery(spark) // isolate this run's counts
     val chain = (0L until 99L).map(i => (i, i + 1))
     val rows = Dedup.dupClusters(chain.toDF("doc_a", "doc_b"), maxIter = 4)
       .select("doc_id", "cluster_id", "cluster_size")
@@ -132,7 +132,7 @@ class DedupSpec extends SparkTestBase {
       s"every chain node labels to 0 with size 100: ${rows.take(5).toSeq}")
     // rounds-as-data: both loops report their round counts, and the
     // fallback's stays logarithmic in the 100-node diameter
-    val counts = graft.util.PhaseTimer.drainCounts()
+    val (_, counts) = graft.util.CacheRegistry.releaseQuery(spark)
     assert(counts("cc_prop_rounds") === 4L, s"propagation hit its bound: $counts")
     val alt = counts("cc_alt_rounds")
     assert(alt >= 3L && alt <= 12L,

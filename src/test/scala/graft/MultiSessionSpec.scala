@@ -118,6 +118,25 @@ class MultiSessionSpec extends SparkTestBase {
       s"RDDs left after both releases: ${persisted intersect (shared ++ onlyA)}")
   }
 
+  test("two sessions looping at once each record only their own rounds") {
+    import graft.util.{CacheRegistry, Fixpoint}
+    import scala.concurrent.{Await, ExecutionContext, Future, duration}
+    val (a, b) = (spark.newSession(), spark.newSession())
+    // both loops hold round 0 until the other reaches it, so they run at
+    // the same time; they share one key to show that nothing sums
+    val bothStarted = new java.util.concurrent.CyclicBarrier(2)
+    val loops = Seq(a -> 3, b -> 5).map { case (s, rounds) =>
+      Future(Fixpoint.iterate(s, "ms_rounds", 0, rounds) { (x, round) =>
+        if (round == 0) bothStarted.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        Fixpoint.Next(x)
+      })(ExecutionContext.global)
+    }
+    loops.foreach(Await.result(_, duration.Duration(60, "s")))
+    assert(CacheRegistry.releaseQuery(a)._2 === Map("ms_rounds" -> 3L))
+    assert(CacheRegistry.releaseQuery(b)._2 === Map("ms_rounds" -> 5L))
+    Seq(a, b).foreach(CacheRegistry.release)
+  }
+
   private def exists(d: String) = new java.io.File(d).exists()
 
   test("a query's scratch dirs live until its session's releaseQuery; session memos outlive it") {

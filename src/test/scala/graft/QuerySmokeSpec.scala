@@ -7,8 +7,7 @@ class QuerySmokeSpec extends SparkTestBase {
 
   graft.queries.Registry.specs.foreach { spec =>
     test(s"${spec.name} runs at sf0.001") {
-      try spec.run(spark, sf0001).write.format("noop").mode("overwrite").save()
-      finally graft.util.CacheRegistry.releaseQuery(spark)
+      QueryRunner.run(spark, spec.name, sf0001)(QueryRunner.noop).error.foreach(throw _)
       spec.oracle.foreach(sql => assert(sql.trim.nonEmpty))
     }
   }
